@@ -533,10 +533,25 @@ def grouped_prefix_sum(
     `Window.partitionBy(group)` is the textbook answer and the textbook
     scale bug: one source = one task. Instead (mirrors
     `template.with_row_index`): range-partition on (group, order) — a
-    distributed sort — cumsum within each physical partition, then lift the
-    tiny per-(partition, group) totals to the driver-side offsets table and
-    broadcast it back. Only ≤ n_partitions × n_groups offset rows ever
-    cross one reducer, never the data.
+    distributed sort — cumsum within each physical partition
+    (:func:`_range_cumsum`), then add the per-(partition, group) offsets
+    (``template.partition_offsets``). Only ≤ n_partitions × n_groups
+    offset rows ever cross one reducer, never the data.
+    """
+    from ai_batch_processing_spark.operators.template import partition_offsets
+
+    summed = _range_cumsum(df, group_cols, order_cols, value_col)
+    return (
+        partition_offsets(summed, F.col(value_col), group_cols)
+        .withColumn(out_col, (F.col("_off") + F.col("_incl") - F.col(value_col)).cast("long"))
+        .drop("_pid", "_incl", "_off")
+    )
+
+
+def _range_cumsum(df: DataFrame, group_cols: list[str], order_cols: list[str], value_col: str) -> DataFrame:
+    """Range-partition ``df`` on (group, order) and add the inclusive
+    running sum of ``value_col`` per group within each partition:
+    ``_pid`` (partition) and ``_incl``.
 
     The within-partition cumsum is an Arrow kernel over the locally sorted
     partition, NOT a ``Window.partitionBy(_pid, group)``: Catalyst cannot
@@ -555,8 +570,7 @@ def grouped_prefix_sum(
 
     keys = [F.col(c) for c in group_cols + order_cols]
     n = shuffle_partitions(df.sparkSession)
-    base = df.repartitionByRange(n, *keys)
-    ranged = base.sortWithinPartitions(*keys)
+    ranged = df.repartitionByRange(n, *keys).sortWithinPartitions(*keys)
     sum_t = "double" if dict(df.dtypes)[value_col] in ("float", "double") else "bigint"
     out_schema = (
         ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in ranged.schema.fields)
@@ -594,28 +608,7 @@ def grouped_prefix_sum(
             pdf["_incl"] = cs
             yield pdf
 
-    summed = ranged.mapInPandas(_cumsum_part, out_schema)
-    # totals from the RE-USED range exchange (same canonical Exchange → one
-    # shuffle total); spark_partition_id here and TaskContext.partitionId in
-    # the kernel index the same post-shuffle partitions.
-    totals = (
-        base.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid", *group_cols)
-        .agg(F.sum(value_col).alias("_tot"))
-    )
-    w_off = (
-        Window.partitionBy(*group_cols)
-        .orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = totals.withColumn("_off", F.coalesce(F.sum("_tot").over(w_off), F.lit(0))).select(
-        "_pid", *group_cols, "_off"
-    )
-    return (
-        summed.join(F.broadcast(offsets), ["_pid", *group_cols])
-        .withColumn(out_col, (F.col("_off") + F.col("_incl") - F.col(value_col)).cast("long"))
-        .drop("_pid", "_incl", "_off")
-    )
+    return ranged.mapInPandas(_cumsum_part, out_schema)
 
 
 def pack_sequences(

@@ -214,9 +214,8 @@ def _signatures_from_stream(stream: DataFrame, num_perm: int, seed: int) -> Data
 def sig_and_sets(stream: DataFrame, num_perm: int, seed: int) -> DataFrame:
     """(id, sig, hs): the fused signature + verify-set aggregate — ONE pass
     over the shingle stream yields both the MinHash signature and the
-    ``collect_set(h)`` array the exact-Jaccard verify stage needs (the
-    same fusion ``minhash_dedup_pairs`` does inline for its corpus
-    scope)."""
+    ``collect_set(h)`` array the exact-Jaccard verify stage needs
+    (``minhash_dedup_pairs`` verifies from it)."""
     rng = random.Random(seed)
     coeffs = [(rng.randrange(1, _MERSENNE31), rng.randrange(0, _MERSENNE31)) for _ in range(num_perm)]
     h31 = F.pmod(F.col("h"), F.lit(_MERSENNE31))
@@ -252,53 +251,6 @@ def minhash_signatures(
 ) -> DataFrame:
     """(id, sig: array<long>[num_perm]) MinHash signature per document."""
     return _signatures_from_stream(shingle_hash_stream(df, id_col, text_col, k), num_perm, seed)
-
-
-def minhash_signatures_oph(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 5,
-    num_perm: int = 64,
-    probe: int = 8,
-) -> DataFrame:
-    """One-permutation MinHash signatures (Li et al., NIPS'12) — the
-    O(1)-work-per-shingle signature pass for 100 TB corpora.
-
-    Classic MinHash evaluates ``num_perm`` permutation hashes per shingle
-    (64 multiply-mods on every one of the corpus's ~100×-exploded rows —
-    the dominant CPU in the whole dedup pipeline). OPH hashes each
-    shingle ONCE, routes it to bin ``h mod num_perm``, and takes the min
-    per bin: one shuffle-free aggregate whose per-shingle work is a
-    single pmod + conditional min, ~``num_perm``× cheaper. Bins that
-    receive no shingle (only possible for documents with few distinct
-    shingles) are filled by rotation densification (Shrivastava & Li,
-    ICML'14): take the next non-empty bin within ``probe`` steps, else a
-    doc-and-bin-seeded fallback that can never collide across documents
-    (losing, not inventing, candidates — precision is untouched because
-    every candidate is still exactly verified).
-
-    The signature is drop-in compatible with ``lsh_candidate_pairs`` and
-    the estimate filter; collision probability per bin ≈ J as in classic
-    MinHash, with slightly higher variance for short documents. Recall vs
-    exact Jaccard is pinned in tests alongside the classic path's.
-    """
-    stream = shingle_hash_stream(df, id_col, text_col, k)
-    h31 = F.pmod(F.col("h"), F.lit(_MERSENNE31))
-    binned = stream.select("id", F.pmod(F.col("h"), F.lit(num_perm)).alias("_bin"), h31.alias("_v"))
-    mins = [
-        F.min(F.when(F.col("_bin") == j, F.col("_v"))).alias(f"_m{j}") for j in range(num_perm)
-    ]
-    agg = binned.groupBy("id").agg(*mins)
-    raw = agg.select("id", F.array(*[f"_m{j}" for j in range(num_perm)]).alias("_raw"))
-    # rotation densification, bounded probe; the final fallback is unique
-    # per (doc, bin) so an unfilled bin can never create a candidate
-    probes = ", ".join(f"_raw[(j + {i}) % {num_perm}]" for i in range(1, probe + 1))
-    dense = F.expr(
-        f"transform(sequence(0, {num_perm - 1}), "
-        f"j -> coalesce(_raw[j], {probes}, xxhash64(id, j)))"
-    )
-    return raw.select("id", dense.alias("sig"))
 
 
 def lsh_candidate_pairs(
@@ -473,10 +425,7 @@ def minhash_dedup_pairs(
     bands: int = 16,
     threshold: float = 0.5,
     seed: int = 42,
-    verify_scope: str = "corpus",
     max_bucket: int = 500,
-    sig_mode: str = "classic",
-    oph_probe: int = 8,
     est_filter: bool | str = "auto",
 ) -> DataFrame:
     """Scale-path near-dup detection: LSH candidates verified by Jaccard.
@@ -510,77 +459,22 @@ def minhash_dedup_pairs(
     exact Jaccard at sf0.1 — observed 100%: identical pairs with and
     without the screen on the planted-dup corpus).
 
-    ``verify_scope`` picks where the exact-verify shingle sets come from —
-    measured, not guessed (sf0.1, local[32]):
-
-    - ``"corpus"`` (default): ``collect_set`` over the full shingle
-      stream. The stream was repartitioned by id for the signature pass,
-      so this aggregate REUSES those shuffle files and runs shuffle-free
-      (~0.4s at sf0.1 vs ~2.6s for the restricted path's extra stages).
-      One corpus-linear pass; the persisted sets spill per-partition.
-    - ``"candidates"``: semi-join the corpus down to documents that
-      survive into an est-filtered candidate pair, and re-shingle only
-      those. Three extra stage barriers (candidate materialization, id
-      distinct, semi join) — a net LOSS on a high-similarity corpus
-      (sf0.1: 71% of docs are candidates) but the right call when
-      candidates ≪ corpus: the heavy ObjectHashAggregate and its
-      persisted sets shrink from corpus-sized to candidates-sized.
-      Results are identical (non-candidates are never verified);
-      parity is test-pinned.
+    The exact-verify shingle sets come from a ``collect_set`` over the
+    full shingle stream, folded into the signature aggregate: the stream
+    was repartitioned by id for the signature pass, so the sets cost no
+    extra shuffle (~0.4 s at sf0.1, local[32]). The persisted sets spill
+    per-partition.
     """
-    if verify_scope not in ("corpus", "candidates"):
-        raise ValueError(f"verify_scope must be corpus|candidates, got {verify_scope!r}")
-    if sig_mode not in ("classic", "oph"):
-        raise ValueError(f"sig_mode must be classic|oph, got {sig_mode!r}")
-    stream = shingle_hash_stream(df, id_col, text_col, k)
-    h31 = F.pmod(F.col("h"), F.lit(_MERSENNE31))
-    if sig_mode == "oph":
-        # One-permutation mins (Li et al., NIPS'12): each shingle touches
-        # ONE bin-conditional min instead of num_perm multiply-mods — same
-        # single fused aggregate as classic, ~num_perm× less per-shingle
-        # CPU on the ~100×-exploded stream. Empty bins densify below.
-        mins = [
-            F.min(F.when(F.pmod(F.col("h"), F.lit(num_perm)) == i, h31)).alias(f"_m{i}")
-            for i in range(num_perm)
-        ]
-    else:
-        rng = random.Random(seed)
-        coeffs = [
-            (rng.randrange(1, _MERSENNE31), rng.randrange(0, _MERSENNE31))
-            for _ in range(num_perm)
-        ]
-        mins = [
-            F.min(F.pmod(F.lit(a) * h31 + F.lit(b), F.lit(_MERSENNE31))).alias(f"_m{i}")
-            for i, (a, b) in enumerate(coeffs)
-        ]
-    # One full-corpus pass, persisted and computed exactly once. In
-    # "corpus" verify scope the 64 signature mins AND the verify stage's
-    # collect_set(h) fold into a SINGLE aggregate over the shingle stream —
-    # the explode+substring+hash (the corpus-dominant cost) runs once, not
+    # One full-corpus pass, persisted and computed exactly once: the
+    # signature and the verify stage's shingle sets come from a SINGLE
+    # aggregate over the shingle stream (sig_and_sets) — the
+    # explode+substring+hash (the corpus-dominant cost) runs once, not
     # once per aggregate. The cached relation is columnar, so the banding
-    # self-join's 3 consumers read only (id, sig) batches and never
+    # self-join's consumers read only (id, sig) batches and never
     # deserialize the shingle sets. MEMORY_AND_DISK default → spills
     # per-partition at scale.
-    one_pass = verify_scope == "corpus"
-    extra = [F.collect_set("h").alias("hs")] if one_pass else []
-    combined = stream.groupBy("id").agg(*mins, *extra).persist()
-    if sig_mode == "oph":
-        # rotation densification (Shrivastava & Li, ICML'14), bounded
-        # probe; the final fallback is (doc, bin)-seeded so an unfilled
-        # bin can never collide across documents — candidates can only be
-        # lost, never invented, and every survivor is exactly verified.
-        probes = ", ".join(f"_raw[(j + {i}) % {num_perm}]" for i in range(1, oph_probe + 1))
-        dense = F.expr(
-            f"transform(sequence(0, {num_perm - 1}), "
-            f"j -> coalesce(_raw[j], {probes}, xxhash64(id, j)))"
-        )
-        sigs = combined.select(
-            "id", F.array(*[f"_m{i}" for i in range(num_perm)]).alias("_raw")
-        ).select("id", dense.alias("sig"))
-    else:
-        sigs = combined.select(
-            "id", F.array(*[f"_m{i}" for i in range(num_perm)]).alias("sig")
-        )
+    combined = sig_and_sets(shingle_hash_stream(df, id_col, text_col, k), num_perm, seed).persist()
+    sigs = combined.select("id", "sig")
     # distinct=False: the pair dedup shuffle moves AFTER the est filter —
     # multi-band duplicates just re-evaluate the cheap estimate, and the
     # distinct then shuffles the surviving ~10% instead of the full
@@ -655,27 +549,7 @@ def minhash_dedup_pairs(
             .select("id_a", "id_b")
             .distinct()
         )
-    if verify_scope == "candidates":
-        # Restrict the heavy collect_set to documents that survive into a
-        # candidate pair (see docstring tradeoff). cands is persisted so
-        # the est-filter join runs once, not once per consumer. No
-        # broadcast hint on the semi join: AQE broadcasts the id set when
-        # small, falls back to shuffle when a pathological corpus yields
-        # a huge candidate set.
-        cands = cands.persist()
-        cand_ids = (
-            cands.select(F.col("id_a").alias(id_col))
-            .union(cands.select(F.col("id_b").alias(id_col)))
-            .distinct()
-        )
-        verify_stream = shingle_hash_stream(
-            df.join(cand_ids, id_col, "left_semi"), id_col, text_col, k
-        )
-        hs = verify_stream.groupBy("id").agg(F.collect_set("h").alias("hs")).persist()
-    else:
-        # The sets were computed in the same aggregate as the signatures —
-        # zero extra passes over the shingle stream.
-        hs = combined.select("id", "hs")
+    hs = combined.select("id", "hs")
     a = hs.select(F.col("id").alias("id_a"), F.col("hs").alias("hs_a"))
     b = hs.select(F.col("id").alias("id_b"), F.col("hs").alias("hs_b"))
     inter = F.size(F.array_intersect("hs_a", "hs_b"))
@@ -943,14 +817,6 @@ def q42_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # recall at exactly J=threshold pairs — the library DEFAULT stays
     # bands=16 (recall-first); this bench query documents the frontier
     # config. recall_config('minhash', target) picks analytically.
-    #
-    # sig_mode stays "classic": OPH (sig_mode="oph") A/B'd r9 on this
-    # exact corpus — sf0.1 warm 2.49 vs 2.41 s (wash, scheduling floor),
-    # x10 replica warm 6.2 vs 5.1 s (LOSS: the one-aggregate OPH form
-    # still evaluates 64 bin-conditional mins per shingle row, so it
-    # saves nothing over 64 multiply-mods, and its +2% candidate stream
-    # pays extra verify-join work). OPH recall measured HIGHER (0.9997
-    # vs 0.9656) — it's the recall lever, not the wall lever, here.
     #
     # est_filter: the r10 bench override (est_filter=False, locally-tuned
     # after the A/B: est-on 3.33 s vs est-off 2.48 s at identical 2,971

@@ -32,7 +32,7 @@ def pagerank(
     edges: DataFrame,
     iterations: int = 10,
     damping: float = DAMPING,
-    checkpoint_every: int | None = 2,
+    checkpoint_every: int = 2,
     single_task_edges: int | None = 20_000_000,
 ) -> DataFrame:
     """(id, rank) after ``iterations`` synchronous PageRank steps.
@@ -63,18 +63,11 @@ def pagerank(
 
     ``checkpoint_every`` picks how often the rank lineage is truncated
     with a LAZY ``localCheckpoint``. The default (2) bounds plan depth at
-    two rounds; ``None`` fuses the WHOLE fixed-iteration loop into ONE
-    plan (no per-round truncation, exchange reuse across identical
-    per-round subtrees). Fused was briefly the default, but a fresh-call
-    min-of-3 A/B at the q122 bench shape (300 nodes, 1.5k edges, 10
-    rounds, warm session) measured fused 4.76 s vs every-2 3.23 s vs
-    every-1 3.28 s: every NEW invocation re-analyzes the depth-10 plan on
-    the driver, and that analysis cost dominates the round-trips it
-    saves. Fused remains the right opt-in for a REUSED DataFrame (its
-    cache-warm re-run is ~1.0 s) or a driver so loaded that per-round
-    barriers are the bottleneck. Fused plan size grows linearly in
-    ``iterations`` (ranks feeds forward once per round), so even as an
-    opt-in it is only right up to tens of rounds.
+    two rounds. Fusing the whole loop into one plan lost its A/B at the
+    q122 bench shape (300 nodes, 1.5k edges, 10 rounds, warm session,
+    fresh-call min-of-3): fused 4.76 s vs every-2 3.23 s vs every-1
+    3.28 s — every new invocation re-analyzes the deep plan on the driver,
+    and that analysis cost dominates the round trips it saves.
 
     The explicit-N co-partitioning of ``e`` and ``base`` (below) is
     plan-verified (tests/test_graph.py: the cached scan feeds the join
@@ -83,8 +76,8 @@ def pagerank(
     scheduling floor — it exists for the regime where ranks is too big to
     broadcast and the per-round edge shuffle would dominate.
     """
-    if checkpoint_every is not None and checkpoint_every < 1:
-        raise ValueError(f"checkpoint_every must be >= 1 or None, got {checkpoint_every}")
+    if checkpoint_every < 1:
+        raise ValueError(f"checkpoint_every must be >= 1, got {checkpoint_every}")
     try:
         conf_part = int(nodes.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
@@ -207,7 +200,7 @@ def _pagerank_impl(
     e_raw: DataFrame,
     iterations: int,
     damping: float,
-    checkpoint_every: int | None,
+    checkpoint_every: int,
     conf_part: int,
     caches: list[DataFrame],
 ) -> DataFrame:
@@ -257,12 +250,10 @@ def _pagerank_impl(
             ).alias("rank"),
         )
         last = i == iterations - 1
-        if last or (checkpoint_every is not None and (i + 1) % checkpoint_every == 0):
+        if last or (i + 1) % checkpoint_every == 0:
             # eager only on the last round: downstream consumers (and the
-            # caller's cache cleanup) need the RESULT materialized — in fused
-            # mode this one eager checkpoint runs the whole chain as a
-            # single job; with a cadence, intermediate rounds only need
-            # their lineage cut (lazy)
+            # caller's cache cleanup) need the RESULT materialized;
+            # intermediate rounds only need their lineage cut (lazy)
             ranks = ranks.localCheckpoint(eager=last)
     # ranks is eagerly checkpointed before the caller's finally drops the
     # caches — nothing downstream depends on e's storage

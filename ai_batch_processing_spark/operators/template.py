@@ -59,27 +59,48 @@ def render_template(df: DataFrame, template: str, out_col: str = "prompt") -> Da
     return df.withColumn(out_col, template_expr(template, df.columns))
 
 
-def with_row_index(df: DataFrame, order_by: list[str] | None = None, col: str = ROW_INDEX_COL) -> DataFrame:
-    """Attach a 0-based row index (main.py:366-369 parity).
+def partition_offsets(numbered: DataFrame, value: Column, group_cols: list[str] | None = None) -> DataFrame:
+    """Add ``_off`` to every row of ``numbered``: the sum of ``value`` over
+    the rows of all earlier physical partitions (of the row's
+    ``group_cols`` group, if any). ``numbered`` carries each row's
+    partition id in ``_pid``.
 
-    With ``order_by``: contiguous global index over that ordering WITHOUT a
-    single-reducer sort. Range-partition on the keys (distributed sort),
-    number rows within each partition, then add each partition's
-    cumulative offset — only the ≤n_partitions-row offsets table ever
-    passes through one reducer, never the data.
+    This is the offsets step shared by :func:`with_row_index` and
+    ``curation.grouped_prefix_sum``: totals per ``_pid`` (and group), an
+    exclusive running sum over ``_pid``, then a broadcast join back onto
+    the data. Only the ≤ n_partitions × n_groups totals ever pass through
+    one reducer, never the data.
 
-    Without ``order_by``: ``monotonically_increasing_id()`` — distributed,
-    no shuffle; ids are non-contiguous but strictly increasing in dataset
-    order (partition index in the high bits), which is exactly what
-    order-restoring export needs.
+    ``numbered`` is pinned once with ``localCheckpoint(eager=False)`` and
+    the totals come from that frame's own ``_pid`` column. Two readers of
+    the same range exchange are not safe: column pruning makes them
+    differ, so Catalyst plans two range exchanges, and ``RangePartitioner``
+    seeds its sample with the RDD id — once the input outgrows the sample
+    the two exchanges cut at different bounds and partitions receive
+    another partition's offset.
     """
-    if not order_by:
-        return df.withColumn(col, F.monotonically_increasing_id())
-    keys = [F.col(c) for c in order_by]
+    keys = ["_pid", *(group_cols or [])]
+    pinned = numbered.localCheckpoint(eager=False)
+    totals = pinned.groupBy(*keys).agg(F.sum(value).alias("_tot"))
+    # ungrouped: a constant partition key gives the same single-partition
+    # execution over the ≤n_partitions rows without WindowExec's all-data
+    # warning (the data never takes this path)
+    w_off = (
+        Window.partitionBy(*(group_cols or [F.lit(0)]))
+        .orderBy("_pid")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    offsets = totals.select(*keys, F.coalesce(F.sum("_tot").over(w_off), F.lit(0)).alias("_off"))
+    return pinned.join(F.broadcast(offsets), keys)
+
+
+def _range_numbered(df: DataFrame, order_by: list[str]) -> DataFrame:
+    """Range-partition ``df`` on ``order_by`` and number the rows of each
+    partition in key order: ``_pid`` (partition) and ``_rn`` (0-based)."""
     from ai_batch_processing_spark.session import shuffle_partitions
 
+    keys = [F.col(c) for c in order_by]
     n = shuffle_partitions(df.sparkSession)
-    base = df.repartitionByRange(n, *keys)
     # In-partition position WITHOUT a window: a Window.partitionBy(_pid)
     # cannot see that _pid is partition-constant, so it inserted a SECOND
     # full Exchange (hashpartitioning(_pid), ENSURE_REQUIREMENTS) — the
@@ -89,29 +110,37 @@ def with_row_index(df: DataFrame, order_by: list[str] | None = None, col: str = 
     # layout is (partition index << 33) | record-number-within-partition —
     # rows are numbered in sorted partition order because the id is
     # non-deterministic and Catalyst never reorders it past the Sort.
-    ranged = base.sortWithinPartitions(*keys).withColumn(
-        "_mid", F.monotonically_increasing_id()
-    )
-    numbered = ranged.withColumn(
-        "_pid", F.shiftright("_mid", 33).cast("int")
-    ).withColumn("_rn", F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1)))
-    # Per-partition counts from the RE-USED range exchange (same canonical
-    # Exchange → one shuffle total); spark_partition_id here and _mid's high
-    # bits above index the same post-shuffle partitions.
-    counts = base.withColumn("_pid", F.spark_partition_id()).groupBy("_pid").agg(
-        F.count(F.lit(1)).alias("_cnt")
-    )
-    # constant partition key: same single-partition execution over the
-    # ≤n_partitions offset rows, but without WindowExec's all-data warning
-    # (which would be misleading here — the data never takes this path).
-    w_off = Window.partitionBy(F.lit(0)).orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.withColumn("_off", F.coalesce(F.sum("_cnt").over(w_off), F.lit(0))).select(
-        "_pid", "_off"
+    ranged = (
+        df.repartitionByRange(n, *keys)
+        .sortWithinPartitions(*keys)
+        .withColumn("_mid", F.monotonically_increasing_id())
     )
     return (
-        numbered.join(F.broadcast(offsets), "_pid")
+        ranged.withColumn("_pid", F.shiftright("_mid", 33).cast("int"))
+        .withColumn("_rn", F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1)))
+        .drop("_mid")
+    )
+
+
+def with_row_index(df: DataFrame, order_by: list[str] | None = None, col: str = ROW_INDEX_COL) -> DataFrame:
+    """Attach a 0-based row index (main.py:366-369 parity).
+
+    With ``order_by``: contiguous global index over that ordering WITHOUT a
+    single-reducer sort. Range-partition on the keys (distributed sort),
+    number rows within each partition, then add each partition's
+    cumulative offset (:func:`partition_offsets`).
+
+    Without ``order_by``: ``monotonically_increasing_id()`` — distributed,
+    no shuffle; ids are non-contiguous but strictly increasing in dataset
+    order (partition index in the high bits), which is exactly what
+    order-restoring export needs.
+    """
+    if not order_by:
+        return df.withColumn(col, F.monotonically_increasing_id())
+    return (
+        partition_offsets(_range_numbered(df, order_by), F.lit(1))
         .withColumn(col, (F.col("_off") + F.col("_rn")).cast("long"))
-        .drop("_pid", "_rn", "_mid", "_off")
+        .drop("_pid", "_rn", "_off")
     )
 
 

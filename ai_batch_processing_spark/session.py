@@ -42,31 +42,6 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # AQE partition-coalescing mode. Spark's DEFAULT (true) keeps
-        # defaultParallelism as a floor when coalescing; false coalesces
-        # purely by the advisory byte size. This round A/B'd both ways
-        # across regimes and the answer is regime-split:
-        # - floor regime (sf0.1 bench, exchanges ≪ advisory): false wins
-        #   small amounts (q42 3.1→2.6 s interleaved min-of-2) by not
-        #   fanning tiny exchanges to 32 tasks;
-        # - mid-size regime (100× replicas, exchanges of a few hundred
-        #   MB): false STARVES the box — a ~300 MB exchange coalesces to
-        #   ~5 tasks on 32 cores (interleaved ABAB mins: q02 5.2→3.5 s,
-        #   q100 6.5→3.2 s, q114 4.0→3.5 s, q103 2.3→2.0 s going
-        #   false→true);
-        # - true scale (the regime that matters): the two settings are
-        #   IDENTICAL — byte-sized partition counts dwarf any cluster's
-        #   defaultParallelism, so the floor never binds.
-        # Default therefore stays Spark's own (true): it is never wrong
-        # at scale and only costs a fraction of a second in the local
-        # floor regime. Env-overridable for cluster tuning. The
-        # cell-cogrouped numpy kernels pin their exchange explicitly
-        # either way (similarity._ivf_block_scores: REPARTITION_BY_NUM
-        # on cell — CPU-bound at byte sizes ANY coalescing would crush).
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"),
-        )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Prefer ShuffledHashJoin over SortMergeJoin when a build side fits
         # per-partition memory: skips sorting BOTH fact sides (measured

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -18,6 +19,28 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def spark_conf(spark):
+    """``with spark_conf({key: value}):`` sets session confs for the block
+    and restores the previous values after it."""
+
+    @contextlib.contextmanager
+    def override(conf: dict[str, str]):
+        old = {k: spark.conf.get(k, None) for k in conf}
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        try:
+            yield
+        finally:
+            for k, v in old.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+
+    return override
 
 
 @pytest.fixture(scope="session")

@@ -8,6 +8,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ai_batch_processing_spark.operators.curation import (
+    _range_cumsum,
     decontaminate,
     grouped_prefix_sum,
     mixture_weights,
@@ -92,20 +93,35 @@ def test_pii_counts(spark):
 # --- prefix sum / packing ---------------------------------------------------
 
 
-def test_grouped_prefix_sum_matches_naive_window(spark):
-    rows = [(i, f"s{i % 3}", (i * 7) % 11 + 1) for i in range(200)]
-    df = spark.createDataFrame(rows, "id long, src string, v long").repartition(7)
-    got = grouped_prefix_sum(df, ["src"], ["id"], "v", out_col="p")
-    w = (
-        Window.partitionBy("src")
-        .orderBy("id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    want = df.withColumn("p", (F.sum("v").over(w) - F.col("v")).cast("long"))
-    cols = ["id", "src", "v", "p"]
-    assert sorted(map(tuple, got.select(cols).collect())) == sorted(
-        map(tuple, want.select(cols).collect())
-    )
+def test_grouped_prefix_sum_matches_naive_window(spark, spark_conf):
+    # The 20k-row input outgrows a 5-row-per-partition range sample, so two
+    # range exchanges over the same data would cut at different bounds;
+    # with exchange reuse off, each reader of the range exchange plans its
+    # own.
+    for n, conf in (
+        (200, {}),
+        (
+            20_000,
+            {
+                "spark.sql.execution.rangeExchange.sampleSizePerPartition": "5",
+                "spark.sql.exchange.reuse": "false",
+            },
+        ),
+    ):
+        rows = [(i, f"s{i % 3}", (i * 7) % 11 + 1) for i in range(n)]
+        with spark_conf(conf):
+            df = spark.createDataFrame(rows, "id long, src string, v long").repartition(7)
+            got = grouped_prefix_sum(df, ["src"], ["id"], "v", out_col="p")
+            w = (
+                Window.partitionBy("src")
+                .orderBy("id")
+                .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+            )
+            want = df.withColumn("p", (F.sum("v").over(w) - F.col("v")).cast("long"))
+            cols = ["id", "src", "v", "p"]
+            assert sorted(map(tuple, got.select(cols).collect())) == sorted(
+                map(tuple, want.select(cols).collect())
+            ), n
 
 
 def test_grouped_prefix_sum_no_whole_group_window(spark):
@@ -1413,7 +1429,11 @@ def test_grouped_prefix_sum_no_second_data_exchange(spark):
     # hashpartitioning(_pid, group) ENSURE_REQUIREMENTS exchange. The only
     # hashpartitioning(_pid, ...) left is the tiny per-(partition, group)
     # totals aggregate (post-partial-agg, offsets-table-sized).
+    # The cumsum frame is pinned by a local checkpoint inside
+    # grouped_prefix_sum, so the kernel pins read that frame's own plan.
     df = spark.createDataFrame([(1, "a", 1), (2, "a", 2)], "id long, src string, v long")
-    plan = grouped_prefix_sum(df, ["src"], ["id"], "v")._jdf.queryExecution().toString()
+    plan = _range_cumsum(df, ["src"], ["id"], "v")._jdf.queryExecution().toString()
     assert "MapInPandas" in plan
+    assert plan.count("hashpartitioning(_pid") <= 1
+    plan = grouped_prefix_sum(df, ["src"], ["id"], "v")._jdf.queryExecution().toString()
     assert plan.count("hashpartitioning(_pid") <= 1

@@ -179,54 +179,6 @@ def test_near_dedup_keeps_one_per_cluster(spark):
     assert kept == [1, 3]
 
 
-def test_minhash_verify_scope_parity(spark, sf_dir):
-    """'candidates' verify scope (restricted collect_set) returns exactly
-    the same pairs as the default corpus-wide verify."""
-    from ai_batch_processing_spark.operators.dedup import minhash_dedup_pairs
-    from ai_batch_processing_spark.session import load_tables
-
-    docs = load_tables(spark, sf_dir, ["documents"])["documents"]
-    corpus = {tuple(r) for r in minhash_dedup_pairs(docs, "doc_id", "text").collect()}
-    restricted = {
-        tuple(r)
-        for r in minhash_dedup_pairs(docs, "doc_id", "text", verify_scope="candidates").collect()
-    }
-    assert corpus == restricted and len(corpus) > 0
-
-
-def test_oph_signatures_drop_in_recall(spark, sf_dir):
-    """One-permutation MinHash must be signature-compatible with the LSH
-    banding and lose no true pairs on the perturbed corpus (recall vs
-    exact Jaccard = 1.0 here, same as classic); densification must fill
-    every bin (no nulls) even for a tiny document."""
-    from ai_batch_processing_spark.operators.dedup import (
-        jaccard_pairs,
-        lsh_candidate_pairs,
-        minhash_signatures_oph,
-    )
-    from ai_batch_processing_spark.session import load_tables
-
-    t = load_tables(spark, sf_dir, ["documents"])
-    base = t["documents"].filter(F.col("doc_id") < 300).select(F.col("doc_id").alias("id"), "text")
-    near = (
-        t["documents"]
-        .filter((F.col("doc_id") < 300) & (F.col("doc_id") % 2 == 0))
-        .select((F.col("doc_id") + 100000).alias("id"), F.concat("text", F.lit(" tail")).alias("text"))
-    )
-    corpus = base.unionAll(near)
-    exact = {(r.id_a, r.id_b) for r in jaccard_pairs(corpus, "id", "text", 5, 0.5).collect()}
-    sigs = minhash_signatures_oph(corpus, "id", "text")
-    cands = {(r.id_a, r.id_b) for r in lsh_candidate_pairs(sigs).collect()}
-    assert len(cands & exact) >= 0.95 * len(exact)
-
-    tiny = spark.createDataFrame([(1, "abcdefgh"), (2, "abcdefgh")], "id long, text string")
-    rows = minhash_signatures_oph(tiny, "id", "text").collect()
-    for r in rows:
-        assert len(r.sig) == 64 and all(v is not None for v in r.sig)
-    # identical tiny docs agree on every densified bin they share content for
-    assert sum(1 for a, b in zip(rows[0].sig, rows[1].sig) if a == b) >= 8
-
-
 def test_minhash_bands8_frontier_recall(spark, sf_dir):
     """q42's bench configuration (bands=8, r=8 — the measured band-width
     frontier: −17% wall for −3.4% pairs at sf0.1) must still clear the
@@ -776,28 +728,6 @@ def test_dedup_savings_histogram(spark):
     assert rows[3].n_groups == 1
     assert rows[3].rows_removable == 2
     assert rows[3].chars_removable == 8
-
-
-def test_minhash_dedup_pairs_oph_mode_recall(spark, sf_dir):
-    """minhash_dedup_pairs(sig_mode='oph') — the one-permutation variant
-    threaded through the full LSH→estimate→verify pipeline — must clear
-    the same ≥90% recall pin as classic at the q42 config (bands=8).
-    Measured r9: recall 0.9997 vs classic's 0.9656 at sf0.1 (OPH is the
-    recall lever; the wall A/B rejected it as the speed lever — see
-    q42's comment)."""
-    from ai_batch_processing_spark.operators.dedup import _dup_corpus
-
-    corpus = _dup_corpus(spark, sf_dir)
-    exact = {(r.id_a, r.id_b) for r in jaccard_pairs(corpus, "id", "text", threshold=0.5).collect()}
-    oph = {
-        (r.id_a, r.id_b)
-        for r in minhash_dedup_pairs(
-            corpus, "id", "text", threshold=0.5, bands=8, sig_mode="oph"
-        ).collect()
-    }
-    assert len(oph & exact) >= 0.90 * len(exact)
-    # precision 1: every returned pair is exactly verified either way
-    assert oph <= exact
 
 
 def test_char_spans_catch_mid_token_splice(spark):

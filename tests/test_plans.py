@@ -432,8 +432,9 @@ def test_broadcast_if_small_dispatch_ladder(spark, sf_dir):
 
 def test_ivf_cogroup_kernel_partitioning_pinned(spark, sf_dir):
     """Round-10 pf_false guard: AQE's byte-based partition coalescing
-    (coalescePartitions.parallelismFirst=false, session default) cannot
-    see the CPU cost of the cell-cogrouped numpy kernels, so both cogroup
+    (coalescePartitions.parallelismFirst=false, a platform setting; the
+    session keeps Spark's default, true) cannot see the CPU cost of the
+    cell-cogrouped numpy kernels, so both cogroup
     inputs pin their exchange with an explicit REPARTITION_BY_NUM on
     ``cell`` (measured: letting AQE coalesce the few-MB cell exchange to
     one task serialized the q150 block kernel, +1.9 s at sf0.1). Both

@@ -4,7 +4,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ai_batch_processing_spark.operators.template import render_template, template_expr, with_row_index
+from ai_batch_processing_spark.operators.template import (
+    _range_numbered,
+    render_template,
+    template_expr,
+    with_row_index,
+)
 
 
 def _df(spark):
@@ -72,16 +77,30 @@ def test_with_row_index_monotonic_preserves_order(spark):
     assert len({r._row_index for r in rows}) == 100
 
 
-def test_with_row_index_ordered_many_partitions(spark):
+def test_with_row_index_ordered_many_partitions(spark, spark_conf):
     # Contiguous 0-based index across many range partitions, non-trivial
-    # data order (the r10 monotonically_increasing_id rewrite).
+    # data order (the r10 monotonically_increasing_id rewrite). The 20k-row
+    # input outgrows a 5-row-per-partition range sample, so two range
+    # exchanges over the same data would cut at different bounds; with
+    # exchange reuse off, each reader of the range exchange plans its own.
     import random
 
-    vals = list(range(500))
-    random.Random(7).shuffle(vals)
-    df = spark.createDataFrame([(v,) for v in vals], "k int").repartition(11)
-    out = {r.k: r._row_index for r in with_row_index(df, order_by=["k"]).collect()}
-    assert out == {v: v for v in range(500)}
+    for n, conf in (
+        (500, {}),
+        (
+            20_000,
+            {
+                "spark.sql.execution.rangeExchange.sampleSizePerPartition": "5",
+                "spark.sql.exchange.reuse": "false",
+            },
+        ),
+    ):
+        vals = list(range(n))
+        random.Random(7).shuffle(vals)
+        with spark_conf(conf):
+            df = spark.createDataFrame([(v,) for v in vals], "k int").repartition(11)
+            out = {r.k: r._row_index for r in with_row_index(df, order_by=["k"]).collect()}
+        assert out == {v: v for v in range(n)}, n
 
 
 def test_with_row_index_no_window_exchange(spark):
@@ -94,8 +113,13 @@ def test_with_row_index_no_window_exchange(spark):
     # ``windowspecdefinition(_pid ASC ...`` after literal folding — it
     # runs over ≤n_partitions rows; the old data-side window was the
     # ``row_number`` over a hashpartitioning(_pid) exchange)
+    # The numbering frame is pinned by a local checkpoint inside
+    # with_row_index, so the numbering pins read that frame's own plan.
     df = spark.range(100).withColumnRenamed("id", "k")
-    plan = with_row_index(df, order_by=["k"])._jdf.queryExecution().toString()
+    plan = _range_numbered(df, ["k"])._jdf.queryExecution().toString()
     assert "monotonically_increasing_id" in plan
+    assert "row_number" not in plan
+    assert plan.count("hashpartitioning(_pid") <= 1
+    plan = with_row_index(df, order_by=["k"])._jdf.queryExecution().toString()
     assert "row_number" not in plan
     assert plan.count("hashpartitioning(_pid") <= 1

@@ -42,8 +42,6 @@ def main() -> None:
         walls = []
         jobs = stages = tasks = 0
         for run in range(2):
-            jobs_before = set(st.getJobIdsForGroup(None) or [])
-            # fall back: track via job ids snapshot
             all_before = spark.sparkContext._jsc.sc().statusTracker().getJobIdsForGroup(None)
             before_ids = set(all_before)
             t0 = time.time()
