@@ -22,10 +22,14 @@ Spark mapping:
   the socket.io emit.
 - rate/ETA (main.py:653-657) derive from completed-task counts and
   wall-clock, same arithmetic as the reference.
+- materialised intermediates = :func:`pin`: a frame pinned while a job
+  runs is released when the job ends (:func:`pin_scope`), so a
+  long-lived registry session accumulates no checkpoint blocks.
 """
 
 from __future__ import annotations
 
+import contextlib
 import threading
 import time
 import traceback
@@ -37,6 +41,45 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 ProgressCallback = Callable[[dict[str, Any]], None]
+
+_SCOPE = threading.local()
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """Materialise ``df`` once for every later reader:
+    ``localCheckpoint(eager=False)``, so the first action computes it and
+    every other action reads the stored rows.
+
+    Inside a :func:`pin_scope` on this thread the pinned frame is recorded
+    and released when the scope closes; outside one, its blocks wait for
+    ContextCleaner to reclaim them once the frame is unreachable.
+    """
+    pinned = df.localCheckpoint(eager=False)
+    frames = getattr(_SCOPE, "frames", None)
+    if frames is not None:
+        frames.append(pinned)
+    return pinned
+
+
+@contextlib.contextmanager
+def pin_scope():
+    """Release every frame :func:`pin` records on this thread inside the
+    block when the block exits, normally or by an exception.
+
+    Keyed by thread, not by Spark job group: callers set job groups of
+    their own, and a pin kept under a group nothing releases would hold a
+    strong reference forever and block ContextCleaner. A pinned frame
+    must not be read after its scope closes (the read fails with
+    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``).
+    """
+    outer = getattr(_SCOPE, "frames", None)
+    _SCOPE.frames = frames = []
+    try:
+        yield
+    finally:
+        _SCOPE.frames = outer
+        for pinned in frames:
+            pinned._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 @dataclass
@@ -98,6 +141,12 @@ class JobRegistry:
 
         The action executes on a worker thread inside a job group named by
         ``job_id``; progress events stream to ``on_progress`` while it runs.
+
+        The action runs inside a :func:`pin_scope`: every frame it pins
+        (``llm_map``'s result, ``partition_offsets``' numbering) is released
+        before the job reports finished, whether it completed, failed or was
+        stopped. So a frame built inside the action must not be read after
+        the job returns; actions return values, not frames.
         """
         job_id = job_id or f"job_{uuid.uuid4().hex[:12]}"
         st = JobStatus(job_id=job_id)
@@ -117,7 +166,8 @@ class JobRegistry:
             )
             poller.start()
             try:
-                st.result = action(self._spark)
+                with pin_scope():
+                    st.result = action(self._spark)
                 st.status = "completed"
             except Exception as exc:  # cancellation surfaces as a Py4J error
                 if st.status != "stopped":

@@ -26,6 +26,15 @@ Reference behavior re-expressed Spark-first (main.py:308-629):
   partitions (the reference's semaphore clamp, main.py:332-334) — slight
   under-utilization, no coordination service needed.
 
+Once per row per job: the reference computes a job's results once and
+stores them in ``results_storage`` (main.py:351); every export reads that
+stored table. ``llm_map`` likewise returns its result relation pinned
+(``jobs.pin``): the first action calls the model, and every later sink,
+sort sample and count reads the same stored rows — one API call, one
+``response`` and one ``timestamp`` per row across all exports. Inside a
+``JobRegistry`` job or an LLM stream micro-batch the pin is released when
+the job or batch ends, so a frame built there is not read afterwards.
+
 Determinism for testing: :class:`MockLLMClient` answers
 ``mock:<md5(prompt)>:<n_prior_messages>`` — pure function of the message
 log, so grouped-mode ordering and history length are oracle-checkable in
@@ -46,6 +55,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType, StringType
 
+from ai_batch_processing_spark.jobs import pin
 from ai_batch_processing_spark.operators.grouping import GROUP_COL, with_group_key
 from ai_batch_processing_spark.operators.template import ROW_INDEX_COL, render_template, with_row_index
 from ai_batch_processing_spark.registry import register
@@ -349,9 +359,12 @@ def llm_map(
     """Map every row through an LLM; returns the reference's result relation.
 
     Output columns: all input columns + ``group``, ``main_content``,
-    ``prompt``, ``response``, ``error``, ``row_index`` (main.py:450-462).
-    ``error`` is null on success; a failed row carries the message instead
-    of failing the task (main.py:487-502).
+    ``prompt``, ``response``, ``error``, ``row_index``, ``timestamp``
+    (main.py:450-462). ``error`` is null on success; a failed row carries
+    the message instead of failing the task (main.py:487-502).
+
+    The relation is pinned (module docstring): each row is sent to the
+    model once however many actions read the result.
 
     ``initial_histories`` (grouped mode only) seeds each group's
     conversation with a prior message log keyed by the group value — the
@@ -363,6 +376,17 @@ def llm_map(
     object the reference keeps in ``conversations`` (main.py:402-431),
     bounded by groups-per-batch, not corpus size.
     """
+    return pin(_llm_relation(df, cfg, client_factory, initial_histories))
+
+
+def _llm_relation(
+    df: DataFrame,
+    cfg: LLMConfig,
+    client_factory: Callable[[LLMConfig], object] | None,
+    initial_histories: dict[str, list[Message]] | None,
+) -> DataFrame:
+    """The lazy plan behind :func:`llm_map`: every action that reads it
+    calls the model again."""
     validate_config(cfg, df.columns)
     if initial_histories is not None and cfg.group_by is None:
         raise ConfigError("initial_histories requires grouped mode (group_by set)")

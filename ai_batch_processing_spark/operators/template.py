@@ -22,6 +22,7 @@ import re
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ai_batch_processing_spark.jobs import pin
 from ai_batch_processing_spark.registry import register
 
 ROW_INDEX_COL = "_row_index"
@@ -71,16 +72,18 @@ def partition_offsets(numbered: DataFrame, value: Column, group_cols: list[str] 
     the data. Only the ≤ n_partitions × n_groups totals ever pass through
     one reducer, never the data.
 
-    ``numbered`` is pinned once with ``localCheckpoint(eager=False)`` and
-    the totals come from that frame's own ``_pid`` column. Two readers of
-    the same range exchange are not safe: column pruning makes them
-    differ, so Catalyst plans two range exchanges, and ``RangePartitioner``
-    seeds its sample with the RDD id — once the input outgrows the sample
-    the two exchanges cut at different bounds and partitions receive
-    another partition's offset.
+    ``numbered`` is pinned once (``jobs.pin``) and the totals come from
+    that frame's own ``_pid`` column. Two readers of the same range
+    exchange are not safe: column pruning makes them differ, so Catalyst
+    plans two range exchanges, and ``RangePartitioner`` seeds its sample
+    with the RDD id — once the input outgrows the sample the two exchanges
+    cut at different bounds and partitions receive another partition's
+    offset. Inside a ``JobRegistry`` job or an LLM stream micro-batch the
+    pin is released when the job or batch ends; elsewhere ContextCleaner
+    reclaims it once the frame is unreachable.
     """
     keys = ["_pid", *(group_cols or [])]
-    pinned = numbered.localCheckpoint(eager=False)
+    pinned = pin(numbered)
     totals = pinned.groupBy(*keys).agg(F.sum(value).alias("_tot"))
     # ungrouped: a constant partition key gives the same single-partition
     # execution over the ≤n_partitions rows without WindowExec's all-data

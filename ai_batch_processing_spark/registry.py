@@ -108,14 +108,14 @@ def registered_oracle(name: str) -> str:
 # emitted right after the bench queries (which lead anyway — leave them
 # out). Replace the names with each change; at most 20.
 TOUCHED: tuple[str, ...] = (
-    # shared partition-offsets step under with_row_index(order_by=...)
-    # and grouped_prefix_sum
+    # llm_map now pins its result (jobs.pin)
+    "q33_llm_map_grouped_conversation",
+    "q119_llm_map_prompt_cached",
+    # partition_offsets pins through the same helper
     "q30_template_render",
     "q148_token_budget_selection",
-    "q33_llm_map_grouped_conversation",
     "q103_sequence_packing",
     "q113_vocab_zipf_stats",
-    "q119_llm_map_prompt_cached",
     "q135_sequence_packing_fragments",
     "q182_shard_manifest",
     "q194_weighted_interleave",

@@ -62,18 +62,27 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        # 24g heap (r10): in local[N] the driver JVM IS the executor — 8g
-        # across 32 task threads was ~250 MB/thread and the long bench
-        # session showed classic old-gen GC inflation mid-run (8g vs 24g
-        # A/B, both orders: 43.4→23.0 s and 29.0 vs 26.1 s totals; the
-        # 8g run's q151/q32/q34 walls tripled, recovering at 24g in the
-        # same window). On a real cluster this maps to executor memory,
-        # where per-core memory is provisioned explicitly.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # Up to a 24g heap (r10): in local[N] the driver JVM IS the
+        # executor — 8g across 32 task threads was ~250 MB/thread and the
+        # long bench session showed classic old-gen GC inflation mid-run
+        # (8g vs 24g A/B, both orders: 43.4→23.0 s and 29.0 vs 26.1 s
+        # totals; the 8g run's q151/q32/q34 walls tripled, recovering at
+        # 24g in the same window). Capped at half the host's memory: a
+        # heap larger than the host gets the JVM OOM-killed by the kernel
+        # (a 15 GB host, 24g heap, died mid-way through the oracle suite).
+        # On a real cluster this maps to executor memory, where per-core
+        # memory is provisioned explicitly.
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def default_driver_mem() -> str:
+    """Half of the host's physical memory, at most 24 GiB, in MiB."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(24 * 1024, total // (2 * 1024 * 1024))}m"
 
 
 def shuffle_partitions(spark: SparkSession, default: int = 200) -> int:

@@ -26,6 +26,7 @@ import json
 
 from pyspark.sql import SparkSession
 
+from ai_batch_processing_spark.jobs import pin_scope
 from ai_batch_processing_spark.operators.llm_map import LLMConfig, Message, llm_map
 
 DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
@@ -61,8 +62,11 @@ def stream_llm_map(
         fs = marker.getFileSystem(sess._jsc.hadoopConfiguration())
         if fs.exists(marker):
             return
-        out = llm_map(batch_df, cfg, client_factory=client_factory)
-        out.write.mode("overwrite").parquet(target)
+        # the batch's pinned LLM result is released once it is written, so
+        # a long stream keeps no pin per micro-batch
+        with pin_scope():
+            out = llm_map(batch_df, cfg, client_factory=client_factory)
+            out.write.mode("overwrite").parquet(target)
 
     stream = (
         spark.readStream.schema(schema)
@@ -184,10 +188,11 @@ def stream_llm_map_grouped(
         state_target = f"{state_dir}/batch_id={batch_id}"
         prev = _load_latest_state(sess, state_dir, batch_id)
         if not _fs_exists(sess, target + "/_SUCCESS"):
-            out = llm_map(
-                batch_df, cfg, client_factory=client_factory, initial_histories=prev
-            )
-            out.write.mode("overwrite").parquet(target)
+            with pin_scope():
+                out = llm_map(
+                    batch_df, cfg, client_factory=client_factory, initial_histories=prev
+                )
+                out.write.mode("overwrite").parquet(target)
         if not _fs_exists(sess, state_target + "/_SUCCESS"):
             out_rows = (
                 sess.read.parquet(target)

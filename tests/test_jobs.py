@@ -54,3 +54,60 @@ def test_reset_clears_jobs(spark):
     reg.wait(job_id, timeout=30)
     reg.reset()
     assert reg._jobs == {}
+
+
+def _rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _llm_input(spark):
+    return spark.createDataFrame(
+        [(i, f"g{i % 3}", f"t{i}") for i in range(20)], "id long, grp string, body string"
+    )
+
+
+def test_job_releases_its_pins(spark, tmp_path):
+    """A job's pins (llm_map's result and partition_offsets' numbering)
+    are released when it ends, completed or failed: no persistent RDD id
+    created during the job survives it. Ids, not counts: ContextCleaner
+    may drop other RDDs meanwhile."""
+    from ai_batch_processing_spark.io import writers
+    from ai_batch_processing_spark.operators.llm_map import LLMConfig, llm_map
+
+    df = _llm_input(spark)
+    cfg = LLMConfig(prompt_template="{body}", order_by=["id"])
+    reg = JobRegistry(spark, poll_interval=0.05)
+
+    def export(s):
+        out = llm_map(df, cfg)
+        writers.write_consolidated_csv(out, str(tmp_path / "csv"))
+        writers.write_individual_files(out, str(tmp_path / "individual"))
+        return len(_rdd_ids(s) - before)
+
+    def fail(s):
+        llm_map(df, cfg).count()
+        raise RuntimeError("boom after llm_map")
+
+    before = _rdd_ids(spark)
+    st = reg.wait(reg.submit(export), timeout=120)
+    assert st.status == "completed"
+    assert st.result >= 2  # both pins were live while the job ran
+    assert _rdd_ids(spark) - before == set()
+
+    before = _rdd_ids(spark)
+    st = reg.wait(reg.submit(fail), timeout=120)
+    assert st.status == "failed" and "boom" in st.error
+    assert _rdd_ids(spark) - before == set()
+
+
+def test_frame_pinned_outside_a_job_outlives_it(spark):
+    """A frame built outside any job (the reference-journey shape) is not
+    released by the job that reads it: it stays readable afterwards."""
+    from ai_batch_processing_spark.operators.llm_map import LLMConfig, llm_map
+
+    out = llm_map(_llm_input(spark), LLMConfig(prompt_template="{body}", group_by="grp", order_by=["id"]))
+    reg = JobRegistry(spark, poll_interval=0.05)
+    st = reg.wait(reg.submit(lambda s: out.count()), timeout=120)
+    assert st.status == "completed" and st.result == 20
+    rows = out.collect()
+    assert len(rows) == 20 and all(r.error is None for r in rows)

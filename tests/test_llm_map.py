@@ -13,6 +13,7 @@ from ai_batch_processing_spark.operators.llm_map import (
     LLMError,
     MockLLMClient,
     SlidingWindowRateLimiter,
+    _llm_relation,
     call_with_retry,
     llm_map,
 )
@@ -387,7 +388,9 @@ def test_grouped_rate_limit_bounds_concurrent_tasks(spark):
         [(i, f"g{i % 7}", f"t{i}") for i in range(20)], "id long, grp string, body string"
     )
     cfg = LLMConfig(prompt_template="{body}", group_by="grp", order_by=["id"], rate_limit=60)
-    out = llm_map(df, cfg)
+    # the lazy relation under llm_map's pin: the pinned frame's plan is a
+    # scan of the stored rows and hides the shuffles
+    out = _llm_relation(df, cfg, None, None)
     # Plan-shape pin WITHOUT executing (executing would engage the real
     # wall-clock limiter): the lane repartition IS the group shuffle — one
     # REPARTITION_BY_NUM(group, 10) and no ENSURE_REQUIREMENTS re-shuffle.
@@ -491,6 +494,68 @@ def test_llm_map_cached_preserves_preindexed_column_order(spark):
     ).select("_row_index", "doc_id", "lang", "text")  # index mid/front of schema
     cfg = LLMConfig(prompt_template="lang: {lang}", main_content="text")
     assert llm_map_cached(df, cfg).columns == llm_map(df, cfg).columns
+
+
+@pytest.mark.parametrize("grouped", [True, False], ids=["grouped", "ungrouped"])
+def test_llm_map_calls_once_per_row_across_sinks(spark, tmp_path, grouped):
+    """One llm_map frame feeding several exports calls the model once per
+    row (main.py:351 stores a job's results once; every export reads
+    them): every sink carries the same response and timestamp per
+    row_index, and there are as many distinct responses as rows."""
+    import csv
+    import json
+    import re
+    import zipfile
+
+    from ai_batch_processing_spark.io import writers
+
+    class UniquePerCallMock(MockLLMClient):
+        """Every CALL returns a distinct token: the number of distinct
+        responses across rows IS the number of API calls."""
+
+        def complete(self, model, messages, temperature, max_tokens):
+            import uuid
+
+            return f"call:{uuid.uuid4().hex}"
+
+    n = 24
+    df = spark.createDataFrame(
+        [(i, f"g{i % 4}", f"t{i}") for i in range(n)], "id long, grp string, body string"
+    )
+    cfg = LLMConfig(
+        prompt_template="{body}", group_by="grp" if grouped else None, main_content="body", order_by=["id"]
+    )
+    out = llm_map(df, cfg, client_factory=lambda _cfg: UniquePerCallMock())
+
+    # sink name → [(response, timestamp)] in row_index order (order_by=["id"]
+    # makes row_index contiguous, so export line i is row_index i)
+    sinks: dict[str, list[tuple[str, str]]] = {}
+    if grouped:
+        writers.write_consolidated_json(out, str(tmp_path / "json"))
+        (part,) = (tmp_path / "json").glob("part-*")
+        recs = [json.loads(line) for line in part.read_text().splitlines()]
+        sinks["json"] = [(r["response"], r["timestamp"]) for r in recs]
+        writers.write_individual_files(out, str(tmp_path / "individual"))
+        files = {}
+        for f in (tmp_path / "individual").iterdir():
+            fields = dict(re.findall(r"(?m)^(RESPONSE|TIMESTAMP): (.*)$", f.read_text()))
+            files[int(f.name.split("_")[1])] = (fields["RESPONSE"], fields["TIMESTAMP"])
+        sinks["individual"] = [files[i] for i in sorted(files)]
+    else:
+        writers.write_consolidated_csv(out, str(tmp_path / "csv"))
+        (part,) = (tmp_path / "csv").glob("part-*")
+        with open(part, newline="") as fh:
+            sinks["csv"] = [(r["response"], r["timestamp"]) for r in csv.DictReader(fh)]
+        zp = writers.export_zip(out, str(tmp_path / "results.zip"), format_type="json")
+        with zipfile.ZipFile(zp) as zf:
+            lines = zf.read("consolidated/results.json").decode().splitlines()
+        sinks["zip"] = [(json.loads(line)["response"], json.loads(line)["timestamp"]) for line in lines]
+
+    first, second = sinks.values()
+    assert len(first) == len(second) == n
+    for row_index, (a, b) in enumerate(zip(first, second)):
+        assert a == b, f"row_index {row_index}: sinks disagree {a} vs {b}"
+    assert len({resp for resp, _ in first}) == n  # one call per row
 
 
 def _acquire_worker(args):

@@ -49,7 +49,7 @@ def test_full_reference_journey(spark, tmp_path):
     st = reg.wait(job, timeout=120)
     assert st.status == "completed" and st.result == 4
     assert events and events[-1]["event"] == "job_finished"
-    collected = out_df.collect()  # mock client → deterministic re-evaluation
+    collected = out_df.collect()  # reads the rows the job's count stored (out_df is pinned)
     assert all(r.error is None for r in collected)
 
     # 3. export (main.py:681-914): both formats in one ZIP

@@ -119,8 +119,11 @@ def test_stream_llm_map_chunked_resume(spark, tmp_path):
     for i in range(3):
         write_file(i, 4)
     cfg = LLMConfig(prompt_template="say: {text}")
+    rdds_before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
     q = stream_llm_map(spark, str(src), out, ckpt, cfg, max_files_per_trigger=1)
     q.awaitTermination(120)
+    # each micro-batch released its pinned LLM result once written
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) - rdds_before == set()
     first = spark.read.parquet(out)
     assert first.count() == 12
     row = first.filter("doc_id = 101").first()

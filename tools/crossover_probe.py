@@ -473,8 +473,11 @@ def main() -> None:
                 avail_gb = kb.get("MemAvailable", kb.get("MemTotal", 0)) / (1024 * 1024)
             except OSError:
                 avail_gb = 64.0
-            drv = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
-            drv_gb = float(drv.rstrip("gG")) if drv.lower().endswith("g") else 24.0
+            from ai_batch_processing_spark.session import default_driver_mem
+
+            drv = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem()
+            scale = {"g": 1.0, "m": 1 / 1024}.get(drv[-1].lower())
+            drv_gb = float(drv[:-1]) * scale if scale else 24.0
             limit_gb = str(int(max(4, min(64, avail_gb - drv_gb - 8))))
         con.execute(f"SET memory_limit='{limit_gb}GB'")
         for t in TABLES:
