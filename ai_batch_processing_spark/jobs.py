@@ -47,8 +47,14 @@ _SCOPE = threading.local()
 
 def pin(df: DataFrame) -> DataFrame:
     """Materialise ``df`` once for every later reader:
-    ``localCheckpoint(eager=False)``, so the first action computes it and
-    every other action reads the stored rows.
+    ``localCheckpoint(eager=False)``.
+
+    The call is not fully lazy. Building the checkpoint RDD runs the
+    plan's broadcast stages, and under AQE also its shuffle-map stages,
+    because AQE plans the final stage only once its inputs exist (a
+    groupBy+join frame runs 2 jobs at call time with AQE on, 1 with it
+    off). Only the result stage waits: the first action computes and
+    stores the rows, and every later action reads the stored rows.
 
     Inside a :func:`pin_scope` on this thread the pinned frame is recorded
     and released when the scope closes; outside one, its blocks wait for

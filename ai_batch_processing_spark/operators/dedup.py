@@ -816,7 +816,8 @@ def q42_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stream (r=8 collisions are rarer), buying −17% wall for −3.4%
     # recall at exactly J=threshold pairs — the library DEFAULT stays
     # bands=16 (recall-first); this bench query documents the frontier
-    # config. recall_config('minhash', target) picks analytically.
+    # config. Banding recall at J = threshold is analytic:
+    # 1 − (1 − J^r)^b with r = num_perm / bands.
     #
     # est_filter: the r10 bench override (est_filter=False, locally-tuned
     # after the A/B: est-on 3.33 s vs est-off 2.48 s at identical 2,971
@@ -1366,9 +1367,9 @@ def _candidate_eval_oracle_sql(
         "whole measurement — portable polynomial shingle hash, the 64 seeded "
         "permutations inlined as SQL literals, slice-equality banding, "
         "shingle-self-join truth — is reproduced in the DuckDB twin, so the "
-        "recall number the tuning API (operators/tuning.py) reasons about is "
-        "itself hash-gated, not just test-asserted. Spark side is one lazy "
-        "plan: full-outer pair join -> single aggregate row."
+        "banding recall number is itself hash-gated, not just test-asserted. "
+        "Spark side is one lazy plan: full-outer pair join -> single "
+        "aggregate row."
     ),
     tags=("dedup", "minhash", "eval", "verify"),
 )

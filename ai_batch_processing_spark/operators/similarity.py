@@ -733,7 +733,7 @@ def _ivf_scored(
 
     - bounded batch (``max_query_rows`` set): guarded broadcast cell join
       (:func:`_probe_join`) + ``_pair_dot`` rescore — the corpus side is
-      never shuffled (for a persisted index it is read partition-pruned).
+      never shuffled.
     - corpus-sized (``None``): cogrouped per-cell block kernel
       (:func:`_ivf_block_scores`) — both sides shuffle once on cell,
       vectors ship once each, identical scores by construction.
@@ -754,186 +754,6 @@ def _ivf_scored(
         "query_id",
         "neighbor_id",
         F.round(_pair_dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn")), 6).alias("score"),
-    )
-
-
-def build_ivf_index(
-    corpus: DataFrame,
-    path: str,
-    nlist: int = 16,
-    n_iter: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Persist an IVF index: corpus partitioned by cell + a centroid table.
-
-    The production shape of ``ann_ivf_topk``: the k-means build and the
-    corpus assignment pass run ONCE and are written out —
-    ``{path}/corpus`` parquet partitioned by ``cell`` (so a search scans
-    only its probed cells via partition pruning), ``{path}/centroids``
-    the nlist×dim matrix. Query batches then pay only the probe+rescore,
-    not the index build: at 100 TB the corpus is assigned once per index
-    refresh, and every search touches ~nprobe/nlist of the data directory.
-    """
-    centroids = kmeans_centroids(corpus, nlist=nlist, n_iter=n_iter, id_col=id_col, vec_col=vec_col)
-    spark = corpus.sparkSession
-    cent_rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
-    spark.createDataFrame(cent_rows, "cell int, centroid array<double>").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/centroids")
-    assigned = assign_cells(corpus, centroids, id_col=id_col, vec_col=vec_col)
-    # batch=-1 marks the base build; streaming updates land under their own
-    # batch partitions (see _append_ivf_batch) so replays are idempotent.
-    assigned.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
-        _norm(F.col(vec_col)).alias("_cn"),
-        F.lit(-1).alias("batch"),
-        "cell",
-    ).write.mode("overwrite").partitionBy("batch", "cell").parquet(f"{path}/corpus")
-
-
-def _append_ivf_batch(
-    index_path: str,
-    centroids: list,
-    batch_df: DataFrame,
-    batch_id: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Write one streaming micro-batch into the index, idempotently.
-
-    foreachBatch is at-least-once: a crash after the parquet commit but
-    before the streaming checkpoint commits replays the batch on restart.
-    The write is therefore keyed by the deterministic ``batch_id``: rows
-    land under ``batch=<id>/cell=<c>`` partitions in DYNAMIC overwrite
-    mode, so a replay rewrites exactly its own partitions instead of
-    appending duplicates — at-least-once delivery + idempotent write =
-    exactly-once index contents. ``cell`` stays a partition column, so
-    search-side partition pruning is unchanged.
-    """
-    assigned = assign_cells(batch_df, centroids, id_col=id_col, vec_col=vec_col)
-    (
-        assigned.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("_cv"),
-            _norm(F.col(vec_col)).alias("_cn"),
-            F.lit(batch_id).cast("int").alias("batch"),
-            "cell",
-        )
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch", "cell")
-        .parquet(f"{index_path}/corpus")
-    )
-
-
-def stream_update_ivf_index(
-    spark: SparkSession,
-    source_dir: str,
-    index_path: str,
-    checkpoint: str,
-    schema: str = "vec_id long, label string, embedding array<float>",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_files_per_trigger: int | None = None,
-):
-    """Incremental IVF index maintenance: stream new vectors into an
-    existing ``build_ivf_index`` directory.
-
-    The production ingestion loop for a vector corpus: centroids stay
-    FROZEN (re-clustering is a periodic offline job — the standard IVF
-    practice, because moving centroids would orphan previously written
-    cells), each micro-batch assigns its vectors to cells with the same
-    Arrow-batched matmul as the build, and appends them to the
-    cell-partitioned corpus directory — a batch only touches the
-    ``batch=<id>/cell=<c>`` partitions it lands in, and searches see new
-    vectors as soon as their batch commits. foreachBatch delivery is
-    at-least-once; exactly-once index CONTENTS come from the idempotent
-    per-batch write (:func:`_append_ivf_batch`: deterministic batch_id
-    partition + dynamic overwrite — a replayed batch rewrites its own
-    partitions rather than appending duplicates).
-
-    Returns the StreamingQuery (availableNow semantics are the caller's
-    choice via trigger on the returned writer — here we drain pending
-    files and stop).
-    """
-    centroids = [
-        list(r.centroid)
-        for r in spark.read.parquet(f"{index_path}/centroids").orderBy("cell").collect()
-    ]
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.json(source_dir)
-
-    def append_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _append_ivf_batch(index_path, centroids, batch_df, batch_id, id_col=id_col, vec_col=vec_col)
-
-    return (
-        stream.writeStream.foreachBatch(append_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def search_ivf_index(
-    spark: SparkSession,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    nprobe: int = 4,
-    query_id: str = "vec_id",
-    vec_col: str = "embedding",
-    max_query_rows: int | None = 100_000,
-) -> DataFrame:
-    """Top-k search against a ``build_ivf_index`` directory.
-
-    Queries are assigned to their ``nprobe`` nearest cells (one Arrow
-    batch matmul), then joined to the cell-partitioned corpus — the cell
-    equi-join condition reaches the parquet scan as a partition filter
-    (dynamic partition pruning; only probed cells are read). Exact cosine
-    rescore + per-query top-k window, identical semantics to
-    ``ann_ivf_topk`` with the same centroids.
-    """
-    centroids = [
-        list(r.centroid)
-        for r in spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
-    ]
-    c = spark.read.parquet(f"{path}/corpus")
-    # Replays of one batch are idempotent (_append_ivf_batch), but the SAME
-    # vec_id legitimately re-ingested in a DIFFERENT batch (an update or
-    # re-send) lands under two batch partitions — without a dedup it would
-    # occupy two ranks of the top-k and crowd out genuine neighbors. The
-    # contract is latest-batch-wins: when the index holds >1 batch, keep
-    # each neighbor_id's max-batch row. The window shuffles the index by
-    # id once per search — at scale, compact the index offline instead
-    # (rewrite base partitions, drop superseded rows) and the single-batch
-    # fast path below skips the shuffle entirely.
-    n_batches = c.select("batch").distinct().limit(2).count()
-    if n_batches > 1:
-        wb = Window.partitionBy("neighbor_id").orderBy(F.desc("batch"))
-        c = (
-            c.withColumn("_rn", F.row_number().over(wb))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-    q = assign_cells(queries, centroids, id_col=query_id, vec_col=vec_col, nprobe=nprobe).select(
-        F.col(query_id).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        _norm(F.col(vec_col)).alias("_qn"),
-        "cell",
-    )
-    # Same path contract as ann_ivf_topk (_ivf_scored); after the
-    # latest-batch dedup, pairs are unique by construction — one surviving
-    # cell per corpus vector × distinct probed cells.
-    scored = _ivf_scored(c, q, queries, max_query_rows, k=k)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
     )
 
 
@@ -1209,7 +1029,7 @@ def hard_negative_topk(
                 f"hard_negative_topk: anchor set exceeds max_anchor_rows={max_anchor_rows}. "
                 "The plan broadcasts the anchors side against every corpus row; "
                 "corpus-sized anchor sets need the IVF/LSH candidate path "
-                "(search_ivf_index / ann_lsh_topk + label filter), or pass "
+                "(ann_ivf_topk / ann_lsh_topk + label filter), or pass "
                 "max_anchor_rows=None to accept the unhinted quadratic join."
             )
     a = anchors.select(
@@ -2119,91 +1939,8 @@ def q172_bucket_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Product quantization (PQ): trained codebooks, asymmetric-distance top-k
+# Product quantization (PQ): asymmetric-distance top-k
 # --------------------------------------------------------------------------
-def pq_train(
-    corpus: DataFrame,
-    m: int = 8,
-    n_codes: int = 16,
-    n_iter: int = 3,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[list[float]]]:
-    """Train PQ codebooks (Jégou et al. 2011): split ``dim`` into ``m``
-    subspaces of ``dim//m`` and run Lloyd's per subspace → ``(m, n_codes,
-    dim//m)`` nested lists. The memory math at 100 TB: a 64-dim float
-    vector is 256 B; its PQ code is m bytes (8 here) — 32× smaller, so a
-    billion-vector index fits a handful of executors.
-
-    ALL subspaces train in the SAME fused Arrow pass per iteration (the
-    :func:`kmeans_centroids` shape with a ``sub`` key): per round the
-    corpus is read once, each batch emits (sub, cell, pos) partial
-    sums/counts, and the shuffle is m×n_codes×(dim/m)×batches partial
-    rows. m sequential per-subspace trainings would scan the corpus
-    m×n_iter times for identical output. Init picks the first ``n_codes``
-    rows by xxhash64(id) order (deterministic, layout-independent) and
-    slices them per subspace; empty cells keep their previous centroid.
-    """
-    ds = dim // m
-    if ds * m != dim:
-        raise ValueError(f"dim={dim} not divisible by m={m}")
-    init = (
-        corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .orderBy(F.xxhash64(F.col("id")), F.col("id"))
-        .limit(n_codes)
-        .collect()
-    )
-    if len(init) < n_codes:
-        raise ValueError(
-            f"pq_train: corpus has only {len(init)} rows but n_codes={n_codes} "
-            "codewords per subspace were requested"
-        )
-    # (m, K, ds): subspace s of codeword j = init row j sliced at s
-    cb = np.array(
-        [[list(r.v)[s * ds : (s + 1) * ds] for r in init] for s in range(m)],
-        dtype=np.float64,
-    )
-    vecs = corpus.select(F.col(vec_col).alias("v"))
-    for _ in range(n_iter):
-        def partials(batches, _cb=cb):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                x = np.array([np.asarray(v, dtype=np.float64) for v in pdf["v"]])
-                frames = []
-                for s in range(m):
-                    xs = x[:, s * ds : (s + 1) * ds]
-                    cn = (_cb[s] * _cb[s]).sum(axis=1)
-                    cells = np.argmin(cn[None, :] - 2.0 * (xs @ _cb[s].T), axis=1)
-                    for c in np.unique(cells):
-                        sel = xs[cells == c]
-                        sums = sel.sum(axis=0)
-                        frames.append(
-                            pd.DataFrame(
-                                {
-                                    "sub": np.full(ds, s, dtype=np.int32),
-                                    "cell": np.full(ds, c, dtype=np.int32),
-                                    "pos": np.arange(ds, dtype=np.int32),
-                                    "s": sums,
-                                    "n": np.full(ds, len(sel), dtype=np.int64),
-                                }
-                            )
-                        )
-                if frames:
-                    yield pd.concat(frames, ignore_index=True)
-
-        new = (
-            vecs.mapInPandas(partials, "sub int, cell int, pos int, s double, n long")
-            .groupBy("sub", "cell", "pos")
-            .agg((F.sum("s") / F.sum("n")).alias("mean"))
-            .collect()
-        )
-        for r in new:
-            cb[r.sub][r.cell][r.pos] = r.mean
-    return cb.tolist()
-
-
 def _pq_assign_np(x: np.ndarray, cb: np.ndarray) -> np.ndarray:
     """(rows, dim) × (m, K, ds) → (rows, m) int codes: per-subspace L2
     argmin via the expanded form ``argmin_j ||c_j||² − 2⟨x, c_j⟩`` (the
@@ -2217,27 +1954,6 @@ def _pq_assign_np(x: np.ndarray, cb: np.ndarray) -> np.ndarray:
         cn = (cb[s] * cb[s]).sum(axis=1)
         codes[:, s] = np.argmin(cn[None, :] - 2.0 * (xs @ cb[s].T), axis=1)
     return codes
-
-
-def pq_encode(
-    df: DataFrame,
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, codes): each vector reduced to its ``m`` codebook indices —
-    the persisted form of a PQ index (32× smaller than the float column
-    at m=8/dim=64). One numpy pass per Arrow batch."""
-    cb = np.array(codebooks, dtype=np.float64)
-
-    @F.pandas_udf("array<int>")
-    def enc(vs: pd.Series) -> pd.Series:
-        if len(vs) == 0:
-            return pd.Series([], dtype=object)
-        x = np.array([np.asarray(v, dtype=np.float64) for v in vs])
-        return pd.Series(list(_pq_assign_np(x, cb)))
-
-    return df.select(F.col(id_col).alias("id"), enc(F.col(vec_col)).alias("codes"))
 
 
 def seeded_int_codebooks(
@@ -2287,9 +2003,9 @@ def pq_adc_topk(
     ``quantize="sq8"`` runs the integer-exact gated configuration: both
     sides SQ8-quantized and the codebook integer-valued (see
     :func:`seeded_int_codebooks`), making the ranking hash-checkable
-    against the independent DuckDB twin (q173). ``"none"`` is the float
-    production path for TRAINED codebooks (:func:`pq_train`), whose
-    ranking quality is pinned by recall tests instead.
+    against the independent DuckDB twin (q173). ``"none"`` scores float
+    codebooks as given (trained offline, e.g. k-means per subspace); a
+    recall test pins its ranking quality with numpy-trained codebooks.
 
     Query ids must be unique — the ANN family contract (a repeated id
     would emit its top-k twice under one ``query_id``, inflating ranks).
@@ -2580,204 +2296,6 @@ def q174_ivf_pq_exhaustive_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ann_ivf_pq_topk(
         emb, queries, cb, k=5, nlist=16, nprobe=16, quantize="sq8"
     ).orderBy("query_id", "rank")
-
-
-def build_pq_index(
-    corpus: DataFrame,
-    path: str,
-    m: int = 8,
-    n_codes: int = 16,
-    n_iter: int = 3,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Persist a PQ index: the codes table + the codebook.
-
-    The serving layout of :func:`pq_adc_topk`: codebooks train once
-    (:func:`pq_train`), the corpus is encoded once, and what lands on
-    disk is ``{path}/codes`` — (id, codes), m small ints per vector, 32×
-    smaller than the float column at m=8/dim=64 — plus
-    ``{path}/codebook`` (m×n_codes×(dim/m) floats). A billion-vector
-    index is ~m GB of codes: small enough to cache in executor memory,
-    which is what makes ADC memory-bandwidth-bound rather than IO-bound.
-    Searches never read the float column at all.
-    """
-    cb = pq_train(
-        corpus, m=m, n_codes=n_codes, n_iter=n_iter, dim=dim, id_col=id_col, vec_col=vec_col
-    )
-    spark = corpus.sparkSession
-    cb_rows = [
-        (s, j, [float(x) for x in cw]) for s, book in enumerate(cb) for j, cw in enumerate(book)
-    ]
-    spark.createDataFrame(cb_rows, "sub int, code int, codeword array<double>").coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{path}/codebook")
-    # batch=-1 marks the base build; streaming appends land under their own
-    # batch partitions (_append_pq_batch) so replays are idempotent — the
-    # IVF index layout contract
-    pq_encode(corpus, cb, id_col=id_col, vec_col=vec_col).withColumn(
-        "batch", F.lit(-1)
-    ).write.mode("overwrite").partitionBy("batch").parquet(f"{path}/codes")
-
-
-def _append_pq_batch(
-    index_path: str,
-    codebooks: list[list[list[float]]],
-    batch_df: DataFrame,
-    batch_id: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Write one streaming micro-batch of codes, idempotently — the PQ
-    twin of :func:`_append_ivf_batch`: rows land under ``batch=<id>`` in
-    DYNAMIC overwrite mode, so an at-least-once foreachBatch replay
-    rewrites exactly its own partition instead of appending duplicates."""
-    (
-        pq_encode(batch_df, codebooks, id_col=id_col, vec_col=vec_col)
-        .withColumn("batch", F.lit(batch_id).cast("int"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(f"{index_path}/codes")
-    )
-
-
-def _load_pq_codebook(spark: SparkSession, path: str) -> list[list[list[float]]]:
-    rows = spark.read.parquet(f"{path}/codebook").collect()
-    m = 1 + max(r.sub for r in rows)
-    n_codes = 1 + max(r.code for r in rows)
-    cb: list[list[list[float]]] = [[None] * n_codes for _ in range(m)]  # type: ignore[list-item]
-    for r in rows:
-        cb[r.sub][r.code] = list(r.codeword)
-    return cb
-
-
-def stream_update_pq_index(
-    spark: SparkSession,
-    source_dir: str,
-    index_path: str,
-    checkpoint: str,
-    schema: str = "vec_id long, label string, embedding array<float>",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_files_per_trigger: int | None = None,
-):
-    """Incremental PQ index maintenance — the
-    :func:`stream_update_ivf_index` contract for the codes table: the
-    codebook stays FROZEN (re-training would re-map every committed
-    code; it's the periodic offline job, exactly like IVF centroids),
-    each micro-batch encodes its vectors with the same kernel as the
-    build and lands under its own ``batch=<id>`` partition. At-least-once
-    delivery + idempotent per-batch write = exactly-once index contents.
-    Returns the StreamingQuery (availableNow: drain pending files, stop).
-    """
-    cb = _load_pq_codebook(spark, index_path)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.json(source_dir)
-
-    def append_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _append_pq_batch(index_path, cb, batch_df, batch_id, id_col=id_col, vec_col=vec_col)
-
-    return (
-        stream.writeStream.foreachBatch(append_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def search_pq_index(
-    spark: SparkSession,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    query_id: str = "vec_id",
-    vec_col: str = "embedding",
-    max_query_rows: int | None = 100_000,
-) -> DataFrame:
-    """ADC top-k against a persisted PQ index — the query-time half of
-    :func:`build_pq_index`: load the codebook (m×n_codes rows), build the
-    per-query LUTs on the driver from the collected bounded query batch,
-    and stream the CODES table through the gather kernel. The float
-    column never enters the plan; the scan is the m-byte codes only.
-
-    Latest-batch-wins on re-ingested ids (the :func:`search_ivf_index`
-    contract): with >1 batch in the index, each id's max-batch row
-    survives; the single-batch fast path skips the dedup shuffle.
-    """
-    cb_rows = spark.read.parquet(f"{path}/codebook").collect()
-    m = 1 + max(r.sub for r in cb_rows)
-    n_codes = 1 + max(r.code for r in cb_rows)
-    ds = len(cb_rows[0].codeword)
-    cb = np.zeros((m, n_codes, ds), dtype=np.float64)
-    for r in cb_rows:
-        cb[r.sub][r.code] = r.codeword
-    if max_query_rows is not None:
-        n_q = queries.limit(max_query_rows + 1).count()
-        if n_q > max_query_rows:
-            raise ValueError(
-                f"search_pq_index: query set exceeds max_query_rows={max_query_rows}."
-            )
-    qrows = queries.select(F.col(query_id).alias("id"), F.col(vec_col).alias("v")).collect()
-    if not qrows:
-        schema = "query_id long, neighbor_id long, score double, rank int"
-        return spark.createDataFrame([], schema)
-    qm = np.array([np.asarray(list(r.v), dtype=np.float64) for r in qrows])
-    qids = np.array([r.id for r in qrows], dtype=np.int64)
-    lut = np.stack([cb[s] @ qm[:, s * ds : (s + 1) * ds].T for s in range(m)])
-
-    codes_df = spark.read.parquet(f"{path}/codes")
-    n_batches = codes_df.select("batch").distinct().limit(2).count()
-    if n_batches > 1:
-        wb = Window.partitionBy("id").orderBy(F.desc("batch"))
-        codes_df = (
-            codes_df.withColumn("_rn", F.row_number().over(wb))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-    codes_df = codes_df.select("id", "codes")  # prune: the scan is codes-only
-
-    def score_blocks(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cm = np.array([np.asarray(cs, dtype=np.int64) for cs in pdf["codes"]])
-            ids = pdf["id"].to_numpy(dtype=np.int64)
-            sc = np.zeros((len(cm), lut.shape[2]), dtype=np.float64)
-            for s in range(m):
-                sc += lut[s][cm[:, s]]
-            frames = []
-            for j, qid in enumerate(qids):
-                col = sc[:, j]
-                idx = np.nonzero(ids != qid)[0]
-                if len(idx) == 0:
-                    continue
-                order = np.lexsort((ids[idx], -col[idx]))[:k]
-                sel = idx[order]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.full(len(sel), qid, dtype=np.int64),
-                            "neighbor_id": ids[sel],
-                            "score": col[sel],
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    scored = codes_df.mapInPandas(
-        score_blocks, "query_id long, neighbor_id long, score double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("score", 6).alias("score"), "rank")
-    )
 
 
 def source_region_coverage(

@@ -821,7 +821,7 @@ def q75_cumulative_new_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Vanilla Spark has no MERGE without a table format; the engine-level
 # emulation is a full-outer join + COALESCE per column: updates win,
 # unmatched base rows persist, unmatched updates insert. One shuffle on
-# the key (or zero if both sides are bucketed on it — tests/test_joins).
+# the key (or zero if both sides are bucketed on it).
 @register(
     "q76_merge_upsert",
     oracle="""
@@ -4153,10 +4153,10 @@ def log_bucket_quantiles(events: DataFrame, value_col: str = "value") -> DataFra
     in any engine; a bucket b covers [2^(b−1), 2^b − 1] centi-units.
 
     BOUNDED window: cumulative counts over the per-type bucket histogram
-    (≤ 64 rows per type). The same histogram is what
-    :func:`~ai_batch_processing_spark.streaming.events.stream_log_bucket_quantiles`
-    carries as per-key state across micro-batches — this is its
-    hash-gated batch twin.
+    (≤ 64 rows per type). Bucket counts are commutative sums, so the
+    histogram merges across partitions or batches in any order;
+    ``streaming.events.stream_w1_value_drift`` carries the same buckets
+    as per-key state.
     """
     scaled = F.round(F.col(value_col) * 100).cast("long")
     b = (
@@ -4233,9 +4233,7 @@ def log_bucket_quantiles(events: DataFrame, value_col: str = "value") -> DataFra
         "portable log-bucket p50/p99 per event type: power-of-2 value "
         "buckets via bit length of the centi-scaled integer (libm-free, "
         "bounded <=64 buckets, mergeable) — the quantile representation "
-        "whose state survives streaming; stream_log_bucket_quantiles "
-        "carries the identical histogram across micro-batches "
-        "(pytest-pinned parity)."
+        "whose state survives streaming."
     ),
     tags=("analytics", "events", "stats", "sketch"),
 )

@@ -1,15 +1,17 @@
-"""Streaming slice: windowed aggregations over the events stream.
+"""Event windows: batch window queries plus test-gated streaming operators.
 
 The reference is batch-only with a socket.io progress side-channel
-(SURVEY.md §2.9); this module provides the Structured Streaming surface a
-real pipeline needs: tumbling / sliding / session windows with watermarks,
-plus a custom stateful operator (``applyInPandasWithState``).
+(SURVEY.md §2.9). The registered queries q52–q54 run the tumbling /
+sliding / session window shapes in BATCH mode over the events table —
+``F.window`` / ``F.session_window`` are batch-legal — so the window
+semantics are DuckDB-oracle-checked.
 
-Every window shape also runs in BATCH mode over the same table —
-``F.window`` / ``F.session_window`` are batch-legal — which is what the
-registered queries use, so the window semantics themselves are
-DuckDB-oracle-checked. The streaming wrappers reuse the identical
-expressions; tests drive them with a file source and ``availableNow``.
+The ``stream_*`` operators keep per-key state across micro-batches
+(running totals, sessions closed by an event-time timeout, SpaceSaving
+heavy hitters, W1 value drift) or dedup under a watermark; none has a
+registered batch twin with the same result. No registered query calls
+them: tests drive each with a file source and ``availableNow``. The
+reference's pause/resume LLM stream lives in ``llm_stream.py``.
 """
 
 from __future__ import annotations
@@ -26,35 +28,8 @@ from ai_batch_processing_spark.session import load_tables
 
 
 # --------------------------------------------------------------------------
-# shared window expressions (batch == streaming)
+# batch window expressions
 # --------------------------------------------------------------------------
-_DURATION_UNIT_MS = {
-    "millisecond": 1, "milliseconds": 1, "ms": 1,
-    "second": 1000, "seconds": 1000, "sec": 1000, "secs": 1000, "s": 1000,
-    "minute": 60_000, "minutes": 60_000, "min": 60_000, "mins": 60_000, "m": 60_000,
-    "hour": 3_600_000, "hours": 3_600_000, "h": 3_600_000,
-    "day": 86_400_000, "days": 86_400_000, "d": 86_400_000,
-}
-
-
-def _duration_ms(spec: str | int) -> int:
-    """Parse a Spark-style duration string ('30 minutes', '2 hours', '90
-    seconds') — or a bare int of seconds — into milliseconds. Assuming
-    minutes for every unit silently closed sessions at the wrong time
-    (round-1 advice)."""
-    if isinstance(spec, int):
-        return spec * 1000
-    parts = spec.strip().lower().split()
-    if len(parts) == 2 and parts[1] in _DURATION_UNIT_MS:
-        return int(parts[0]) * _DURATION_UNIT_MS[parts[1]]
-    if len(parts) == 1 and parts[0].isdigit():
-        return int(parts[0]) * 1000  # bare number = seconds
-    raise ValueError(
-        f"unparseable duration {spec!r}; use e.g. '30 minutes', '2 hours', "
-        "'90 seconds', or an integer number of seconds"
-    )
-
-
 def tumbling_counts(events: DataFrame, width: str = "1 hour") -> DataFrame:
     return (
         events.groupBy(F.window("ts", width).alias("win"), "event_type")
@@ -84,121 +59,6 @@ def session_counts(events: DataFrame, gap: str = "10 minutes") -> DataFrame:
             "n_events",
             "session_value",
         )
-    )
-
-
-# --------------------------------------------------------------------------
-# streaming wrappers
-# --------------------------------------------------------------------------
-def stream_tumbling_counts(
-    spark: SparkSession,
-    source_dir: str,
-    schema: str = "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    width: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """readStream → watermark → tumbling-window agg. Late rows beyond the
-    watermark are dropped; output mode 'append' emits finalized windows."""
-    stream = spark.readStream.schema(schema).json(source_dir)
-    return tumbling_counts(stream.withWatermark("ts", watermark), width)
-
-
-def stream_session_counts(
-    spark: SparkSession,
-    source_dir: str,
-    schema: str = "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    gap: str = "10 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    stream = spark.readStream.schema(schema).json(source_dir)
-    return session_counts(stream.withWatermark("ts", watermark), gap)
-
-
-def stream_running_totals(
-    spark: SparkSession,
-    source_dir: str,
-    schema: str = "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Custom stateful operator: per-user running totals via
-    ``applyInPandasWithState`` — the streaming analog of the reference's
-    per-group conversation state (SURVEY.md §1.1, main.py:327)."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = "user_id long, n_events long, total_value double"
-    state_schema = "n long, total double"
-
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((n, total))
-        yield pd.DataFrame([{"user_id": key[0], "n_events": n, "total_value": total}])
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.json(source_dir)
-    return (
-        stream.groupBy("user_id")
-        .applyInPandasWithState(
-            update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-        )
-    )
-
-
-def stream_running_totals_tws(
-    spark: SparkSession,
-    source_dir: str,
-    schema: str = "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """``stream_running_totals`` on Spark 4's ``transformWithStateInPandas``
-    — the successor API to ``applyInPandasWithState``: typed state
-    variables (ValueState here; ListState/MapState/timers available) on
-    the RocksDB state store instead of a single packed tuple on the HDFS
-    store. Output parity with the applyInPandasWithState twin is
-    test-pinned across micro-batches; both are kept because the old API
-    remains the compatibility surface while this is the forward one.
-
-    Requires ``spark.sql.streaming.stateStore.providerClass`` =
-    RocksDBStateStoreProvider (set per-query via the writeStream conf or
-    session-wide); the test sets it on the session. Capability gate: the
-    API's state server speaks protobuf over a local socket — environments
-    without a working ``google.protobuf`` fail at query start (the test
-    importorskips), which is why the ``applyInPandasWithState`` twin above
-    remains the always-available path.
-    """
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    out_schema = "user_id long, n_events long, total_value double"
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", "n long, total double")
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            n, total = self._state.get() if self._state.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._state.update((n, total))
-            yield pd.DataFrame(
-                [{"user_id": key[0], "n_events": n, "total_value": total}]
-            )
-
-        def close(self) -> None:
-            pass
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.json(source_dir)
-    return stream.groupBy("user_id").transformWithStateInPandas(
-        RunningTotals(), out_schema, "update", "None"
     )
 
 
@@ -290,55 +150,43 @@ def q54_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_counts(t["events"]).orderBy("user_id", "session_start")
 
 
-def stream_funnel_join(
+# --------------------------------------------------------------------------
+# streaming operators (test-gated: no registered query calls them)
+# --------------------------------------------------------------------------
+def stream_running_totals(
     spark: SparkSession,
     source_dir: str,
     schema: str = "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    within: str = "30 minutes",
-    watermark: str = "2 hours",
-    how: str = "inner",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """Stream-stream interval join: click → purchase within ``within``.
+    """Custom stateful operator: per-user running totals via
+    ``applyInPandasWithState`` — the streaming analog of the reference's
+    per-group conversation state (SURVEY.md §1.1, main.py:327)."""
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    The streaming twin of the batch funnel (q63). Both sides carry
-    watermarks so the join state store can evict: a click older than
-    watermark + within can never match a future purchase and is dropped.
-    Output: one row per (click, purchase) conversion pair.
+    out_schema = "user_id long, n_events long, total_value double"
+    state_schema = "n long, total double"
 
-    ``how="left_outer"`` additionally emits every NON-converting click
-    with null purchase columns — but only once the watermark has passed
-    the point where a future match is provably impossible (cts + within):
-    the null row is a watermark-expiry emission from the join state store,
-    appearing in the micro-batch where the state expires, not when the
-    click arrives. This is the funnel-abandonment stream (clicks that
-    never purchased) — computable exactly BECAUSE the interval bound plus
-    the watermark make "never" decidable with bounded state; an unbounded
-    left join could never retire a click.
-    """
-    if how not in ("inner", "left_outer"):
-        raise ValueError(f"how must be inner|left_outer, got {how!r}")
+    def update(
+        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        n, total = state.get if state.exists else (0, 0.0)
+        for pdf in pdfs:
+            n += len(pdf)
+            total += float(pdf["value"].sum())
+        state.update((n, total))
+        yield pd.DataFrame([{"user_id": key[0], "n_events": n, "total_value": total}])
+
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     stream = reader.json(source_dir)
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .select(F.col("user_id").alias("cu"), F.col("ts").alias("cts"))
-        .withWatermark("cts", watermark)
+    return (
+        stream.groupBy("user_id")
+        .applyInPandasWithState(
+            update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+        )
     )
-    buys = (
-        stream.filter(F.col("event_type") == "purchase")
-        .select(F.col("user_id").alias("pu"), F.col("ts").alias("pts"), "value")
-        .withWatermark("pts", watermark)
-    )
-    return clicks.join(
-        buys,
-        (F.col("pu") == F.col("cu"))
-        & (F.col("pts") > F.col("cts"))
-        & (F.col("pts") <= F.col("cts") + F.expr(f"INTERVAL {within}")),
-        how,
-    ).select(F.col("cu").alias("user_id"), "cts", "pts", "value")
 
 
 def stream_dedup_events(
@@ -378,23 +226,31 @@ def stream_dedup_events_within_watermark(
     return stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["event_id"])
 
 
-def stream_enrich_events(
-    spark: SparkSession,
-    source_dir: str,
-    dim: DataFrame,
-    on: str = "user_id",
-    schema: str = "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-) -> DataFrame:
-    """Stream-static enrichment: join each micro-batch against a batch dim.
+_DURATION_UNIT_MS = {
+    "millisecond": 1, "milliseconds": 1, "ms": 1,
+    "second": 1000, "seconds": 1000, "sec": 1000, "secs": 1000, "s": 1000,
+    "minute": 60_000, "minutes": 60_000, "min": 60_000, "mins": 60_000, "m": 60_000,
+    "hour": 3_600_000, "hours": 3_600_000, "h": 3_600_000,
+    "day": 86_400_000, "days": 86_400_000, "d": 86_400_000,
+}
 
-    The static side is broadcast (stateless — unlike stream-stream joins
-    there is no state store; every micro-batch re-joins against the dim as
-    of that batch). This is the streaming twin of the q02/q03 broadcast
-    dim joins: at 100 TB of stream, the dim rides along with each task and
-    the stream side never shuffles.
-    """
-    stream = spark.readStream.schema(schema).json(source_dir)
-    return stream.join(F.broadcast(dim), on=on, how="left")
+
+def _duration_ms(spec: str | int) -> int:
+    """Parse a Spark-style duration string ('30 minutes', '2 hours', '90
+    seconds') — or a bare int of seconds — into milliseconds. Assuming
+    minutes for every unit silently closed sessions at the wrong time
+    (round-1 advice)."""
+    if isinstance(spec, int):
+        return spec * 1000
+    parts = spec.strip().lower().split()
+    if len(parts) == 2 and parts[1] in _DURATION_UNIT_MS:
+        return int(parts[0]) * _DURATION_UNIT_MS[parts[1]]
+    if len(parts) == 1 and parts[0].isdigit():
+        return int(parts[0]) * 1000  # bare number = seconds
+    raise ValueError(
+        f"unparseable duration {spec!r}; use e.g. '30 minutes', '2 hours', "
+        "'90 seconds', or an integer number of seconds"
+    )
 
 
 def stream_user_sessions_with_timeout(
@@ -459,152 +315,6 @@ def stream_user_sessions_with_timeout(
     )
 
 
-def stream_cusum_drift(
-    spark: SparkSession,
-    source_dir: str,
-    k: float = 0.5,
-    h: float = 4.0,
-    schema: str = "event_type string, hour timestamp, z double",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming twin of q239's CUSUM drift detector: per event type, the
-    one-sided CUSUM over standardized hourly rates, carried across
-    micro-batches in two doubles of state (the prefix sum and its running
-    min — the same identity S_i = P_i − min(0, min_j P_j) the batch query
-    uses, so state is O(1) per key regardless of stream length).
-
-    Input rows are the standardized hourly aggregates (event_type, hour,
-    z); rows are processed in hour order WITHIN each micro-batch and the
-    source is expected to deliver batches in hour order per key (the
-    hourly-rollup producer's natural order) — a late hour would need the
-    watermarked-sort front end of stream_tumbling_counts first. Emits the
-    full trajectory row per hour with the same 4dp rounding as q239, so
-    a cross-batch run is value-identical to the batch query on the same
-    rows (pinned in tests/test_streaming.py).
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = (
-        "event_type string, hour timestamp, z double, cusum double, drifting boolean"
-    )
-    state_schema = "pf double, minpf double"
-
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        pf, minpf = state.get if state.exists else (0.0, 0.0)
-        out: list[dict[str, Any]] = []
-        # pdfs is an iterator of ARROW CHUNKS of one group's micro-batch —
-        # a key spanning multiple chunks would otherwise be folded in
-        # chunk-arrival order; collect and sort the whole batch once
-        frames = [pdf for pdf in pdfs if len(pdf)]
-        if frames:
-            from ai_batch_processing_spark.operators.similarity import _round_half_up
-
-            whole = pd.concat(frames, ignore_index=True).sort_values("hour")
-            for r in whole.itertuples():
-                pf += float(r.z) - k
-                minpf = min(minpf, pf)
-                # HALF_UP like the batch q239's F.round — Python round()
-                # is half-even, the exact divergence class on .5e-4 ties
-                s = float(_round_half_up(pf - min(0.0, minpf), 4))
-                out.append(
-                    {
-                        "event_type": key[0],
-                        "hour": r.hour,
-                        "z": float(r.z),
-                        "cusum": s,
-                        "drifting": s > h,
-                    }
-                )
-        state.update((pf, minpf))
-        yield pd.DataFrame(out, columns=["event_type", "hour", "z", "cusum", "drifting"])
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.json(source_dir)
-    return stream.groupBy("event_type").applyInPandasWithState(
-        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
-
-
-def stream_ewma_drift(
-    spark: SparkSession,
-    source_dir: str,
-    window: int = 16,
-    threshold: float = 1.0,
-    schema: str = "event_type string, hour timestamp, z double",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming twin of q248's dyadic EWMA drift detector: per event
-    type, the α=1/2 exponentially weighted level of standardized hourly
-    rates over the trailing ``window`` PRESENT hours, carried across
-    micro-batches in bounded state (the ≤window−1 most-recent (hour
-    epoch, z·10⁴) pairs — everything an exact dyadic dot product needs).
-
-    Value-identical to the batch self-join form: for each arriving hour
-    t the emitted level is Σ z4_j·2^(w−1−d_j) / (Σ 2^(w−1−d_j) · 10⁴)
-    over state entries with hour distance d_j < w plus the row itself —
-    integer numerator/denominator, one division, 6dp HALF_UP. Same
-    ordering contract as stream_cusum_drift (batches arrive in hour
-    order per key; each micro-batch is concat+sorted before the fold).
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = (
-        "event_type string, hour timestamp, z double, ewma_z double, drifting boolean"
-    )
-    state_schema = "hs array<long>, zs array<long>"
-
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        from ai_batch_processing_spark.operators.similarity import _round_half_up
-
-        hs, zs = state.get if state.exists else ([], [])
-        hist = list(zip(list(hs), list(zs)))  # [(epoch_sec, z4)]
-        out: list[dict[str, Any]] = []
-        frames = [pdf for pdf in pdfs if len(pdf)]
-        if frames:
-            whole = pd.concat(frames, ignore_index=True).sort_values("hour")
-            for r in whole.itertuples():
-                epoch = int(pd.Timestamp(r.hour).timestamp())
-                z4 = int(_round_half_up(float(r.z) * 10000, 0))
-                hist.append((epoch, z4))
-                # trim to entries within the window of the newest hour
-                hist = [e for e in hist if (epoch - e[0]) // 3600 < window]
-                num = 0
-                den = 0
-                for eh, ez in hist:
-                    d = (epoch - eh) // 3600
-                    w = 1 << (window - 1 - d)
-                    num += ez * w
-                    den += w
-                ew = float(_round_half_up(num * 1.0 / (den * 10000.0), 6))
-                out.append(
-                    {
-                        "event_type": key[0],
-                        "hour": r.hour,
-                        "z": float(r.z),
-                        "ewma_z": ew,
-                        "drifting": abs(num * 1.0 / (den * 10000.0)) > threshold,
-                    }
-                )
-        state.update(([e[0] for e in hist], [e[1] for e in hist]))
-        yield pd.DataFrame(
-            out, columns=["event_type", "hour", "z", "ewma_z", "drifting"]
-        )
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.json(source_dir)
-    return stream.groupBy("event_type").applyInPandasWithState(
-        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
-
-
 def spacesaving_fold(
     items: "pd.Series", counters: dict[int, int], m: int
 ) -> dict[int, int]:
@@ -647,10 +357,10 @@ def stream_heavy_hitters(
     (event_type, user_id, cnt) rows. Determinism: the fold order inside
     a micro-batch is pinned by sorting the batch on (ts, event_id) —
     ``pdfs`` is an iterator of Arrow CHUNKS, so the chunks are
-    concatenated FIRST and sorted as one frame (the round-6
-    stream_cusum lesson); eviction ties are fully specified in
-    :func:`spacesaving_fold`. Batch parity is pytest-pinned against a
-    single-sweep fold of the same rows.
+    concatenated FIRST and sorted as one frame, or a key spanning
+    several chunks would fold in chunk-arrival order; eviction ties are
+    fully specified in :func:`spacesaving_fold`. Batch parity is
+    pytest-pinned against a single-sweep fold of the same rows.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -686,147 +396,6 @@ def stream_heavy_hitters(
     )
 
 
-def stream_hll_distinct(
-    spark: SparkSession,
-    source_dir: str,
-    schema: str = "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Per-event-type distinct-user estimate under BOUNDED state: the
-    q290 portable HyperLogLog's 256 registers maintained across
-    micro-batches with ``applyInPandasWithState`` — "how many distinct
-    users per event type, forever" in 256 longs per key where an exact
-    streaming distinct would hold every user id. Register max is
-    order-insensitive and idempotent, so the cross-batch fold needs no
-    ordering pin at all (unlike CUSUM/SpaceSaving) and replays merge
-    cleanly — the property that makes HLL THE production streaming
-    cardinality sketch.
-
-    Output per key per batch: ``(event_type, n_occupied, estimate)``
-    with the estimate assembled by the same dyadic-exact formula as the
-    batch :func:`~ai_batch_processing_spark.operators.sketches.hll_estimate`
-    (pytest-pinned parity against the batch registers on the same keys).
-    """
-    import hashlib
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from ai_batch_processing_spark.operators.sketches import _HLL_M, _HLL_WBITS
-
-    out_schema = "event_type string, n_occupied long, estimate double"
-    state_schema = "regs array<long>"
-
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        regs = list(state.get[0]) if state.exists else [0] * _HLL_M
-        for p in pdfs:
-            # dropna: a null/NaN user_id must be skipped, matching the
-            # batch twin where md5(null key) yields null and the row drops
-            for uid in p["user_id"].dropna():
-                h = int(hashlib.md5(str(int(uid)).encode()).hexdigest()[:8], 16)
-                bucket, w = h >> _HLL_WBITS, h % (1 << _HLL_WBITS)
-                rho = (_HLL_WBITS + 1) - w.bit_length() if w > 0 else _HLL_WBITS + 1
-                if rho > regs[bucket]:
-                    regs[bucket] = rho
-        state.update(([int(r) for r in regs],))
-        occupied = [r for r in regs if r > 0]
-        v = _HLL_M - len(occupied)
-        inv = sum(2.0 ** -r for r in occupied)
-        alpha = 0.7213 / (1.0 + 1.079 / _HLL_M)
-        raw = (alpha * float(_HLL_M) * _HLL_M) / (inv + float(v))
-        import math
-
-        est = (
-            round(_HLL_M * math.log(_HLL_M / float(v)), 6)
-            if (raw <= 2.5 * _HLL_M and v > 0)
-            else round(raw, 6)
-        )
-        yield pd.DataFrame(
-            [{"event_type": key[0], "n_occupied": len(occupied), "estimate": est}],
-            columns=["event_type", "n_occupied", "estimate"],
-        )
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.json(source_dir)
-    return stream.groupBy("event_type").applyInPandasWithState(
-        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
-
-
-def stream_log_bucket_quantiles(
-    spark: SparkSession,
-    source_dir: str,
-    schema: str = "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Per-event-type p50/p99 log-buckets under BOUNDED state: the q326
-    power-of-2 histogram (≤ 64 long counters per key) maintained across
-    micro-batches with ``applyInPandasWithState`` — "which order of
-    magnitude is p99 in, forever" where an exact streaming percentile
-    would hold every value. Bucket counts are commutative sums, so the
-    cross-batch fold needs no ordering pin (the HLL property) and the
-    final batch's output equals the batch twin on the same rows
-    (pytest-pinned parity including the null/NaN/<=0 drop rule).
-
-    Output per key per batch mirrors q326's row:
-    ``(event_type, n, p50_bucket, p50_lo, p50_hi, p99_bucket, p99_lo,
-    p99_hi)``.
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = (
-        "event_type string, n long, p50_bucket long, p50_lo double, p50_hi double, "
-        "p99_bucket long, p99_lo double, p99_hi double"
-    )
-    state_schema = "buckets array<long>"
-    NB = 64
-
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        counts = list(state.get[0]) if state.exists else [0] * NB
-        for p in pdfs:
-            for v in p["value"].dropna():
-                s = int(round(v * 100))
-                if s <= 0:
-                    continue
-                counts[min(s.bit_length(), NB) - 1] += 1
-        state.update(([int(c) for c in counts],))
-        n = sum(counts)
-        if n == 0:
-            return
-        def pick(p: int) -> int:
-            ck = 0
-            for i, c in enumerate(counts):
-                ck += c
-                if ck * 100 >= n * p:
-                    return i + 1
-            return NB
-        b50, b99 = pick(50), pick(99)
-        row = {
-            "event_type": key[0],
-            "n": n,
-            "p50_bucket": b50,
-            "p50_lo": round((1 << (b50 - 1)) / 100.0, 6),
-            "p50_hi": round(((1 << b50) - 1) / 100.0, 6),
-            "p99_bucket": b99,
-            "p99_lo": round((1 << (b99 - 1)) / 100.0, 6),
-            "p99_hi": round(((1 << b99) - 1) / 100.0, 6),
-        }
-        yield pd.DataFrame([row], columns=list(row))
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.json(source_dir)
-    return stream.groupBy("event_type").applyInPandasWithState(
-        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
-
-
 def stream_w1_value_drift(
     spark: SparkSession,
     source_dir: str,
@@ -843,13 +412,13 @@ def stream_w1_value_drift(
 
     This is the streaming alarm for "this metric's distribution moved
     this batch" that per-quantile monitors blur: a shift spread across
-    many buckets raises W1 in proportion to distance moved, while p50/p99
-    (stream_log_bucket_quantiles) can sit still. State is the ≤64-long
+    many buckets raises W1 in proportion to distance moved, while the
+    q326 p50/p99 buckets can sit still. State is the ≤64-long
     cumulative histogram — bounded forever, commutative within a batch;
     only the batch BOUNDARY ordering is semantic (each emission compares
     consecutive snapshots). The first batch has no before-distribution:
     ``n_before = 0`` and W1 is NULL (the q340 degenerate guard).
-    Cross-batch parity with the batch-side histogram is pytest-pinned.
+    A two-batch test pins the emissions against hand-computed values.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -891,72 +460,5 @@ def stream_w1_value_drift(
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     stream = reader.json(source_dir)
     return stream.groupBy("event_type").applyInPandasWithState(
-        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
-
-
-def stream_markov_transitions(
-    spark: SparkSession,
-    source_dir: str,
-    schema: str = "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """q334's per-user Markov transition counts maintained across
-    micro-batches: per-user state is (last event's (ts, event_id, type) +
-    the cumulative transition-count dict), so a session that straddles a
-    batch boundary still yields the boundary transition — the stateful
-    piece a tumbling window cannot express. Emits each user's cumulative
-    ``(user_id, prev_etype, next_etype, n_trans)`` rows per batch; the
-    cross-user matrix is the tiny downstream fold the batch twin's grid
-    aggregate performs (pytest-pinned parity on the final rows).
-
-    Ordering contract (the stream_cusum convention): rows are sorted by
-    (ts, event_id) INSIDE each batch, and the file source must deliver
-    batches in time order (``maxFilesPerTrigger=1`` over time-named
-    files) — same-user rows split across out-of-order batches would link
-    transitions differently from the batch twin, which sees a global
-    order.
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = "user_id long, prev_etype string, next_etype string, n_trans long"
-    state_schema = "last_etype string, pairs array<string>, counts array<long>"
-
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            last, pair_keys, pair_counts = state.get
-            counts = dict(zip(list(pair_keys), [int(c) for c in pair_counts]))
-        else:
-            last, counts = None, {}
-        batch = pd.concat(list(pdfs))
-        if len(batch):
-            batch = batch.sort_values(["ts", "event_id"])
-            for et in batch["event_type"]:
-                if last is not None:
-                    k = f"{last}\x00{et}"
-                    counts[k] = counts.get(k, 0) + 1
-                last = et
-        keys = sorted(counts)
-        state.update((last, keys, [counts[k] for k in keys]))
-        if not counts:
-            return
-        rows = [
-            {
-                "user_id": key[0],
-                "prev_etype": k.split("\x00")[0],
-                "next_etype": k.split("\x00")[1],
-                "n_trans": counts[k],
-            }
-            for k in keys
-        ]
-        yield pd.DataFrame(rows, columns=["user_id", "prev_etype", "next_etype", "n_trans"])
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.json(source_dir)
-    return stream.groupBy("user_id").applyInPandasWithState(
         update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )

@@ -60,3 +60,10 @@ def test_no_artifacts_means_never_gated(tmp_path, monkeypatch):
     rest = [n for n in specs if not specs[n].bench and n not in TOUCHED]
     rest.sort(key=lambda n: registry._QUERY_MODULES.index(specs[n].fn.__module__))
     assert names[-len(rest) :] == rest
+
+
+def test_registered_query_count_is_pinned():
+    # a deletion that drops a registered query, or its oracle, fails here
+    specs = load_all()
+    assert len(specs) == 345
+    assert sum(s.oracle is not None for s in specs.values()) == 338

@@ -132,32 +132,6 @@ def test_ivf_centroids_deterministic(spark, sf_dir):
     assert c1 == c2
 
 
-def test_ivf_persisted_index_matches_oneshot_and_prunes(spark, sf_dir, tmp_path):
-    """build_ivf_index + search_ivf_index == ann_ivf_topk (same centroids),
-    and the corpus scan reads only the probed cell partitions."""
-    from ai_batch_processing_spark.operators.similarity import (
-        ann_ivf_topk,
-        build_ivf_index,
-        search_ivf_index,
-    )
-    from ai_batch_processing_spark.session import load_tables
-
-    emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
-    queries = emb.filter(emb.vec_id < 8)
-    idx = str(tmp_path / "ivf")
-    build_ivf_index(emb, idx, nlist=8)  # n_iter default matches ann_ivf_topk
-
-    got = search_ivf_index(spark, idx, queries, k=5, nprobe=2)
-    want = ann_ivf_topk(emb, queries, k=5, nlist=8, nprobe=2)
-    as_set = lambda df: {tuple(r) for r in df.collect()}
-    assert as_set(got) == as_set(want)
-
-    # partition pruning: the executed scan must not read all 8 cell dirs.
-    got.collect()
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "cell" in plan
-
-
 def test_semantic_dedup_clusters_planted_duplicates(spark):
     from ai_batch_processing_spark.operators.similarity import semantic_dedup_clusters
 
@@ -235,91 +209,6 @@ def test_hard_negatives_never_share_anchor_label(spark, sf_dir):
         assert 1 <= r.rank <= 5
 
 
-def test_stream_update_ivf_index_new_vectors_searchable(spark, sf_dir, tmp_path):
-    """Streaming index maintenance: vectors arriving after the build must
-    land in their cells (dynamic partition append, frozen centroids) and
-    be found by a subsequent search; a restart from the same checkpoint
-    must not re-append committed batches."""
-    import json as _json
-
-    from ai_batch_processing_spark.operators.similarity import (
-        build_ivf_index,
-        search_ivf_index,
-        stream_update_ivf_index,
-    )
-    from ai_batch_processing_spark.session import load_tables
-
-    emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
-    base = emb.filter(F.col("vec_id") < 400)
-    idx = str(tmp_path / "ivf")
-    build_ivf_index(base, idx, nlist=8)
-    n0 = spark.read.parquet(f"{idx}/corpus").count()
-
-    # stream in 2 files of later vectors, including an exact copy of an
-    # existing vector under a new id (its top-1 neighbor by construction)
-    probe = emb.filter(F.col("vec_id") == 3).select("embedding").first().embedding
-    newbies = [r.asDict() for r in emb.filter((F.col("vec_id") >= 400) & (F.col("vec_id") < 420)).collect()]
-    clone = {"vec_id": 999_999, "label": "x", "embedding": [float(x) for x in probe]}
-    src = tmp_path / "vec_in"
-    src.mkdir()
-
-    def ser(rows):
-        return "\n".join(_json.dumps({**r, "embedding": [float(x) for x in r["embedding"]]}) for r in rows)
-
-    (src / "a.json").write_text(ser(newbies[:10]))
-    (src / "b.json").write_text(ser(newbies[10:] + [clone]))
-    ckpt = str(tmp_path / "ckpt_ivf")
-    q = stream_update_ivf_index(spark, str(src), idx, ckpt, max_files_per_trigger=1)
-    q.awaitTermination(120)
-    assert spark.read.parquet(f"{idx}/corpus").count() == n0 + 21
-
-    queries = emb.filter(F.col("vec_id") == 3)
-    hits = search_ivf_index(spark, idx, queries, k=3, nprobe=8).collect()
-    assert 999_999 in {r.neighbor_id for r in hits}  # the clone surfaces
-    assert hits[0].score == 1.0  # identical vector, cosine 1
-
-    # restart with the same checkpoint: nothing pending → nothing appended
-    q2 = stream_update_ivf_index(spark, str(src), idx, ckpt, max_files_per_trigger=1)
-    q2.awaitTermination(120)
-    assert spark.read.parquet(f"{idx}/corpus").count() == n0 + 21
-
-
-def test_append_ivf_batch_replay_idempotent(spark, sf_dir, tmp_path):
-    """foreachBatch is at-least-once: a replayed batch (same batch_id) must
-    rewrite its own batch partitions, not append duplicates — the
-    exactly-once-contents contract of the streaming index maintenance."""
-    from ai_batch_processing_spark.operators.similarity import (
-        _append_ivf_batch,
-        build_ivf_index,
-        search_ivf_index,
-    )
-    from ai_batch_processing_spark.session import load_tables
-
-    emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
-    base = emb.filter(F.col("vec_id") < 400)
-    idx = str(tmp_path / "ivf")
-    build_ivf_index(base, idx, nlist=8)
-    n0 = spark.read.parquet(f"{idx}/corpus").count()
-    centroids = [
-        list(r.centroid)
-        for r in spark.read.parquet(f"{idx}/centroids").orderBy("cell").collect()
-    ]
-    batch = emb.filter((F.col("vec_id") >= 400) & (F.col("vec_id") < 420))
-
-    _append_ivf_batch(idx, centroids, batch, batch_id=7)
-    assert spark.read.parquet(f"{idx}/corpus").count() == n0 + 20
-    # crash-replay of the SAME batch: contents unchanged
-    _append_ivf_batch(idx, centroids, batch, batch_id=7)
-    assert spark.read.parquet(f"{idx}/corpus").count() == n0 + 20
-    # a genuinely new batch still lands
-    batch2 = emb.filter((F.col("vec_id") >= 420) & (F.col("vec_id") < 425))
-    _append_ivf_batch(idx, centroids, batch2, batch_id=8)
-    assert spark.read.parquet(f"{idx}/corpus").count() == n0 + 25
-    # and the index stays searchable across base + both batches
-    queries = emb.filter(F.col("vec_id") == 3)
-    assert len(search_ivf_index(spark, idx, queries, k=3, nprobe=8).collect()) == 3
-
-
 def test_hard_negative_topk_anchor_cardinality_guard(spark, sf_dir):
     """The broadcast-anchors plan must fail fast on corpus-sized anchor
     sets (mirrors _probe_join's max_query_rows contract), and still run
@@ -338,48 +227,6 @@ def test_hard_negative_topk_anchor_cardinality_guard(spark, sf_dir):
         .collect()
     )
     assert [tuple(r) for r in guarded] == [tuple(r) for r in unhinted]
-
-
-# ---------------------------------------------------------------------------
-# recall_config: one API over the approximate operators' tuning knobs
-# ---------------------------------------------------------------------------
-def test_recall_config_ivf_maps_targets_to_published_nprobe():
-    from ai_batch_processing_spark.operators.tuning import recall_config
-
-    assert recall_config("ivf", 0.5) == {"nlist": 16, "nprobe": 4}
-    assert recall_config("ivf", 0.9) == {"nlist": 16, "nprobe": 12}
-    assert recall_config("ivf", 0.95) == {"nlist": 16, "nprobe": 16}
-    assert recall_config("ivf", 1.0) == {"nlist": 16, "nprobe": 16}  # exhaustive = q133
-
-
-def test_recall_config_lsh_and_bounds():
-    import pytest as _pytest
-
-    from ai_batch_processing_spark.operators.tuning import recall_config
-
-    assert recall_config("lsh", 0.9)["probe_hamming"] == 0
-    assert recall_config("lsh", 0.99)["probe_hamming"] == 4  # exhaustive = q134
-    with _pytest.raises(ValueError, match="recall_target"):
-        recall_config("ivf", 0.0)
-    with _pytest.raises(ValueError, match="unknown kind"):
-        recall_config("simhash", 0.9)
-
-
-def test_recall_config_minhash_analytic_band_choice():
-    from ai_batch_processing_spark.operators.tuning import (
-        minhash_banding_recall,
-        recall_config,
-    )
-
-    # fewest/widest bands whose analytic recall at J=0.5 meets the target
-    cfg = recall_config("minhash", 0.999, threshold=0.5, num_perm=64)
-    assert cfg == {"num_perm": 64, "bands": 32}  # r=2: 1-(0.75)^32 ≈ 0.9999
-    got = minhash_banding_recall(0.5, 64, cfg["bands"])
-    assert got >= 0.999
-    # wider bands (smaller b) must NOT meet it — the choice is minimal
-    assert minhash_banding_recall(0.5, 64, 16) < 0.999
-    # a recall-1 demand lands on the q131 oracle configuration
-    assert recall_config("minhash", 1.0, threshold=0.5)["bands"] == 64
 
 
 # ---------------------------------------------------------------------------
@@ -549,43 +396,6 @@ def test_cosine_topk_sq8_query_cardinality_guard(spark, sf_dir):
     assert cosine_topk_sq8(emb, small, k=2, max_query_rows=None).count() == 8
 
 
-def test_search_ivf_index_reingest_latest_batch_wins(spark, sf_dir, tmp_path):
-    """ADVICE r4: the same vec_id re-ingested in a LATER batch (an update,
-    not a replay) must appear at most once in search results, scored by
-    its latest vector — not occupy two ranks."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from ai_batch_processing_spark.operators.similarity import (
-        _append_ivf_batch,
-        build_ivf_index,
-        search_ivf_index,
-    )
-    from ai_batch_processing_spark.session import load_tables
-
-    emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
-    base = emb.filter(F.col("vec_id") < 400)
-    idx = str(tmp_path / "ivf")
-    build_ivf_index(base, idx, nlist=8)
-    centroids = [
-        list(r.centroid)
-        for r in spark.read.parquet(f"{idx}/centroids").orderBy("cell").collect()
-    ]
-    # update vec_id 7 to be an exact clone of vec_id 3's vector
-    target = emb.filter(F.col("vec_id") == 3).first().embedding
-    upd = spark.createDataFrame(
-        [(7, "upd", [float(x) for x in target])],
-        "vec_id long, label string, embedding array<float>",
-    )
-    _append_ivf_batch(idx, centroids, upd, batch_id=1)
-
-    queries = emb.filter(F.col("vec_id") == 3)
-    hits = search_ivf_index(spark, idx, queries, k=5, nprobe=8).collect()
-    sevens = [r for r in hits if r.neighbor_id == 7]
-    assert len(sevens) == 1, f"vec_id 7 at {len(sevens)} ranks: {hits}"
-    assert sevens[0].score == 1.0  # scored by the updated (cloned) vector
-
-
 def test_random_projection_preserves_neighbors(spark, sf_dir):
     """JL property on real data: top-5 cosine neighbors computed in the
     16-dim projected space must recall a solid majority of the exact
@@ -683,62 +493,36 @@ def _normed_emb(spark, sf="/root/testdata/sf0.001"):
     )
 
 
-def test_pq_encode_matches_numpy_reference(spark):
+def _trained_codebooks(X, m, n_codes, n_iter):
+    """Float PQ codebooks for the ``quantize="none"`` ADC path: Lloyd's
+    k-means per subspace in numpy, seeded with the first ``n_codes`` rows
+    (empty cells keep their codeword)."""
     import numpy as np
 
-    from ai_batch_processing_spark.operators.similarity import (
-        _pq_assign_np,
-        pq_encode,
-        seeded_int_codebooks,
-    )
+    from ai_batch_processing_spark.operators.similarity import _pq_assign_np
 
-    df = _normed_emb(spark).limit(100).persist()
-    cb = np.array(seeded_int_codebooks(64, 8, 16, seed=5))
-    got = {r.id: list(r.codes) for r in pq_encode(df, cb.tolist()).collect()}
-    rows = df.collect()
-    X = np.array([list(r.embedding) for r in rows])
-    want = _pq_assign_np(X, cb)
-    for i, r in enumerate(rows):
-        assert got[r.vec_id] == list(want[i])
-    assert all(0 <= c < 16 for codes in got.values() for c in codes)
-    df.unpersist()
-
-
-def test_pq_train_reduces_quantization_error(spark):
-    import numpy as np
-
-    from ai_batch_processing_spark.operators.similarity import _pq_assign_np, pq_train
-
-    df = _normed_emb(spark).persist()
-    rows = df.collect()
-    X = np.array([list(r.embedding) for r in rows])
-    m, K, ds = 8, 16, 8
-    # init = what pq_train starts from: first-K rows by xxhash64 order;
-    # easier equivalent floor: ANY fixed slice-based codebook
-    init = np.array([[X[j][s * ds : (s + 1) * ds] for j in range(K)] for s in range(m)])
-    trained = np.array(pq_train(df, m=m, n_codes=K, n_iter=3))
-
-    def err(cbm):
-        codes = _pq_assign_np(X, cbm)
-        return sum(
-            float(((X[:, s * ds : (s + 1) * ds] - cbm[s][codes[:, s]]) ** 2).sum())
-            for s in range(m)
-        )
-
-    assert err(trained) < err(init)
-    df.unpersist()
+    ds = X.shape[1] // m
+    cb = np.array([[X[j, s * ds : (s + 1) * ds] for j in range(n_codes)] for s in range(m)])
+    for _ in range(n_iter):
+        codes = _pq_assign_np(X, cb)
+        for s in range(m):
+            for c in range(n_codes):
+                sel = X[codes[:, s] == c, s * ds : (s + 1) * ds]
+                if len(sel):
+                    cb[s, c] = sel.mean(axis=0)
+    return cb.tolist()
 
 
 def test_pq_adc_recall_vs_bruteforce(spark):
     import numpy as np
 
-    from ai_batch_processing_spark.operators.similarity import pq_adc_topk, pq_train
+    from ai_batch_processing_spark.operators.similarity import pq_adc_topk
 
     df = _normed_emb(spark).persist()
-    rows = df.collect()
+    rows = sorted(df.collect(), key=lambda r: r.vec_id)
     ids = np.array([r.vec_id for r in rows])
     X = np.array([list(r.embedding) for r in rows])
-    cb = pq_train(df, m=16, n_codes=64, n_iter=3)
+    cb = _trained_codebooks(X, m=16, n_codes=64, n_iter=3)
     qs = df.filter("vec_id < 20")
     pq = pq_adc_topk(df, qs, cb, k=10).collect()
     rec = []
@@ -771,14 +555,11 @@ def test_pq_adc_topk_query_guard(spark):
 def test_ivf_pq_pruned_recall_vs_exhaustive(spark):
     import numpy as np
 
-    from ai_batch_processing_spark.operators.similarity import (
-        ann_ivf_pq_topk,
-        pq_adc_topk,
-        pq_train,
-    )
+    from ai_batch_processing_spark.operators.similarity import ann_ivf_pq_topk, pq_adc_topk
 
     df = _normed_emb(spark).persist()
-    cb = pq_train(df, m=16, n_codes=16, n_iter=2)
+    X = np.array([list(r.embedding) for r in sorted(df.collect(), key=lambda r: r.vec_id)])
+    cb = _trained_codebooks(X, m=16, n_codes=16, n_iter=2)
     qs = df.filter("vec_id < 10")
     exact = pq_adc_topk(df, qs, cb, k=5).collect()
     pruned = ann_ivf_pq_topk(df, qs, cb, k=5, nlist=8, nprobe=4).collect()
@@ -806,93 +587,6 @@ def test_ivf_pq_rejects_unbounded_queries(spark):
     cb = seeded_int_codebooks(64, 8, 16)
     with pytest.raises(ValueError, match="bounded query batches"):
         ann_ivf_pq_topk(df, df, cb, max_query_rows=None)
-
-
-def test_pq_index_roundtrip_matches_inline_adc(tmp_path, spark):
-    from ai_batch_processing_spark.operators.similarity import (
-        build_pq_index,
-        pq_adc_topk,
-        search_pq_index,
-    )
-
-    df = _normed_emb(spark).persist()
-    path = str(tmp_path / "pq_index")
-    build_pq_index(df, path, m=8, n_codes=16, n_iter=2)
-    qs = df.filter("vec_id < 10")
-    got = search_pq_index(spark, path, qs, k=5).collect()
-    # the persisted index must reproduce the inline path under the SAME
-    # codebook — read it back from disk (retraining could drift in the
-    # last ulp through partial-sum aggregation order)
-    rows = spark.read.parquet(f"{path}/codebook").collect()
-    cb = [[None] * 16 for _ in range(8)]
-    for r in rows:
-        cb[r.sub][r.code] = list(r.codeword)
-    want = pq_adc_topk(df, qs, cb, k=5).collect()
-    assert {(r.query_id, r.neighbor_id, r.score, r.rank) for r in got} == {
-        (r.query_id, r.neighbor_id, r.score, r.rank) for r in want
-    }
-    # and the index directory must not contain the float column
-    codes = spark.read.parquet(f"{path}/codes")
-    assert set(codes.columns) == {"id", "codes", "batch"}  # batch = index layout key
-    df.unpersist()
-
-
-def test_stream_update_pq_index_and_reingest_dedup(spark, tmp_path):
-    """PQ streaming maintenance: new vectors land under their batch
-    partitions (frozen codebook), replays are idempotent, and a vec_id
-    re-ingested in a LATER batch appears at most once in search results
-    (latest-batch-wins — the search_ivf_index contract)."""
-    import json as _json
-
-    from ai_batch_processing_spark.operators.similarity import (
-        _append_pq_batch,
-        _load_pq_codebook,
-        build_pq_index,
-        search_pq_index,
-        stream_update_pq_index,
-    )
-
-    df = _normed_emb(spark).persist()
-    base = df.filter("vec_id < 400").withColumnRenamed("vec_id", "vec_id")
-    idx = str(tmp_path / "pq")
-    build_pq_index(base, idx, m=8, n_codes=16, n_iter=2)
-    n0 = spark.read.parquet(f"{idx}/codes").count()
-
-    probe = df.filter("vec_id = 3").select("embedding").first().embedding
-    newbies = [
-        {"vec_id": int(r.vec_id), "label": "x", "embedding": [float(x) for x in r.embedding]}
-        for r in df.filter("vec_id >= 400 AND vec_id < 420").collect()
-    ]
-    clone = {"vec_id": 999_999, "label": "x", "embedding": [float(x) for x in probe]}
-    src = tmp_path / "pq_in"
-    src.mkdir()
-    (src / "a.json").write_text("\n".join(_json.dumps(r) for r in newbies[:10]))
-    (src / "b.json").write_text("\n".join(_json.dumps(r) for r in newbies[10:] + [clone]))
-    ckpt = str(tmp_path / "ckpt_pq")
-    q = stream_update_pq_index(spark, str(src), idx, ckpt, max_files_per_trigger=1)
-    q.awaitTermination(120)
-    assert spark.read.parquet(f"{idx}/codes").count() == n0 + 21
-
-    queries = df.filter("vec_id = 3")
-    hits = search_pq_index(spark, idx, queries, k=3).collect()
-    # the clone shares vec 3's codes exactly -> ties vec 3's own ADC score
-    assert 999_999 in {r.neighbor_id for r in hits}
-
-    # restart with the same checkpoint: nothing pending, nothing appended
-    q2 = stream_update_pq_index(spark, str(src), idx, ckpt, max_files_per_trigger=1)
-    q2.awaitTermination(120)
-    assert spark.read.parquet(f"{idx}/codes").count() == n0 + 21
-
-    # re-ingest vec_id 5 in a later batch: search must return it ONCE
-    cb = _load_pq_codebook(spark, idx)
-    _append_pq_batch(idx, cb, df.filter("vec_id = 5"), batch_id=99)
-    out = search_pq_index(spark, idx, df.filter("vec_id = 7"), k=400).collect()
-    assert sum(1 for r in out if r.neighbor_id == 5) == 1
-    # and replaying that batch is a no-op
-    n1 = spark.read.parquet(f"{idx}/codes").count()
-    _append_pq_batch(idx, cb, df.filter("vec_id = 5"), batch_id=99)
-    assert spark.read.parquet(f"{idx}/codes").count() == n1
-    df.unpersist()
 
 
 def test_source_region_coverage_narrow_vs_spread(spark):
