@@ -22,9 +22,14 @@ Spark mapping:
   the socket.io emit.
 - rate/ETA (main.py:653-657) derive from completed-task counts and
   wall-clock, same arithmetic as the reference.
-- materialised intermediates = :func:`pin`: a frame pinned while a job
-  runs is released when the job ends (:func:`pin_scope`), so a
-  long-lived registry session accumulates no checkpoint blocks.
+- materialised intermediates, two kinds, one release path:
+  :func:`pin` stores rows that must be computed exactly once (an LLM
+  call's responses, a row numbering); :func:`cache` keeps a scratch frame
+  that several branches read in Spark's columnar cache, which may be
+  recomputed if evicted. Both are released when the enclosing
+  :func:`pin_scope` closes (a job, a stream batch, a query, or an operator
+  that stores its result before it returns), so a long-lived registry
+  session accumulates no blocks.
 """
 
 from __future__ import annotations
@@ -67,25 +72,54 @@ def pin(df: DataFrame) -> DataFrame:
     return pinned
 
 
+def cache(df: DataFrame) -> DataFrame:
+    """Keep ``df`` in Spark's columnar cache (``persist()``, memory and
+    disk) for the several branches that read it.
+
+    This is for scratch frames that are cheap to recompute: a read of
+    cached columns prunes to the columns it needs, and evicted blocks are
+    rebuilt from the plan. Rows that must never be recomputed go through
+    :func:`pin` instead.
+
+    Inside a :func:`pin_scope` on this thread the frame is recorded and
+    unpersisted when the scope closes; outside one, it stays cached until
+    the session's cache is cleared.
+    """
+    df.persist()
+    cached = getattr(_SCOPE, "cached", None)
+    if cached is not None:
+        cached.append(df)
+    return df
+
+
 @contextlib.contextmanager
 def pin_scope():
-    """Release every frame :func:`pin` records on this thread inside the
-    block when the block exits, normally or by an exception.
+    """Release every frame :func:`pin` and :func:`cache` record on this
+    thread inside the block when the block exits, normally or by an
+    exception.
+
+    One rule covers every caller: a function that stores its result before
+    it returns (an eager ``localCheckpoint``, or rows collected to the
+    driver) runs its body in a scope of its own; a function that returns a lazy frame over
+    its scratch frames opens none, and its caller's scope releases them.
 
     Keyed by thread, not by Spark job group: callers set job groups of
     their own, and a pin kept under a group nothing releases would hold a
-    strong reference forever and block ContextCleaner. A pinned frame
-    must not be read after its scope closes (the read fails with
-    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``).
+    strong reference forever and block ContextCleaner. Read a frame made
+    inside the scope only while it is open: afterwards a pinned one fails
+    with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` and a cached one is
+    recomputed from its plan.
     """
-    outer = getattr(_SCOPE, "frames", None)
-    _SCOPE.frames = frames = []
+    outer = getattr(_SCOPE, "frames", None), getattr(_SCOPE, "cached", None)
+    _SCOPE.frames, _SCOPE.cached = frames, cached = [], []
     try:
         yield
     finally:
-        _SCOPE.frames = outer
+        _SCOPE.frames, _SCOPE.cached = outer
         for pinned in frames:
             pinned._jdf.queryExecution().logical().rdd().unpersist(False)
+        for df in cached:
+            df.unpersist()
 
 
 @dataclass

@@ -29,22 +29,15 @@ Scale shape, per operator:
   (column-pruned to the 32-char fp only), then intra-batch exact dedup.
   One anti-join shuffle on the fingerprint + one batch-sized groupBy.
 
-Storage note: ``tfidf_top_terms``, ``vocab_zipf_stats``,
-``unigram_surprise``, and ``bm25_search`` ``persist()`` a compacted
-intermediate that two downstream branches consume (Catalyst does not reuse
-the exchange across the branches — measured, not assumed). Two contracts,
-caller's choice via ``materialize``:
-
-- ``materialize=False`` (default, the LIBRARY form): the result stays
-  lazy and composable; the cached relation lives until the consumer is
-  done with it (MEMORY_AND_DISK — at worst it spills, never OOMs).
-  Long-lived sessions calling these repeatedly should release it with
-  ``spark.catalog.clearCache()`` between calls.
-- ``materialize=True`` (the QUERY form — every q1xx gate wrapper uses
-  it): the result is eagerly ``localCheckpoint``-ed and every internal
-  cache is unpersisted before returning — the pagerank contract; nothing
-  stays cached after the call (test-pinned: the q112/q113/q114/q117
-  wrappers leave ``spark.catalog`` cache empty).
+Storage note: the operators here that read one compacted intermediate from
+two or more branches keep it with ``jobs.cache`` (Catalyst does not reuse
+the exchange across the branches — measured, not assumed). One rule says
+who releases it: a function that returns a lazy frame (the LIBRARY form:
+``tfidf_top_terms``, ``unigram_surprise``, ``bm25_search``, ...) opens no
+scope, so its caches go to the caller's ``jobs.pin_scope``; a function that
+stores its result before it returns (every registered query over a library
+form, and the operators that end in an eager ``localCheckpoint``) runs in a
+scope of its own, so nothing stays cached after the call.
 """
 
 from __future__ import annotations
@@ -52,6 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ai_batch_processing_spark.jobs import cache, pin_scope
 from ai_batch_processing_spark.registry import register
 from ai_batch_processing_spark.session import load_tables
 from ai_batch_processing_spark.operators.template import with_row_index
@@ -82,18 +76,6 @@ def token_stream(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") 
     )
 
 
-def _finish(out: DataFrame, cached: list[DataFrame], materialize: bool) -> DataFrame:
-    """Apply the ``materialize`` contract (module storage note): eagerly
-    localCheckpoint the result, then unpersist every internal cache —
-    nothing stays in the session's storage after the call."""
-    if not materialize:
-        return out
-    out = out.localCheckpoint(eager=True)
-    for df in cached:
-        df.unpersist()
-    return out
-
-
 # ---------------------------------------------------------------------------
 # TF-IDF keyword extraction
 # ---------------------------------------------------------------------------
@@ -102,7 +84,6 @@ def tfidf_top_terms(
     id_col: str = "doc_id",
     text_col: str = "text",
     top_k: int = 3,
-    materialize: bool = False,
 ) -> DataFrame:
     """Top-``top_k`` TF-IDF terms per document: (doc_id, term, rnk, tfidf).
 
@@ -110,7 +91,6 @@ def tfidf_top_terms(
     smoothed sklearn form — never divides by zero, unseen-term safe).
     Ranking happens on the ROUNDED score with the term as tiebreak, so the
     selected rows are reproducible across engines and float-sum orders.
-    ``materialize``: see the module storage note.
     """
     # ONE Arrow kernel pass (r11, guide §4.2 — the q164 template): the
     # JVM lower+split+explode+hash-agg pipeline is replaced by
@@ -122,9 +102,7 @@ def tfidf_top_terms(
     # corpus-length scan AND its join are gone (plan: 2 joins, was 3).
     # Persisted: dfreq and the final score join both consume the kernel
     # output; without the persist each branch re-runs the corpus pass.
-    tf = doc_term_counts(docs, id_col, text_col).withColumnRenamed(
-        id_col, "doc_id"
-    ).persist()
+    tf = cache(doc_term_counts(docs, id_col, text_col).withColumnRenamed(id_col, "doc_id"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = docs.select(F.count(F.lit(1)).cast("double").alias("nd"))
     scored = (
@@ -148,7 +126,7 @@ def tfidf_top_terms(
         .filter(F.col("rnk") <= top_k)
         .select("doc_id", "term", "rnk", "tfidf")
     )
-    return _finish(out, [tf], materialize)
+    return out
 
 
 @register(
@@ -191,14 +169,15 @@ def q112_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # No trailing orderBy (r10): the driver's value hash is order-
     # insensitive; the global range sort of a corpus-sized output is a
     # pure-waste exchange+sort at scale (the q103/q164 precedent).
-    return tfidf_top_terms(docs, materialize=True)
+    with pin_scope():
+        return tfidf_top_terms(docs).localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------
 # Vocabulary / Zipf profile
 # ---------------------------------------------------------------------------
 def vocab_zipf_stats(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", materialize: bool = False
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """One-row corpus profile: vocab size, token count, hapax fraction, and
     the Zipf slope (regression of ln(freq) on ln(rank)).
@@ -217,12 +196,7 @@ def vocab_zipf_stats(
     # (term, ct) partials from term_counts replace the JVM explode — the
     # final term shuffle moves the same per-partition-distinct-term rows
     # the old map-side partial aggregation produced.
-    freq = (
-        term_counts(docs, text_col)
-        .groupBy("term")
-        .agg(F.sum("ct").alias("c"))
-        .persist()
-    )
+    freq = cache(term_counts(docs, text_col).groupBy("term").agg(F.sum("ct").alias("c")))
     # with_row_index sorts ascending; rank 1 = highest count ⇒ order by
     # (-c, term). 0-based index + 1 = the rank.
     ranked = with_row_index(
@@ -238,7 +212,7 @@ def vocab_zipf_stats(
             F.regr_slope(F.log(F.col("c").cast("double")), F.log(F.col("rnk").cast("double"))), 6
         ).alias("zipf_slope"),
     )
-    return _finish(out, [freq], materialize)
+    return out
 
 
 @register(
@@ -265,14 +239,15 @@ def vocab_zipf_stats(
 )
 def q113_vocab_zipf_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_tables(spark, sf_dir, ["documents"])["documents"]
-    return vocab_zipf_stats(docs, materialize=True)
+    with pin_scope():
+        return vocab_zipf_stats(docs).localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------
 # Unigram-LM surprise (bits per token)
 # ---------------------------------------------------------------------------
 def unigram_surprise(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", materialize: bool = False
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """Per-doc mean surprise under the corpus unigram LM:
     (doc_id, n_tokens, bits_per_token).
@@ -304,9 +279,7 @@ def unigram_surprise(
     # are test-pinned (plan assertion + value parity).
     from ai_batch_processing_spark.plans.relational import broadcast_if_small
 
-    tf = doc_term_counts(docs, id_col, text_col).withColumnRenamed(
-        id_col, "doc_id"
-    ).persist()
+    tf = cache(doc_term_counts(docs, id_col, text_col).withColumnRenamed(id_col, "doc_id"))
     freq = tf.groupBy("term").agg(F.sum("ct").alias("c"))
     tot = tf.agg(F.sum("ct").cast("double").alias("t"))
     prob = freq.crossJoin(F.broadcast(tot))
@@ -326,7 +299,7 @@ def unigram_surprise(
     # the r10 forms did (x100 A/B then: 500k docs, zero rounded-value
     # diffs between the occurrence and compacted forms; the sf gates
     # re-prove it per round).
-    return _finish(out, [tf], materialize)
+    return out
 
 
 @register(
@@ -351,7 +324,8 @@ def q114_unigram_surprise(spark: SparkSession, sf_dir: str) -> DataFrame:
     # No trailing orderBy (r10): the driver's value hash is order-
     # insensitive; the global range sort of a corpus-sized output is a
     # pure-waste exchange+sort at scale (the q103/q164 precedent).
-    return unigram_surprise(docs, materialize=True)
+    with pin_scope():
+        return unigram_surprise(docs).localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------
@@ -362,7 +336,6 @@ def bigram_surprise(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: float = 0.5,
-    materialize: bool = False,
 ) -> DataFrame:
     """Per-doc mean surprise under an add-k-smoothed corpus BIGRAM LM:
     (doc_id, n_bigrams, bits_per_bigram), docs with ≥ 2 tokens.
@@ -379,7 +352,7 @@ def bigram_surprise(
     stream and is persisted for its two consumers (scoring join + the
     context-count aggregate reuses the stream); the vocab size rides in
     as a broadcast 1-row aggregate; everything else is one shuffle on the
-    bigram key. ``materialize``: see the module storage note.
+    bigram key.
     """
     # Arrow bigram kernel (r11, §4.2): the Catalyst form exploded the
     # corpus into per-occurrence bigram ROWS twice (once for the count
@@ -389,9 +362,7 @@ def bigram_surprise(
     # means the bigram count table, the context counts, and the scoring
     # join all derive from cached vocab-scale rows — the corpus text is
     # read twice total (bigram kernel + vocab kernel), each in C++.
-    bigr = doc_bigram_counts(docs, id_col, text_col).withColumnRenamed(
-        id_col, "doc_id"
-    ).persist()
+    bigr = cache(doc_bigram_counts(docs, id_col, text_col).withColumnRenamed(id_col, "doc_id"))
     bc = bigr.groupBy("w1", "w2").agg(F.sum("ct").alias("cb"))
     cc = bigr.groupBy("w1").agg(F.sum("ct").alias("cw"))
     vocab = (
@@ -411,7 +382,7 @@ def bigram_surprise(
             ),
         )
     )
-    return _finish(out, [bigr], materialize)
+    return out
 
 
 @register(
@@ -453,7 +424,8 @@ def q168_bigram_surprise(spark: SparkSession, sf_dir: str) -> DataFrame:
     # No trailing orderBy (r10): the driver's value hash is order-
     # insensitive; the global range sort of a corpus-sized output is a
     # pure-waste exchange+sort at scale (the q103/q164 precedent).
-    return bigram_surprise(docs, materialize=True)
+    with pin_scope():
+        return bigram_surprise(docs).localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------
@@ -696,7 +668,6 @@ def bm25_search(
     top_k: int = 10,
     id_col: str = "doc_id",
     text_col: str = "text",
-    materialize: bool = False,
 ) -> DataFrame:
     """Okapi-BM25 top-``top_k`` documents for a bag of query terms:
     (doc_id, score, rnk).
@@ -720,8 +691,8 @@ def bm25_search(
         doc_term_counts(docs, id_col, text_col, vocab=[t.lower() for t in query_terms])
         .withColumnRenamed(id_col, "doc_id")
         .select("doc_id", "term", F.col("ct").alias("tf"), F.col("n").cast("double").alias("dl"))
-        .persist()
     )
+    tf = cache(tf)
     stats = docs.select(token_count_ws(F.col(text_col)).cast("double").alias("dl")).agg(
         F.count(F.lit(1)).cast("double").alias("n"), F.avg("dl").alias("avgdl")
     )
@@ -750,7 +721,7 @@ def bm25_search(
     out = top.withColumn("rnk", F.row_number().over(w).cast("long")).select(
         "doc_id", "score", "rnk"
     )
-    return _finish(out, [tf], materialize)
+    return out
 
 
 _BM25_QUERY = ["data", "model", "training"]
@@ -800,7 +771,9 @@ _BM25_QUERY = ["data", "model", "training"]
 )
 def q117_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_tables(spark, sf_dir, ["documents"])["documents"]
-    return bm25_search(docs, _BM25_QUERY, top_k=10, materialize=True).orderBy("rnk")
+    with pin_scope():
+        out = bm25_search(docs, _BM25_QUERY, top_k=10).localCheckpoint(eager=True)
+    return out.orderBy("rnk")
 
 
 
@@ -955,8 +928,7 @@ def source_divergence(
     stream = docs.select(
         F.col(group_col).alias("source"), F.explode(tokens_expr(text_col)).alias("t")
     ).select("source", _feature_bucket(F.col("t"), n_buckets, method).alias("b"))
-    sb = stream.groupBy("source", "b").agg(F.count(F.lit(1)).alias("c")).persist()
-    sb.count()
+    sb = stream.groupBy("source", "b").agg(F.count(F.lit(1)).alias("c"))
     stot = sb.groupBy("source").agg(F.sum("c").cast("double").alias("n_src"))
     corpus = sb.groupBy("b").agg(F.sum("c").alias("cc"))
     ctot = corpus.agg(F.sum("cc").cast("double").alias("n_all"))
@@ -974,7 +946,6 @@ def source_divergence(
         F.max("n_src").cast("long").alias("n_tokens"),
         F.round(F.sum(F.col("p") * F.log2(F.col("p") / F.col("q"))), 6).alias("kl_bits"),
     )
-    sb.unpersist()
     return out
 
 
@@ -1664,9 +1635,6 @@ def q212_hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ai_batch_processing_spark.operators.similarity import cosine
 
     t = load_tables(spark, sf_dir, ["documents", "embeddings"])
-    bm25 = bm25_search(t["documents"], _BM25_QUERY, top_k=_RRF_TOPN).select(
-        "doc_id", "rnk"
-    )
     emb = t["embeddings"]
     qv = emb.filter(F.col("vec_id") == _RRF_QUERY_VEC_ID).select(
         F.col("embedding").alias("_qvec")
@@ -1691,7 +1659,12 @@ def q212_hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", "rnk")
     )
-    return rrf_fuse({"bm25": bm25, "cosine": cos_top}).orderBy("rnk")
+    with pin_scope():
+        bm25 = bm25_search(t["documents"], _BM25_QUERY, top_k=_RRF_TOPN).select(
+            "doc_id", "rnk"
+        )
+        out = rrf_fuse({"bm25": bm25, "cosine": cos_top}).localCheckpoint(eager=True)
+    return out.orderBy("rnk")
 
 
 # ---------------------------------------------------------------------------
@@ -2181,7 +2154,6 @@ def fightin_words(
     text_col: str = "text",
     a0: float = 1000.0,
     top_k: int = 5,
-    materialize: bool = False,
 ) -> DataFrame:
     """(group, term, n_in_group, z, rnk): the ``top_k`` most
     group-distinctive terms by prior-regularized log-odds z-score —
@@ -2201,7 +2173,7 @@ def fightin_words(
     toks = docs.select(
         F.col(group_col).alias("g"), F.explode(tokens_expr(text_col)).alias("term")
     )
-    ygw = toks.groupBy("g", "term").agg(F.count(F.lit(1)).alias("ygw")).persist()
+    ygw = cache(toks.groupBy("g", "term").agg(F.count(F.lit(1)).alias("ygw")))
     yw = ygw.groupBy("term").agg(F.sum("ygw").alias("yw"))
     ng = ygw.groupBy("g").agg(F.sum("ygw").alias("ng"))
     tot = ygw.agg(F.sum("ygw").alias("nn"))
@@ -2237,7 +2209,7 @@ def fightin_words(
             F.col("rnk").cast("long").alias("rnk"),
         )
     )
-    return _finish(out, [ygw], materialize)
+    return out
 
 
 @register(
@@ -2287,7 +2259,9 @@ def fightin_words(
 )
 def q259_fightin_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_tables(spark, sf_dir, ["documents"])["documents"]
-    return fightin_words(docs, materialize=True).orderBy("source", "rnk")
+    with pin_scope():
+        out = fightin_words(docs).localCheckpoint(eager=True)
+    return out.orderBy("source", "rnk")
 
 
 # ---------------------------------------------------------------------------
@@ -2301,7 +2275,6 @@ def heldout_bigram_report(
     group_col: str = "source",
     holdout_mod: int = 7,
     k: float = 0.5,
-    materialize: bool = False,
 ) -> DataFrame:
     """(group, n_docs, n_bigrams, bits_per_bigram, oov_bigram_rate): the
     add-k bigram LM trained on doc_id % holdout_mod != 0 and SCORED on
@@ -2333,7 +2306,7 @@ def heldout_bigram_report(
         .select("doc_id", "g", "held", F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
     )
     train = bigr.filter(~F.col("held"))
-    bc = train.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("cb")).persist()
+    bc = cache(train.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("cb")))
     cc = bc.groupBy("w1").agg(F.sum("cb").alias("cw"))
     vocab = (
         toks_arr.filter(~is_held)
@@ -2369,7 +2342,7 @@ def heldout_bigram_report(
         "bits_per_bigram",
         "oov_bigram_rate",
     )
-    return _finish(out, [bc], materialize)
+    return out
 
 
 @register(
@@ -2427,7 +2400,9 @@ def heldout_bigram_report(
 )
 def q260_heldout_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_tables(spark, sf_dir, ["documents"])["documents"]
-    return heldout_bigram_report(docs, materialize=True).orderBy("source")
+    with pin_scope():
+        out = heldout_bigram_report(docs).localCheckpoint(eager=True)
+    return out.orderBy("source")
 
 
 # ---------------------------------------------------------------------------
@@ -2759,39 +2734,40 @@ def llr_collocations(docs: DataFrame, top_k: int = 20, min_count: int = 5) -> Da
         )
         .select(F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
     )
-    bc = bigr.groupBy("w1", "w2").agg(F.count(F.lit(1)).cast("long").alias("k11")).persist()
-    cw1 = bc.groupBy("w1").agg(F.sum("k11").alias("cw1"))
-    cw2 = bc.groupBy("w2").agg(F.sum("k11").alias("cw2"))
-    tot = bc.agg(F.sum("k11").cast("double").alias("nn"))
+    with pin_scope():
+        bc = cache(bigr.groupBy("w1", "w2").agg(F.count(F.lit(1)).cast("long").alias("k11")))
+        cw1 = bc.groupBy("w1").agg(F.sum("k11").alias("cw1"))
+        cw2 = bc.groupBy("w2").agg(F.sum("k11").alias("cw2"))
+        tot = bc.agg(F.sum("k11").cast("double").alias("nn"))
 
-    def term(k, r, c):
-        kd = k.cast("double")
-        return F.when(k > 0, kd * F.log(kd * F.col("nn") / (r.cast("double") * c.cast("double")))).otherwise(F.lit(0.0))
+        def term(k, r, c):
+            kd = k.cast("double")
+            return F.when(k > 0, kd * F.log(kd * F.col("nn") / (r.cast("double") * c.cast("double")))).otherwise(F.lit(0.0))
 
-    k11 = F.col("k11")
-    k12 = F.col("cw1") - k11
-    k21 = F.col("cw2") - k11
-    k22 = (F.col("nn").cast("long")) - F.col("cw1") - F.col("cw2") + k11
-    r1, r2 = F.col("cw1"), F.col("nn").cast("long") - F.col("cw1")
-    c1, c2 = F.col("cw2"), F.col("nn").cast("long") - F.col("cw2")
-    g2 = F.round(
-        2.0 * (term(k11, r1, c1) + term(k12, r1, c2) + term(k21, r2, c1) + term(k22, r2, c2)),
-        6,
-    )
-    scored = (
-        bc.filter(F.col("k11") >= min_count)
-        .join(cw1, "w1")
-        .join(cw2, "w2")
-        .crossJoin(F.broadcast(tot))
-        .select("w1", "w2", "k11", "cw1", "cw2", g2.alias("g2"))
-    )
-    top = scored.orderBy(F.desc("g2"), F.asc("w1"), F.asc("w2")).limit(top_k)
-    # BOUNDED window: ranks only the top_k rows the TakeOrderedAndProject kept
-    w = Window.orderBy(F.desc("g2"), F.asc("w1"), F.asc("w2"))
-    out = top.withColumn("rnk", F.row_number().over(w).cast("long")).select(
-        "rnk", "w1", "w2", "k11", "cw1", "cw2", "g2"
-    )
-    return _finish(out, [bc], materialize=True)
+        k11 = F.col("k11")
+        k12 = F.col("cw1") - k11
+        k21 = F.col("cw2") - k11
+        k22 = (F.col("nn").cast("long")) - F.col("cw1") - F.col("cw2") + k11
+        r1, r2 = F.col("cw1"), F.col("nn").cast("long") - F.col("cw1")
+        c1, c2 = F.col("cw2"), F.col("nn").cast("long") - F.col("cw2")
+        g2 = F.round(
+            2.0 * (term(k11, r1, c1) + term(k12, r1, c2) + term(k21, r2, c1) + term(k22, r2, c2)),
+            6,
+        )
+        scored = (
+            bc.filter(F.col("k11") >= min_count)
+            .join(cw1, "w1")
+            .join(cw2, "w2")
+            .crossJoin(F.broadcast(tot))
+            .select("w1", "w2", "k11", "cw1", "cw2", g2.alias("g2"))
+        )
+        top = scored.orderBy(F.desc("g2"), F.asc("w1"), F.asc("w2")).limit(top_k)
+        # BOUNDED window: ranks only the top_k rows the TakeOrderedAndProject kept
+        w = Window.orderBy(F.desc("g2"), F.asc("w1"), F.asc("w2"))
+        out = top.withColumn("rnk", F.row_number().over(w).cast("long")).select(
+            "rnk", "w1", "w2", "k11", "cw1", "cw2", "g2"
+        )
+        return out.localCheckpoint(eager=True)
 
 
 @register(
@@ -3508,55 +3484,55 @@ def js_divergence_sources(
     reaches the hash), assembled and rounded to 6dp at the end.
     """
     toks = docs.select(F.col(source_col).alias("src"), F.explode(tokens_expr("text")).alias("term"))
-    counts = toks.groupBy("src", "term").agg(F.count(F.lit(1)).alias("n")).persist()
-    vocab = (
-        counts.groupBy("term")
-        .agg(F.sum("n").alias("tot"))
-        .orderBy(F.desc("tot"), "term")
-        .limit(vocab_k)
-        .select("term")
-    )
-    in_vocab = counts.join(F.broadcast(vocab), "term")
-    src_tot = counts.groupBy("src").agg(F.sum("n").alias("n_src"))
-    oov = (
-        src_tot.join(
-            in_vocab.groupBy("src").agg(F.sum("n").alias("n_in")), "src", "left"
+    with pin_scope():
+        counts = cache(toks.groupBy("src", "term").agg(F.count(F.lit(1)).alias("n")))
+        vocab = (
+            counts.groupBy("term")
+            .agg(F.sum("n").alias("tot"))
+            .orderBy(F.desc("tot"), "term")
+            .limit(vocab_k)
+            .select("term")
         )
-        .select(
-            "src",
-            F.lit("__oov__").alias("term"),
-            (F.col("n_src") - F.coalesce(F.col("n_in"), F.lit(0))).alias("n"),
+        in_vocab = counts.join(F.broadcast(vocab), "term")
+        src_tot = counts.groupBy("src").agg(F.sum("n").alias("n_src"))
+        oov = (
+            src_tot.join(
+                in_vocab.groupBy("src").agg(F.sum("n").alias("n_in")), "src", "left"
+            )
+            .select(
+                "src",
+                F.lit("__oov__").alias("term"),
+                (F.col("n_src") - F.coalesce(F.col("n_in"), F.lit(0))).alias("n"),
+            )
         )
-    )
-    cats = vocab.unionByName(
-        docs.sparkSession.createDataFrame([("__oov__",)], "term string")
-    )
-    # dense grid: every (source, category) cell present, zeros included
-    grid = (
-        src_tot.select("src", "n_src")
-        .crossJoin(F.broadcast(cats))
-        .join(in_vocab.unionByName(oov), ["src", "term"], "left")
-        .select(
-            "src",
-            "term",
-            (F.coalesce(F.col("n"), F.lit(0)).cast("double") / F.col("n_src")).alias("p"),
+        cats = vocab.unionByName(
+            docs.sparkSession.createDataFrame([("__oov__",)], "term string")
         )
-    )
-    a = grid.select(F.col("src").alias("source_a"), "term", F.col("p").alias("pa"))
-    b = grid.select(F.col("src").alias("source_b"), "term", F.col("p").alias("pb"))
-    pairs = a.join(b, "term").filter(F.col("source_a") < F.col("source_b"))
-    m = (F.col("pa") + F.col("pb")) / 2.0
-    term_f = lambda x: F.when(x > 0, x * F.log(x / m)).otherwise(F.lit(0.0))  # noqa: E731
-    contrib = F.round((term_f(F.col("pa")) + term_f(F.col("pb"))) / 2.0 * 1e9).cast("long")
-    out = (
-        pairs.select("source_a", "source_b", contrib.alias("c"))
-        .groupBy("source_a", "source_b")
-        .agg(F.round(F.sum("c") / 1e9, 6).alias("jsd_nats"))
-        .orderBy("source_a", "source_b")
-        .localCheckpoint(eager=True)
-    )
-    counts.unpersist()
-    return out
+        # dense grid: every (source, category) cell present, zeros included
+        grid = (
+            src_tot.select("src", "n_src")
+            .crossJoin(F.broadcast(cats))
+            .join(in_vocab.unionByName(oov), ["src", "term"], "left")
+            .select(
+                "src",
+                "term",
+                (F.coalesce(F.col("n"), F.lit(0)).cast("double") / F.col("n_src")).alias("p"),
+            )
+        )
+        a = grid.select(F.col("src").alias("source_a"), "term", F.col("p").alias("pa"))
+        b = grid.select(F.col("src").alias("source_b"), "term", F.col("p").alias("pb"))
+        pairs = a.join(b, "term").filter(F.col("source_a") < F.col("source_b"))
+        m = (F.col("pa") + F.col("pb")) / 2.0
+        term_f = lambda x: F.when(x > 0, x * F.log(x / m)).otherwise(F.lit(0.0))  # noqa: E731
+        contrib = F.round((term_f(F.col("pa")) + term_f(F.col("pb"))) / 2.0 * 1e9).cast("long")
+        out = (
+            pairs.select("source_a", "source_b", contrib.alias("c"))
+            .groupBy("source_a", "source_b")
+            .agg(F.round(F.sum("c") / 1e9, 6).alias("jsd_nats"))
+            .orderBy("source_a", "source_b")
+            .localCheckpoint(eager=True)
+        )
+        return out
 
 
 @register(
@@ -4242,40 +4218,41 @@ def vocab_source_mi(
     toks = docs.select(
         F.col(group_col).alias("grp"), F.explode(tokens_expr(text_col)).alias("term")
     )
-    tg = toks.groupBy("term", "grp").agg(F.count(F.lit(1)).alias("c")).persist()
-    t_m = tg.groupBy("term").agg(F.sum("c").alias("ct"))
-    g_m = tg.groupBy("grp").agg(F.sum("c").alias("cg"))
-    n = tg.agg(F.sum("c").cast("long").alias("n"))
-    j = (
-        tg.join(t_m, "term")
-        .join(F.broadcast(g_m), "grp")
-        .crossJoin(F.broadcast(n))
-    )
-    # p(t,g)·log2( p(t,g) / (p(t)p(g)) ) scaled by N: c/N · log2(c·N/(ct·cg))
-    mi_term = (F.col("c") / F.col("n")) * (
-        F.log2(F.col("c").cast("double") * F.col("n").cast("double"))
-        - F.log2(F.col("ct").cast("double") * F.col("cg").cast("double"))
-    )
-    h_term = (F.col("c") / F.col("n")) * -F.log2(F.col("ct").cast("double") / F.col("n"))
-    agg = j.agg(
-        F.max("n").alias("n_tokens"),
-        F.count_distinct("term").cast("long").alias("n_terms"),
-        F.count_distinct("grp").cast("long").alias("n_groups"),
-        F.sum(F.round(mi_term * 1e6).cast("long")).alias("_mi_micro"),
-        F.sum(F.round(h_term * 1e6).cast("long")).alias("_h_micro"),
-    )
-    out = agg.select(
-        "n_tokens",
-        "n_terms",
-        "n_groups",
-        F.round(F.col("_h_micro") / 1e6, 6).alias("h_term_bits"),
-        F.round(F.col("_mi_micro") / 1e6, 6).alias("mi_bits"),
-        F.when(
-            F.col("_h_micro") > 0,
-            F.round(F.col("_mi_micro") / F.col("_h_micro").cast("double"), 6),
-        ).otherwise(None).alias("mi_ratio"),
-    )
-    return _finish(out, [tg], materialize=True)
+    with pin_scope():
+        tg = cache(toks.groupBy("term", "grp").agg(F.count(F.lit(1)).alias("c")))
+        t_m = tg.groupBy("term").agg(F.sum("c").alias("ct"))
+        g_m = tg.groupBy("grp").agg(F.sum("c").alias("cg"))
+        n = tg.agg(F.sum("c").cast("long").alias("n"))
+        j = (
+            tg.join(t_m, "term")
+            .join(F.broadcast(g_m), "grp")
+            .crossJoin(F.broadcast(n))
+        )
+        # p(t,g)·log2( p(t,g) / (p(t)p(g)) ) scaled by N: c/N · log2(c·N/(ct·cg))
+        mi_term = (F.col("c") / F.col("n")) * (
+            F.log2(F.col("c").cast("double") * F.col("n").cast("double"))
+            - F.log2(F.col("ct").cast("double") * F.col("cg").cast("double"))
+        )
+        h_term = (F.col("c") / F.col("n")) * -F.log2(F.col("ct").cast("double") / F.col("n"))
+        agg = j.agg(
+            F.max("n").alias("n_tokens"),
+            F.count_distinct("term").cast("long").alias("n_terms"),
+            F.count_distinct("grp").cast("long").alias("n_groups"),
+            F.sum(F.round(mi_term * 1e6).cast("long")).alias("_mi_micro"),
+            F.sum(F.round(h_term * 1e6).cast("long")).alias("_h_micro"),
+        )
+        out = agg.select(
+            "n_tokens",
+            "n_terms",
+            "n_groups",
+            F.round(F.col("_h_micro") / 1e6, 6).alias("h_term_bits"),
+            F.round(F.col("_mi_micro") / 1e6, 6).alias("mi_bits"),
+            F.when(
+                F.col("_h_micro") > 0,
+                F.round(F.col("_mi_micro") / F.col("_h_micro").cast("double"), 6),
+            ).otherwise(None).alias("mi_ratio"),
+        )
+        return out.localCheckpoint(eager=True)
 
 
 @register(
@@ -4350,42 +4327,43 @@ def vocab_churn(
     toks = docs.select(
         (F.col(id_col) % 2).alias("h"), F.explode(tokens_expr(text_col)).alias("term")
     )
-    counts = toks.groupBy("h", "term").agg(F.count(F.lit(1)).alias("c")).persist()
-    tops = [
-        counts.filter(F.col("h") == i)
-        .orderBy(F.desc("c"), F.asc("term"))
-        .limit(k)
-        .select(F.col("term").alias(f"t{i}"))
-        for i in (0, 1)
-    ]
-    n_terms = counts.groupBy("h").agg(F.count(F.lit(1)).alias("nt"))
-    inter = tops[0].join(tops[1], tops[0].t0 == tops[1].t1, "inner").agg(
-        F.count(F.lit(1)).cast("long").alias("overlap_topk")
-    )
-    n0 = n_terms.filter(F.col("h") == 0).select(F.col("nt").cast("long").alias("n_terms_h0"))
-    n1 = n_terms.filter(F.col("h") == 1).select(F.col("nt").cast("long").alias("n_terms_h1"))
-    sizes = [t.agg(F.count(F.lit(1)).cast("long").alias(f"k{i}")) for i, t in enumerate(tops)]
-    out = (
-        n0.crossJoin(F.broadcast(n1))
-        .crossJoin(F.broadcast(inter))
-        .crossJoin(F.broadcast(sizes[0]))
-        .crossJoin(F.broadcast(sizes[1]))
-        .select(
-            F.lit(k).cast("long").alias("k"),
-            "n_terms_h0",
-            "n_terms_h1",
-            "overlap_topk",
-            F.round(
-                F.col("overlap_topk")
-                / (F.col("k0") + F.col("k1") - F.col("overlap_topk")).cast("double"),
-                6,
-            ).alias("jaccard_topk"),
-            F.round(1.0 - F.col("overlap_topk") / F.least("k0", "k1").cast("double"), 6).alias(
-                "churn"
-            ),
+    with pin_scope():
+        counts = cache(toks.groupBy("h", "term").agg(F.count(F.lit(1)).alias("c")))
+        tops = [
+            counts.filter(F.col("h") == i)
+            .orderBy(F.desc("c"), F.asc("term"))
+            .limit(k)
+            .select(F.col("term").alias(f"t{i}"))
+            for i in (0, 1)
+        ]
+        n_terms = counts.groupBy("h").agg(F.count(F.lit(1)).alias("nt"))
+        inter = tops[0].join(tops[1], tops[0].t0 == tops[1].t1, "inner").agg(
+            F.count(F.lit(1)).cast("long").alias("overlap_topk")
         )
-    )
-    return _finish(out, [counts], materialize=True)
+        n0 = n_terms.filter(F.col("h") == 0).select(F.col("nt").cast("long").alias("n_terms_h0"))
+        n1 = n_terms.filter(F.col("h") == 1).select(F.col("nt").cast("long").alias("n_terms_h1"))
+        sizes = [t.agg(F.count(F.lit(1)).cast("long").alias(f"k{i}")) for i, t in enumerate(tops)]
+        out = (
+            n0.crossJoin(F.broadcast(n1))
+            .crossJoin(F.broadcast(inter))
+            .crossJoin(F.broadcast(sizes[0]))
+            .crossJoin(F.broadcast(sizes[1]))
+            .select(
+                F.lit(k).cast("long").alias("k"),
+                "n_terms_h0",
+                "n_terms_h1",
+                "overlap_topk",
+                F.round(
+                    F.col("overlap_topk")
+                    / (F.col("k0") + F.col("k1") - F.col("overlap_topk")).cast("double"),
+                    6,
+                ).alias("jaccard_topk"),
+                F.round(1.0 - F.col("overlap_topk") / F.least("k0", "k1").cast("double"), 6).alias(
+                    "churn"
+                ),
+            )
+        )
+        return out.localCheckpoint(eager=True)
 
 
 @register(

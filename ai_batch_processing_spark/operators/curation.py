@@ -27,6 +27,7 @@ import re
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ai_batch_processing_spark.jobs import cache, pin_scope
 from ai_batch_processing_spark.registry import register
 from ai_batch_processing_spark.session import load_tables
 
@@ -1256,19 +1257,18 @@ def q121_curation_v2_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     surv = exact_dedup(kept.select("doc_id", "n_tokens", "fp"), ["fp"], keep_min="doc_id")
     # LM trained on the FULL corpus (q114 semantics), scored on survivors
-    bits = unigram_surprise(docs).select("doc_id", "bits_per_token")
-    banded = surv.join(bits, "doc_id").filter(
-        (F.col("bits_per_token") >= 2.0) & (F.col("bits_per_token") <= 16.0)
-    )
-    assigned = assign_splits(banded, method="knuth")
-    return (
-        assigned.groupBy("split")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tokens").alias("n_tokens"),
+    with pin_scope():
+        bits = unigram_surprise(docs).select("doc_id", "bits_per_token")
+        banded = surv.join(bits, "doc_id").filter(
+            (F.col("bits_per_token") >= 2.0) & (F.col("bits_per_token") <= 16.0)
         )
-        .orderBy("split")
-    )
+        out = (
+            assign_splits(banded, method="knuth")
+            .groupBy("split")
+            .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("n_tokens").alias("n_tokens"))
+            .localCheckpoint(eager=True)
+        )
+    return out.orderBy("split")
 
 
 # ---------------------------------------------------------------------------
@@ -1540,12 +1540,8 @@ def dsir_importance_weights(
         "doc_id", "is_target", F.explode(feats).alias("f")
     ).select("doc_id", "is_target", _feature_bucket(F.col("f"), n_buckets, method).alias("b"))
 
-    nb = stream.groupBy("doc_id", "is_target", "b").agg(
-        F.count(F.lit(1)).alias("c")
-    ).persist()
-    nb.count()  # materialize once for its three consumers
-    if nb.filter("is_target").limit(1).count() == 0:  # cached-scan probe
-        nb.unpersist()
+    nb = stream.groupBy("doc_id", "is_target", "b").agg(F.count(F.lit(1)).alias("c"))
+    if nb.filter("is_target").limit(1).count() == 0:
         raise ValueError(
             "dsir_importance_weights: target_pred matches no documents — "
             "no target distribution to estimate"
@@ -1577,7 +1573,6 @@ def dsir_importance_weights(
             F.round(F.sum(F.col("c") * F.col("lam")), 6).alias("log_weight"),
         )
     )
-    nb.unpersist()
     return out
 
 
@@ -2966,18 +2961,16 @@ def facility_location_select(
     b = emb.select(
         F.col(id_col).alias("cand"), F.col(vec_col).alias("_cv"), _norm(F.col(vec_col)).alias("_cn")
     )
-    pairs = (
-        a.join(F.broadcast(b), F.lit(True))
-        .select(
-            "x",
-            "cand",
-            F.round(
-                _dot(F.col("_xv"), F.col("_cv")) / (F.col("_xn") * F.col("_cn")), 6
-            ).alias("sim"),
+    with pin_scope():
+        pairs = cache(
+            a.join(F.broadcast(b), F.lit(True)).select(
+                "x",
+                "cand",
+                F.round(
+                    _dot(F.col("_xv"), F.col("_cv")) / (F.col("_xn") * F.col("_cn")), 6
+                ).alias("sim"),
+            )
         )
-        .persist()
-    )
-    try:
         cur = emb.select(F.col(id_col).alias("x"), F.lit(0.0).alias("cur"))
         chosen: list[tuple[int, int, float]] = []
         for rnd in range(1, k + 1):
@@ -3017,8 +3010,6 @@ def facility_location_select(
         return emb.sparkSession.createDataFrame(
             chosen, "round bigint, vec_id bigint, gain double"
         )
-    finally:
-        pairs.unpersist()
 
 
 def _facility_location_oracle_sql(k: int, cap: int) -> str:
@@ -3427,41 +3418,41 @@ def perceptron_train_hashed(
     from ai_batch_processing_spark.session import shuffle_partitions
 
     n = min(shuffle_partitions(sess), max(2 * sess.sparkContext.defaultParallelism, 16))
-    feats = feats.repartition(n, "doc_id").persist()
-    labels = docs.select(
-        F.col(id_col).alias("doc_id"), F.col(label_col).cast("long").alias("y")
-    )
-    wt = sess.range(-1, n_buckets).select(
-        F.col("id").alias("b"), F.lit(0).cast("long").alias("w")
-    )
-    for e in range(epochs):
-        margins = (
-            feats.join(F.broadcast(wt), "b")
-            .groupBy("doc_id")
-            .agg(F.sum(F.col("c") * F.col("w")).alias("m"))
+    with pin_scope():
+        feats = cache(feats.repartition(n, "doc_id"))
+        labels = docs.select(
+            F.col(id_col).alias("doc_id"), F.col(label_col).cast("long").alias("y")
         )
-        miscl = (
-            margins.join(labels, "doc_id")
-            .filter(F.col("y") * F.col("m") <= 0)
-            .select("doc_id", "y")
+        wt = sess.range(-1, n_buckets).select(
+            F.col("id").alias("b"), F.lit(0).cast("long").alias("w")
         )
-        upd = (
-            feats.join(miscl, "doc_id")
-            .groupBy("b")
-            .agg(F.sum(F.col("y") * F.col("c")).alias("dw"))
-        )
-        wt = (
-            wt.join(upd, "b", "left")
-            .select(
-                "b",
-                (F.col("w") + F.coalesce(F.col("dw"), F.lit(0)))
-                .cast("long")
-                .alias("w"),
+        for e in range(epochs):
+            margins = (
+                feats.join(F.broadcast(wt), "b")
+                .groupBy("doc_id")
+                .agg(F.sum(F.col("c") * F.col("w")).alias("m"))
             )
-            .localCheckpoint(eager=(e == epochs - 1))
-        )
-    feats.unpersist()
-    return wt
+            miscl = (
+                margins.join(labels, "doc_id")
+                .filter(F.col("y") * F.col("m") <= 0)
+                .select("doc_id", "y")
+            )
+            upd = (
+                feats.join(miscl, "doc_id")
+                .groupBy("b")
+                .agg(F.sum(F.col("y") * F.col("c")).alias("dw"))
+            )
+            wt = (
+                wt.join(upd, "b", "left")
+                .select(
+                    "b",
+                    (F.col("w") + F.coalesce(F.col("dw"), F.lit(0)))
+                    .cast("long")
+                    .alias("w"),
+                )
+                .localCheckpoint(eager=(e == epochs - 1))
+            )
+        return wt
 
 
 _PERC_BUCKETS = 256
@@ -3853,37 +3844,38 @@ def isotonic_calibration(bins: DataFrame) -> DataFrame:
         "pos",
         F.sum("cnt").over(w).alias("cc"),
         F.sum("pos").over(w).alias("cp"),
-    ).persist()
-    lo = cums.select(
-        F.col("b").alias("i"),
-        (F.col("cc") - F.col("cnt")).alias("cc_lo"),
-        (F.col("cp") - F.col("pos")).alias("cp_lo"),
     )
-    hi = cums.select(F.col("b").alias("j"), F.col("cc").alias("cc_hi"), F.col("cp").alias("cp_hi"))
-    intervals = lo.join(hi, F.col("i") <= F.col("j")).select(
-        "i",
-        "j",
-        ((F.col("cp_hi") - F.col("cp_lo")) / (F.col("cc_hi") - F.col("cc_lo"))).alias("avg"),
-    )
-    ts = bins.select(F.col("b").alias("t"))
-    trip = intervals.join(
-        F.broadcast(ts), (F.col("i") <= F.col("t")) & (F.col("t") <= F.col("j"))
-    )
-    m_it = trip.groupBy("i", "t").agg(F.min("avg").alias("m"))
-    iso = m_it.groupBy("t").agg(F.max("m").alias("iso"))
-    out = (
-        cums.join(iso, cums.b == iso.t)
-        .select(
-            "b",
-            "cnt",
-            "pos",
-            F.round(F.col("pos") * 1.0 / F.col("cnt"), 6).alias("raw_rate"),
-            F.round(F.col("iso"), 6).alias("iso_rate"),
+    with pin_scope():
+        cums = cache(cums)
+        lo = cums.select(
+            F.col("b").alias("i"),
+            (F.col("cc") - F.col("cnt")).alias("cc_lo"),
+            (F.col("cp") - F.col("pos")).alias("cp_lo"),
         )
-        .localCheckpoint(eager=True)
-    )
-    cums.unpersist()
-    return out
+        hi = cums.select(F.col("b").alias("j"), F.col("cc").alias("cc_hi"), F.col("cp").alias("cp_hi"))
+        intervals = lo.join(hi, F.col("i") <= F.col("j")).select(
+            "i",
+            "j",
+            ((F.col("cp_hi") - F.col("cp_lo")) / (F.col("cc_hi") - F.col("cc_lo"))).alias("avg"),
+        )
+        ts = bins.select(F.col("b").alias("t"))
+        trip = intervals.join(
+            F.broadcast(ts), (F.col("i") <= F.col("t")) & (F.col("t") <= F.col("j"))
+        )
+        m_it = trip.groupBy("i", "t").agg(F.min("avg").alias("m"))
+        iso = m_it.groupBy("t").agg(F.max("m").alias("iso"))
+        out = (
+            cums.join(iso, cums.b == iso.t)
+            .select(
+                "b",
+                "cnt",
+                "pos",
+                F.round(F.col("pos") * 1.0 / F.col("cnt"), 6).alias("raw_rate"),
+                F.round(F.col("iso"), 6).alias("iso_rate"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        return out
 
 
 @register(
@@ -4591,8 +4583,8 @@ def q300_corpus_release_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ai_batch_processing_spark.operators.text import tokens_expr
 
-    docs = load_tables(spark, sf_dir, ["documents"])["documents"].persist()
-    try:
+    with pin_scope():
+        docs = cache(load_tables(spark, sf_dir, ["documents"])["documents"])
         base = docs.agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.countDistinct(F.md5("text")).cast("long").alias("n_uniq"),
@@ -4662,8 +4654,6 @@ def q300_corpus_release_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        docs.unpersist()
     return out
 
 
@@ -4711,28 +4701,28 @@ def blocklist_census(
             .cast("long")
             .alias("hits"),
         )
-        .persist()
     )
-    per = (
-        hd.where(F.col("hits") > 0)
-        .groupBy("phrase")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("hits").cast("long").alias("n_hits"),
+    with pin_scope():
+        hd = cache(hd)
+        per = (
+            hd.where(F.col("hits") > 0)
+            .groupBy("phrase")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_docs"),
+                F.sum("hits").cast("long").alias("n_hits"),
+            )
         )
-    )
-    anyagg = (
-        hd.groupBy("did")
-        .agg(F.sum("hits").alias("h"))
-        .agg(
-            F.lit("__any__").alias("phrase"),
-            F.sum(F.when(F.col("h") > 0, 1).otherwise(0)).cast("long").alias("n_docs"),
-            F.sum("h").cast("long").alias("n_hits"),
+        anyagg = (
+            hd.groupBy("did")
+            .agg(F.sum("hits").alias("h"))
+            .agg(
+                F.lit("__any__").alias("phrase"),
+                F.sum(F.when(F.col("h") > 0, 1).otherwise(0)).cast("long").alias("n_docs"),
+                F.sum("h").cast("long").alias("n_hits"),
+            )
         )
-    )
-    out = per.unionByName(anyagg).orderBy("phrase").localCheckpoint(eager=True)
-    hd.unpersist()
-    return out
+        out = per.unionByName(anyagg).orderBy("phrase").localCheckpoint(eager=True)
+        return out
 
 
 @register(
@@ -5769,37 +5759,36 @@ def rank_blend_top_docs(
     orderBy+limit (TakeOrderedAndProject). ``scored`` is persisted for
     the loop (each score column reads it once for its histogram and once
     for the join-back; without the cache the expensive upstream lineage —
-    q336's flesch scan — recomputes per score) and released via the
-    eager-checkpoint finish, so nothing stays in session storage.
+    q336's flesch scan — recomputes per score) and released when the
+    eager checkpoint of the result has run, so nothing stays in session
+    storage.
     """
-    scored = scored.persist()
-    out = scored
-    for s in score_cols:
-        h = scored.groupBy(s).agg(F.count(F.lit(1)).cast("long").alias("_c"))
-        w = (
-            Window.partitionBy(F.lit(0))
-            .orderBy(F.col(s).desc())
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        # bounded window: runs over the distinct-value histogram, not rows
-        ranks = h.withColumn("_cum", F.sum("_c").over(w)).select(
-            s, (F.col("_cum") - F.col("_c") + 1).alias(f"r_{s}")
-        )
-        out = out.join(ranks, s)
-    import functools
+    with pin_scope():
+        scored = cache(scored)
+        out = scored
+        for s in score_cols:
+            h = scored.groupBy(s).agg(F.count(F.lit(1)).cast("long").alias("_c"))
+            w = (
+                Window.partitionBy(F.lit(0))
+                .orderBy(F.col(s).desc())
+                .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+            )
+            # bounded window: runs over the distinct-value histogram, not rows
+            ranks = h.withColumn("_cum", F.sum("_c").over(w)).select(
+                s, (F.col("_cum") - F.col("_c") + 1).alias(f"r_{s}")
+            )
+            out = out.join(ranks, s)
+        import functools
 
-    rank_sum = functools.reduce(lambda a, b: a + b, [F.col(f"r_{s}") for s in score_cols])
-    ranked = out.select(id_col, *[f"r_{s}" for s in score_cols], rank_sum.alias("rank_sum"))
-    w_rnk = Window.partitionBy(F.lit(0)).orderBy("rank_sum", id_col)
-    from ai_batch_processing_spark.operators.corpus import _finish
-
-    return _finish(
-        ranked.orderBy("rank_sum", id_col)
-        .limit(top_k)
-        .withColumn("rnk", F.row_number().over(w_rnk).cast("long"))
-        .select("rnk", id_col, *[f"r_{s}" for s in score_cols], "rank_sum"),
-        [scored],
-        materialize=True,
+        rank_sum = functools.reduce(lambda a, b: a + b, [F.col(f"r_{s}") for s in score_cols])
+        ranked = out.select(id_col, *[f"r_{s}" for s in score_cols], rank_sum.alias("rank_sum"))
+        w_rnk = Window.partitionBy(F.lit(0)).orderBy("rank_sum", id_col)
+        return (
+            ranked.orderBy("rank_sum", id_col)
+            .limit(top_k)
+            .withColumn("rnk", F.row_number().over(w_rnk).cast("long"))
+            .select("rnk", id_col, *[f"r_{s}" for s in score_cols], "rank_sum")
+            .localCheckpoint(eager=True)
     )
 
 

@@ -30,6 +30,7 @@ import random
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ai_batch_processing_spark.jobs import cache, pin_scope
 from ai_batch_processing_spark.registry import register
 from ai_batch_processing_spark.session import load_tables
 
@@ -472,8 +473,9 @@ def minhash_dedup_pairs(
     # once per aggregate. The cached relation is columnar, so the banding
     # self-join's consumers read only (id, sig) batches and never
     # deserialize the shingle sets. MEMORY_AND_DISK default → spills
-    # per-partition at scale.
-    combined = sig_and_sets(shingle_hash_stream(df, id_col, text_col, k), num_perm, seed).persist()
+    # per-partition at scale. The returned pairs are lazy over it, so the
+    # caller's pin_scope releases it.
+    combined = cache(sig_and_sets(shingle_hash_stream(df, id_col, text_col, k), num_perm, seed))
     sigs = combined.select("id", "sig")
     # distinct=False: the pair dedup shuffle moves AFTER the est filter —
     # multi-band duplicates just re-evaluate the cheap estimate, and the
@@ -830,7 +832,10 @@ def q42_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # low-similarity corpus (candidates ≫ survivors, the adversarial
     # 100 TB shape) the probe re-engages the screen (test-pinned on a
     # synthetic corpus).
-    return minhash_dedup_pairs(corpus, "id", "text", threshold=0.5, bands=8)
+    with pin_scope():
+        return minhash_dedup_pairs(corpus, "id", "text", threshold=0.5, bands=8).localCheckpoint(
+            eager=True
+        )
 
 
 @register(
@@ -873,10 +878,12 @@ def q131_minhash_jaccard_verified(spark: SparkSession, sf_dir: str) -> DataFrame
     # on corpora with >500-doc position collisions (boilerplate). Fine
     # here: the corpus is bounded to 300 docs, so the r=1 pair fan-out is
     # bounded too.
-    return minhash_dedup_pairs(
-        corpus, "id", "text", k=5, num_perm=64, bands=64, threshold=0.5,
-        max_bucket=1_000_000_000,
-    ).orderBy("id_a", "id_b")
+    with pin_scope():
+        out = minhash_dedup_pairs(
+            corpus, "id", "text", k=5, num_perm=64, bands=64, threshold=0.5,
+            max_bucket=1_000_000_000,
+        ).localCheckpoint(eager=True)
+    return out.orderBy("id_a", "id_b")
 
 
 def simhash_pairs_oracle_sql(head_ctes: str, id_col: str, bits: int, max_hamming: int) -> str:
@@ -1975,55 +1982,55 @@ def prefix_filter_pairs(
     tok = (
         df.select(F.col(id_col).alias("id"), F.explode(tokens_expr(text_col)).alias("term"))
         .dropDuplicates(["id", "term"])
-        .persist()
     )
-    sizes = tok.groupBy("id").agg(F.count(F.lit(1)).cast("long").alias("n"))
-    dfreq = tok.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
-    # BOUNDED window: partitioned per document, ≤ doc-token-count rows
-    w = Window.partitionBy("id").orderBy("df", "term")
-    ranked = (
-        tok.join(dfreq, "term")
-        .join(sizes, "id")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(
-            F.col("rn")
-            <= F.col("n") - F.ceil(F.col("n") * threshold_pct / 100.0).cast("long") + 1
+    with pin_scope():
+        tok = cache(tok)
+        sizes = tok.groupBy("id").agg(F.count(F.lit(1)).cast("long").alias("n"))
+        dfreq = tok.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
+        # BOUNDED window: partitioned per document, ≤ doc-token-count rows
+        w = Window.partitionBy("id").orderBy("df", "term")
+        ranked = (
+            tok.join(dfreq, "term")
+            .join(sizes, "id")
+            .withColumn("rn", F.row_number().over(w))
+            .filter(
+                F.col("rn")
+                <= F.col("n") - F.ceil(F.col("n") * threshold_pct / 100.0).cast("long") + 1
+            )
+            .select("id", "term")
         )
-        .select("id", "term")
-    )
-    a = ranked.alias("pa")
-    b = ranked.alias("pb")
-    cands = (
-        a.join(b, (F.col("pa.term") == F.col("pb.term")) & (F.col("pa.id") < F.col("pb.id")))
-        .select(F.col("pa.id").alias("id_a"), F.col("pb.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    ta = tok.select(F.col("id").alias("id_a"), "term")
-    tb = tok.select(F.col("id").alias("_idb"), F.col("term").alias("_tb"))
-    inter = (
-        cands.join(ta, "id_a")
-        .join(tb, (F.col("id_b") == F.col("_idb")) & (F.col("term") == F.col("_tb")), "left_semi")
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("inter"))
-    )
-    na = sizes.select(F.col("id").alias("id_a"), F.col("n").alias("na"))
-    nb = sizes.select(F.col("id").alias("id_b"), F.col("n").alias("nb"))
-    uni = F.col("na") + F.col("nb") - F.col("inter")
-    out = (
-        inter.join(na, "id_a")
-        .join(nb, "id_b")
-        .filter(F.col("inter") * 100 >= F.lit(threshold_pct) * uni)
-        .select(
-            "id_a",
-            "id_b",
-            "inter",
-            uni.cast("long").alias("uni"),
-            F.round(F.col("inter") * 1.0 / uni, 6).alias("jaccard"),
+        a = ranked.alias("pa")
+        b = ranked.alias("pb")
+        cands = (
+            a.join(b, (F.col("pa.term") == F.col("pb.term")) & (F.col("pa.id") < F.col("pb.id")))
+            .select(F.col("pa.id").alias("id_a"), F.col("pb.id").alias("id_b"))
+            .dropDuplicates(["id_a", "id_b"])
         )
-        .localCheckpoint(eager=True)
-    )
-    tok.unpersist()
-    return out
+        ta = tok.select(F.col("id").alias("id_a"), "term")
+        tb = tok.select(F.col("id").alias("_idb"), F.col("term").alias("_tb"))
+        inter = (
+            cands.join(ta, "id_a")
+            .join(tb, (F.col("id_b") == F.col("_idb")) & (F.col("term") == F.col("_tb")), "left_semi")
+            .groupBy("id_a", "id_b")
+            .agg(F.count(F.lit(1)).cast("long").alias("inter"))
+        )
+        na = sizes.select(F.col("id").alias("id_a"), F.col("n").alias("na"))
+        nb = sizes.select(F.col("id").alias("id_b"), F.col("n").alias("nb"))
+        uni = F.col("na") + F.col("nb") - F.col("inter")
+        out = (
+            inter.join(na, "id_a")
+            .join(nb, "id_b")
+            .filter(F.col("inter") * 100 >= F.lit(threshold_pct) * uni)
+            .select(
+                "id_a",
+                "id_b",
+                "inter",
+                uni.cast("long").alias("uni"),
+                F.round(F.col("inter") * 1.0 / uni, 6).alias("jaccard"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        return out
 
 
 @register(

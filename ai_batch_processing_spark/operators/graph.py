@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ai_batch_processing_spark.jobs import cache, pin_scope
 from ai_batch_processing_spark.registry import register
 from ai_batch_processing_spark.session import load_tables
 
@@ -91,9 +92,10 @@ def pagerank(
     # fans out to the conf value. AQE cannot do this for us: the cached
     # layout must be an explicit REPARTITION_BY_NUM (below), which is
     # exactly the form AQE leaves alone.
-    e_raw = edges.persist()
-    caches: list[DataFrame] = [e_raw]
-    try:
+    # The scope releases the caches even when an executor loss / OOM
+    # raises mid-loop; both branches store their result eagerly first.
+    with pin_scope():
+        e_raw = cache(edges)
         integral = {"tinyint", "smallint", "int", "bigint"}
         if (
             single_task_edges is not None
@@ -103,15 +105,7 @@ def pagerank(
             and e_raw.count() <= single_task_edges
         ):
             return _pagerank_single_task(nodes, e_raw, iterations, damping)
-        return _pagerank_impl(
-            nodes, e_raw, iterations, damping, checkpoint_every, conf_part, caches
-        )
-    finally:
-        # a library function must not leak storage across calls — even when
-        # an executor loss / OOM raises mid-loop (the eager final checkpoint
-        # materializes ranks before the caches are dropped)
-        for c in caches:
-            c.unpersist()
+        return _pagerank_impl(nodes, e_raw, iterations, damping, checkpoint_every, conf_part)
 
 
 def _pagerank_single_task(
@@ -202,7 +196,6 @@ def _pagerank_impl(
     damping: float,
     checkpoint_every: int,
     conf_part: int,
-    caches: list[DataFrame],
 ) -> DataFrame:
     n_edges = e_raw.count()
     n_part = max(1, min(conf_part, -(-n_edges // 100_000)))
@@ -216,13 +209,7 @@ def _pagerank_impl(
     # join with no Exchange above it; the AQE-coalescible bare
     # .repartition("src") does NOT) — so the EDGE side, the big side at
     # scale, never re-shuffles inside the loop
-    e = (
-        e_raw.join(odeg, "src")
-        .select("src", "dst", "odeg")
-        .repartition(n_part, "src")
-        .persist()
-    )
-    caches.append(e)
+    e = cache(e_raw.join(odeg, "src").select("src", "dst", "odeg").repartition(n_part, "src"))
     # (id, n) materialized ONCE, hash-partitioned on id for the same
     # reason — every iteration joins onto this checkpointed frame (and
     # the rank table it produces inherits the layout) instead of
@@ -255,7 +242,7 @@ def _pagerank_impl(
             # caller's cache cleanup) need the RESULT materialized;
             # intermediate rounds only need their lineage cut (lazy)
             ranks = ranks.localCheckpoint(eager=last)
-    # ranks is eagerly checkpointed before the caller's finally drops the
+    # ranks is eagerly checkpointed before the caller's scope drops the
     # caches — nothing downstream depends on e's storage
     return ranks
 
@@ -691,13 +678,11 @@ def q162_pagerank_replicated_verified(spark: SparkSession, sf_dir: str) -> DataF
         .select("vec_id", "embedding")
     )
     # same persist rationale as q150 (kmeans 4× + assignment 2× + nodes)
-    corpus = replicate_perturbed(emb, replicas=_PR2_REPLICAS, perturb="rational").persist()
-    try:
+    with pin_scope():
+        corpus = cache(replicate_perturbed(emb, replicas=_PR2_REPLICAS, perturb="rational"))
         nodes = corpus.select(F.col("vec_id").alias("id"))
         edges = knn_edges_approx(corpus, k=_PR_K, nlist=_PR3_NLIST, nprobe=_PR3_NLIST)
         ranks = pagerank(nodes, edges, iterations=_PR_ITERS)
-    finally:
-        corpus.unpersist()
     return ranks.select(
         F.col("id").alias("vec_id"), F.round("rank", 6).alias("rank")
     ).orderBy("vec_id")
@@ -732,15 +717,12 @@ def q150_pagerank_approx_knn_graph(spark: SparkSession, sf_dir: str) -> DataFram
     # without the cache (measured r10: 0.5 s of the sf0.1 wall; at scale
     # the same passes re-read the parquet 7×). MEMORY_AND_DISK — spills,
     # never OOMs. pagerank() returns its ranks eagerly checkpointed, so
-    # the unpersist below frees storage with nothing left to recompute
-    # (the module's no-leak convention).
-    corpus = replicate_perturbed(emb, replicas=_PR2_REPLICAS).persist()
-    try:
+    # the scope frees the cache with nothing left to recompute.
+    with pin_scope():
+        corpus = cache(replicate_perturbed(emb, replicas=_PR2_REPLICAS))
         nodes = corpus.select(F.col("vec_id").alias("id"))
         edges = knn_edges_approx(corpus, k=_PR_K, nlist=_PR2_NLIST, nprobe=_PR2_NPROBE)
         ranks = pagerank(nodes, edges, iterations=_PR_ITERS)
-    finally:
-        corpus.unpersist()
     return ranks.select(
         F.col("id").alias("vec_id"), F.round("rank", 6).alias("rank")
     ).orderBy("vec_id")
@@ -1046,9 +1028,9 @@ def q231_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
         .filter(F.col("vec_id") < _PR_CAP)
         .select("vec_id", "embedding", "label")
-        .persist()
     )
-    try:
+    with pin_scope():
+        emb = cache(emb)
         nodes = emb.select(
             F.col("vec_id").alias("id"),
             F.when(F.col("vec_id") % _LP_SEED_MOD == 0, F.col("label")).alias(
@@ -1060,10 +1042,8 @@ def q231_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("neighbor_id").alias("dst"),
             F.col("score").alias("w"),
         )
+        # the last round's labels are eagerly checkpointed: stored already
         out = label_propagation(nodes, edges, iterations=_LP_ITERS)
-        out.count()  # materialize while the corpus cache is alive
-    finally:
-        emb.unpersist()
     return out.select(F.col("id").alias("vec_id"), "label").orderBy("vec_id")
 
 
@@ -1287,17 +1267,14 @@ def q247_hits_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
         .filter(F.col("vec_id") < _PR_CAP)
         .select("vec_id", "embedding")
-        .persist()
     )
-    try:
+    with pin_scope():
+        emb = cache(emb)
         nodes = emb.select(F.col("vec_id").alias("id"))
         edges = cosine_topk(emb, emb, k=_PR_K).select(
             F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst")
         )
-        out = hits(nodes, edges, iterations=_HITS_ITERS)
-        out.count()
-    finally:
-        emb.unpersist()
+        out = hits(nodes, edges, iterations=_HITS_ITERS).localCheckpoint(eager=True)
     return out.select(F.col("id").alias("vec_id"), "authority", "hub").orderBy("vec_id")
 
 
@@ -1423,17 +1400,13 @@ def q252_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
         .filter(F.col("vec_id") < _PR_CAP)
         .select("vec_id", "embedding")
-        .persist()
     )
-    try:
+    with pin_scope():
+        emb = cache(emb)
         edges = cosine_topk(emb, emb, k=_PR_K).select(
             F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst")
         )
-        out = degree_assortativity(edges)
-        out.count()
-    finally:
-        emb.unpersist()
-    return out
+        return degree_assortativity(edges).localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1471,11 +1444,10 @@ def kcore_members(
         .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .filter(F.col("src") != F.col("dst"))
         .dropDuplicates(["src", "dst"])
-        .persist()
     )
     alive = nodes.select("id")
-    deg = None
-    try:
+    with pin_scope():
+        sym = cache(sym)
         for r in range(rounds):
             # two disambiguated projections of the SAME alive frame — a
             # self-referencing semi-join pair trips attribute resolution
@@ -1491,14 +1463,11 @@ def kcore_members(
             last = r == rounds - 1
             if last or (r + 1) % checkpoint_every == 0:
                 alive = alive.localCheckpoint(eager=last)
-        out = (
+        return (
             deg.filter(F.col("degree") >= k)
             .select(F.col("src").alias("id"), "degree")
             .localCheckpoint(eager=True)
         )
-        return out
-    finally:
-        sym.unpersist()
 
 
 def _kcore_oracle_sql(cap: int, knn_k: int, k: int, rounds: int) -> str:
@@ -1688,48 +1657,48 @@ def adamic_adar_topk(edges: DataFrame, top_k: int = 20) -> DataFrame:
         )
         .where(F.col("a") != F.col("b"))
         .distinct()
-        .persist()
     )
-    sym = und.unionAll(und.select(F.col("b").alias("a"), F.col("a").alias("b"))).select(
-        F.col("a").alias("w"), F.col("b").alias("x")
-    )
-    deg = sym.groupBy("w").agg(F.count(F.lit(1)).alias("degree"))
-    # per-center weight on the 6dp grid as an exact long: round(1e6/ln(deg)).
-    # A degree-1 node cannot be a common neighbor, and ln(1)=0 would divide
-    # by zero under ANSI — drop it before the weight, not in the expression.
-    wt = deg.where(F.col("degree") >= 2).select(
-        "w",
-        F.round(F.lit(1e6) / F.log(F.col("degree").cast("double")))
-        .cast("long")
-        .alias("w_micro"),
-    )
-    n1 = sym.select("w", F.col("x").alias("x1"))
-    n2 = sym.select("w", F.col("x").alias("x2"))
-    wedges = (
-        n1.join(n2, "w")
-        .where(F.col("x1") < F.col("x2"))
-        .join(wt, "w")
-        .select(F.col("x1").alias("a"), F.col("x2").alias("b"), "w_micro")
-    )
-    non_edges = wedges.join(und, ["a", "b"], "left_anti")
-    scored = non_edges.groupBy("a", "b").agg(
-        F.count(F.lit(1)).cast("long").alias("common_neighbors"),
-        F.sum("w_micro").cast("long").alias("aa_micro"),
-    )
-    out = (
-        scored.orderBy(F.desc("aa_micro"), "a", "b")
-        .limit(top_k)
-        .select(
-            "a",
-            "b",
-            "common_neighbors",
-            "aa_micro",
-            F.round(F.col("aa_micro") / 1e6, 6).alias("aa_score"),
+    with pin_scope():
+        und = cache(und)
+        sym = und.unionAll(und.select(F.col("b").alias("a"), F.col("a").alias("b"))).select(
+            F.col("a").alias("w"), F.col("b").alias("x")
         )
-        .localCheckpoint(eager=True)
-    )
-    und.unpersist()
-    return out
+        deg = sym.groupBy("w").agg(F.count(F.lit(1)).alias("degree"))
+        # per-center weight on the 6dp grid as an exact long: round(1e6/ln(deg)).
+        # A degree-1 node cannot be a common neighbor, and ln(1)=0 would divide
+        # by zero under ANSI — drop it before the weight, not in the expression.
+        wt = deg.where(F.col("degree") >= 2).select(
+            "w",
+            F.round(F.lit(1e6) / F.log(F.col("degree").cast("double")))
+            .cast("long")
+            .alias("w_micro"),
+        )
+        n1 = sym.select("w", F.col("x").alias("x1"))
+        n2 = sym.select("w", F.col("x").alias("x2"))
+        wedges = (
+            n1.join(n2, "w")
+            .where(F.col("x1") < F.col("x2"))
+            .join(wt, "w")
+            .select(F.col("x1").alias("a"), F.col("x2").alias("b"), "w_micro")
+        )
+        non_edges = wedges.join(und, ["a", "b"], "left_anti")
+        scored = non_edges.groupBy("a", "b").agg(
+            F.count(F.lit(1)).cast("long").alias("common_neighbors"),
+            F.sum("w_micro").cast("long").alias("aa_micro"),
+        )
+        out = (
+            scored.orderBy(F.desc("aa_micro"), "a", "b")
+            .limit(top_k)
+            .select(
+                "a",
+                "b",
+                "common_neighbors",
+                "aa_micro",
+                F.round(F.col("aa_micro") / 1e6, 6).alias("aa_score"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        return out
 
 
 _AA_TOPK = 20
@@ -1824,48 +1793,47 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
         )
         .where(F.col("a") != F.col("b"))
         .distinct()
-        .persist()
     )
-    lab = labels.select("id", F.coalesce(F.col("label"), F.lit(-1)).alias("label"))
-    deg = (
-        und.select(F.col("a").alias("id"))
-        .unionAll(und.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
-    d_c = (
-        deg.join(lab, "id")
-        .groupBy("label")
-        .agg(F.sum("degree").cast("long").alias("dc"))
-    )
-    la = lab.select(F.col("id").alias("a"), F.col("label").alias("la"))
-    lb = lab.select(F.col("id").alias("b"), F.col("label").alias("lb"))
-    m_c = (
-        und.join(la, "a")
-        .join(lb, "b")
-        .where(F.col("la") == F.col("lb"))
-        .groupBy(F.col("la").alias("label"))
-        .agg(F.count(F.lit(1)).cast("long").alias("mc"))
-    )
-    m = und.agg(F.count(F.lit(1)).cast("long").alias("m"))
-    per = (
-        d_c.join(m_c, "label", "left")
-        .select("label", "dc", F.coalesce("mc", F.lit(0)).alias("mc"))
-        .crossJoin(F.broadcast(m))
-    )
-    term = F.round(
-        F.col("mc").cast("double") / F.col("m")
-        - (F.col("dc").cast("double") / (2 * F.col("m")))
-        * (F.col("dc").cast("double") / (2 * F.col("m"))),
-        6,
-    )
-    out = per.select("m", term.alias("t")).groupBy("m").agg(
-        F.count(F.lit(1)).cast("long").alias("n_communities"),
-        F.round(F.sum("t"), 6).alias("modularity"),
-    ).select(F.col("m").alias("m_edges"), "n_communities", "modularity")
-    out = out.localCheckpoint(eager=True)
-    und.unpersist()
-    return out
+    with pin_scope():
+        und = cache(und)
+        lab = labels.select("id", F.coalesce(F.col("label"), F.lit(-1)).alias("label"))
+        deg = (
+            und.select(F.col("a").alias("id"))
+            .unionAll(und.select(F.col("b").alias("id")))
+            .groupBy("id")
+            .agg(F.count(F.lit(1)).alias("degree"))
+        )
+        d_c = (
+            deg.join(lab, "id")
+            .groupBy("label")
+            .agg(F.sum("degree").cast("long").alias("dc"))
+        )
+        la = lab.select(F.col("id").alias("a"), F.col("label").alias("la"))
+        lb = lab.select(F.col("id").alias("b"), F.col("label").alias("lb"))
+        m_c = (
+            und.join(la, "a")
+            .join(lb, "b")
+            .where(F.col("la") == F.col("lb"))
+            .groupBy(F.col("la").alias("label"))
+            .agg(F.count(F.lit(1)).cast("long").alias("mc"))
+        )
+        m = und.agg(F.count(F.lit(1)).cast("long").alias("m"))
+        per = (
+            d_c.join(m_c, "label", "left")
+            .select("label", "dc", F.coalesce("mc", F.lit(0)).alias("mc"))
+            .crossJoin(F.broadcast(m))
+        )
+        term = F.round(
+            F.col("mc").cast("double") / F.col("m")
+            - (F.col("dc").cast("double") / (2 * F.col("m")))
+            * (F.col("dc").cast("double") / (2 * F.col("m"))),
+            6,
+        )
+        out = per.select("m", term.alias("t")).groupBy("m").agg(
+            F.count(F.lit(1)).cast("long").alias("n_communities"),
+            F.round(F.sum("t"), 6).alias("modularity"),
+        ).select(F.col("m").alias("m_edges"), "n_communities", "modularity")
+        return out.localCheckpoint(eager=True)
 
 
 def _modularity_oracle_sql() -> str:
@@ -1948,9 +1916,9 @@ def q298_labelprop_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
         .filter(F.col("vec_id") < _PR_CAP)
         .select("vec_id", "embedding", "label")
-        .persist()
     )
-    try:
+    with pin_scope():
+        emb = cache(emb)
         nodes = emb.select(
             F.col("vec_id").alias("id"),
             F.when(F.col("vec_id") % _LP_SEED_MOD == 0, F.col("label")).alias(
@@ -1965,10 +1933,7 @@ def q298_labelprop_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         prop = label_propagation(nodes, wedges, iterations=_LP_ITERS).select(
             "id", "label"
         )
-        out = modularity(wedges.select("src", "dst"), prop)
-    finally:
-        emb.unpersist()
-    return out
+        return modularity(wedges.select("src", "dst"), prop)
 
 
 # ---------------------------------------------------------------------------
@@ -1995,14 +1960,12 @@ def personalized_pagerank(
     round, lineage cut every ``checkpoint_every`` rounds. Non-seed sinks
     simply decay (no dangling redistribution, the q122 convention).
     """
-    e_raw = edges.persist()
-    caches: list[DataFrame] = [e_raw]
-    try:
+    with pin_scope():
+        e_raw = cache(edges)
         odeg = e_raw.groupBy("src").agg(F.count(F.lit(1)).alias("odeg"))
-        e = e_raw.join(odeg, "src").persist()
-        caches.append(e)
+        e = cache(e_raw.join(odeg, "src"))
         scnt = seeds.agg(F.count(F.lit(1)).cast("double").alias("ns"))
-        p = (
+        p = cache(
             nodes.join(seeds.select(F.col("id").alias("_sid")), nodes.id == F.col("_sid"), "left")
             .crossJoin(F.broadcast(scnt))
             .select(
@@ -2011,9 +1974,7 @@ def personalized_pagerank(
                 .otherwise(0.0)
                 .alias("p"),
             )
-            .persist()
         )
-        caches.append(p)
         ranks = p.select("id", F.col("p").alias("rank"))
         for i in range(iterations):
             inflow = (
@@ -2035,12 +1996,8 @@ def personalized_pagerank(
             last = i == iterations - 1
             if last or (i + 1) % checkpoint_every == 0:
                 ranks = ranks.localCheckpoint(eager=last)
+        # the eager final checkpoint materializes ranks BEFORE the caches drop
         return ranks
-    finally:
-        # the eager final checkpoint materializes ranks BEFORE the caches
-        # drop (the module-wide storage contract)
-        for c in caches:
-            c.unpersist()
 
 
 _PPR_SEED_MOD = 50

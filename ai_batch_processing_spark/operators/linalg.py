@@ -31,6 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ai_batch_processing_spark.jobs import cache, pin_scope
 from ai_batch_processing_spark.operators.similarity import _round_half_up
 from ai_batch_processing_spark.registry import register
 from ai_batch_processing_spark.session import load_tables
@@ -178,12 +179,9 @@ def _require_dim(emb: DataFrame, dim: int, vec_col: str = "embedding") -> None:
 def q230_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
     _require_dim(emb, _PCA_DIM)
-    emb = emb.persist()
-    try:
-        out = pca_top_component(emb, n_iter=_PCA_ITERS)
-        out.count()  # materialize while the corpus cache is alive
-    finally:
-        emb.unpersist()
+    with pin_scope():
+        # the component comes back as driver-local rows: stored already
+        out = pca_top_component(cache(emb), n_iter=_PCA_ITERS)
     return out.orderBy("pos")
 
 
@@ -461,13 +459,10 @@ def _pca2_outliers_oracle_sql(n_iter: int, dim: int, top_n: int) -> str:
 def q236_pca_top2_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
     _require_dim(emb, _PCA_DIM)
-    emb = emb.persist()
-    try:
+    with pin_scope():
+        emb = cache(emb)
         mu, comps = pca_components(emb, n_components=2, n_iter=_PCA_ITERS)
-        out = pca_project(emb, mu, comps)
-        out = out.localCheckpoint(eager=True)  # materialize before unpersist
-    finally:
-        emb.unpersist()
+        out = pca_project(emb, mu, comps).localCheckpoint(eager=True)
     return out.orderBy("vec_id")
 
 
@@ -491,19 +486,16 @@ _PCA_OUTLIER_TOPN = 20
 def q237_pca_reconstruction_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
     _require_dim(emb, _PCA_DIM)
-    emb = emb.persist()
-    try:
+    with pin_scope():
+        emb = cache(emb)
         mu, comps = pca_components(emb, n_components=2, n_iter=_PCA_ITERS)
-        out = (
+        return (
             pca_project(emb, mu, comps, residual_norm=True)
             .select("vec_id", "resid_norm")
             .orderBy(F.desc("resid_norm"), F.asc("vec_id"))
             .limit(_PCA_OUTLIER_TOPN)
+            .localCheckpoint(eager=True)
         )
-        out = out.localCheckpoint(eager=True)
-    finally:
-        emb.unpersist()
-    return out
 
 
 # ---------------------------------------------------------------------------

@@ -33,6 +33,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ai_batch_processing_spark.jobs import cache, pin_scope
 from ai_batch_processing_spark.registry import register
 from ai_batch_processing_spark.session import load_tables
 
@@ -358,14 +359,13 @@ def media_near_dup_pairs(
     only Python is the one phash crossing), then exact hamming via
     xor+bit_count verifies candidates. Never an all-pairs join.
     """
-    # Persisted: the band self-join consumes the hashed relation through
-    # two plan branches — without the persist each side re-runs the
+    # Cached: the band self-join consumes the hashed relation through
+    # two plan branches — without the cache each side re-runs the
     # Arrow/Python phash crossing over the whole corpus, doubling the
-    # single most expensive step.
-    hashed = (
-        media_phash(df, payload_col, hasher=hasher)
-        .select(F.col(id_col).alias("id"), "phash")
-        .persist()
+    # single most expensive step. The returned pairs are lazy over it, so
+    # the caller's pin_scope releases it.
+    hashed = cache(
+        media_phash(df, payload_col, hasher=hasher).select(F.col(id_col).alias("id"), "phash")
     )
     band_bits = (bits + 3) // 4
     mask = (1 << band_bits) - 1
@@ -420,7 +420,9 @@ def q61_media_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select((F.col("doc_id") + 100000).alias("doc_id"), F.col("text"))
     )
     corpus = attach_payload(base.unionAll(dups))
-    return media_near_dup_pairs(corpus, max_hamming=3).orderBy("id_a", "id_b")
+    with pin_scope():
+        out = media_near_dup_pairs(corpus, max_hamming=3).localCheckpoint(eager=True)
+    return out.orderBy("id_a", "id_b")
 
 
 def _phash_portable_oracle(bits: int = 32, max_hamming: int = 3) -> str:
@@ -490,9 +492,11 @@ def q146_media_phash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = attach_payload(base.unionAll(dups))
     portable = lambda p: _simhash_bytes(p, bits=32, mix="portable")  # noqa: E731
-    return media_near_dup_pairs(
-        corpus, max_hamming=3, bits=32, hasher=portable
-    ).orderBy("id_a", "id_b")
+    with pin_scope():
+        out = media_near_dup_pairs(corpus, max_hamming=3, bits=32, hasher=portable).localCheckpoint(
+            eager=True
+        )
+    return out.orderBy("id_a", "id_b")
 
 
 # ---------------------------------------------------------------------------

@@ -30,6 +30,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ai_batch_processing_spark.jobs import cache, pin_scope
 from ai_batch_processing_spark.registry import register
 from ai_batch_processing_spark.session import load_tables, shuffle_partitions
 
@@ -802,9 +803,11 @@ def embedding_near_dup_pairs_lsh(
     bound the m² blow-up, same cap as the MinHash banding.
     """
     tables = _lsh_tables(dim, n_planes, n_tables, seed)
-    base = df.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("_v"), _norm(F.col(vec_col)).alias("_n")
-    ).persist()
+    base = cache(
+        df.select(
+            F.col(id_col).alias("id"), F.col(vec_col).alias("_v"), _norm(F.col(vec_col)).alias("_n")
+        )
+    )
     # vectorized bucketing (see _table_buckets_vec: bit-identical signs),
     # lazily checkpointed — the signature pass feeds THREE consumers
     # (bucket counts + both sides of the self-join) and must run once
@@ -912,8 +915,11 @@ def q46_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("vec_id") < 300) & (F.col("vec_id") % 5 == 0))
         .select((F.col("vec_id") + 100000).alias("id"), "embedding")
     )
-    corpus = base.unionAll(dups)
-    return embedding_near_dup_pairs_lsh(corpus, threshold=0.99, id_col="id").orderBy("id_a", "id_b")
+    with pin_scope():
+        out = embedding_near_dup_pairs_lsh(
+            base.unionAll(dups), threshold=0.99, id_col="id"
+        ).localCheckpoint(eager=True)
+    return out.orderBy("id_a", "id_b")
 
 
 @register(
@@ -1273,7 +1279,9 @@ def q118_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("vec_id") < 300) & (F.col("vec_id") % 5 == 0))
         .select((F.col("vec_id") + 100000).alias("id"), "embedding")
     )
-    return semantic_dedup_clusters(base.unionAll(dups)).orderBy("keep_id")
+    with pin_scope():
+        out = semantic_dedup_clusters(base.unionAll(dups)).localCheckpoint(eager=True)
+    return out.orderBy("keep_id")
 
 
 # --------------------------------------------------------------------------
@@ -3478,60 +3486,58 @@ def margin_best_pairs(
                 _dot(F.col("_av"), F.col("_bv")) / (F.col("_an") * F.col("_bn")), 6
             ).alias("cosine"),
         )
-        .persist()  # scored ONCE: ka, kb, and the final join all reuse it
     )
-    wa = Window.partitionBy("id_a").orderBy(F.desc("cosine"), F.asc("id_b"))
-    wb = Window.partitionBy("id_b").orderBy(F.desc("cosine"), F.asc("id_a"))
-    ranked = pairs.select(
-        "id_a",
-        "id_b",
-        "cosine",
-        F.row_number().over(wa).alias("_ra"),
-        F.row_number().over(wb).alias("_rb"),
-    )
-    # neighborhood statistic = ROUND(SUM(top-k cosines), 6), NOT the
-    # average: a sum of k 6dp decimals IS a 6dp decimal, so the round
-    # snaps both engines to the same exact value regardless of summation
-    # order — whereas AVG over k=4 lands on the .25e-6 grid where a 1-ulp
-    # order difference flips the 6th decimal (observed in the first gate
-    # run). The /k folds into the margin ratio below.
-    ka = (
-        ranked.filter(F.col("_ra") <= k)
-        .groupBy("id_a")
-        .agg(F.round(F.sum("cosine"), 6).alias("_ka"))
-    )
-    kb = (
-        ranked.filter(F.col("_rb") <= k)
-        .groupBy("id_b")
-        .agg(F.round(F.sum("cosine"), 6).alias("_kb"))
-    )
-    # margin = cos / ((sum_a/k + sum_b/k) / 2) = cos * 2k / (sum_a + sum_b)
-    ssum = F.col("_ka") + F.col("_kb")
-    scored = (
-        pairs.join(ka, "id_a")
-        .join(kb, "id_b")
-        .select(
+    with pin_scope():
+        pairs = cache(pairs)  # scored ONCE: ka, kb, and the final join all reuse it
+        wa = Window.partitionBy("id_a").orderBy(F.desc("cosine"), F.asc("id_b"))
+        wb = Window.partitionBy("id_b").orderBy(F.desc("cosine"), F.asc("id_a"))
+        ranked = pairs.select(
             "id_a",
             "id_b",
             "cosine",
-            F.when(
-                ssum > 0, F.round(F.col("cosine") * F.lit(2.0 * k) / ssum, 6)
-            ).alias("margin"),
+            F.row_number().over(wa).alias("_ra"),
+            F.row_number().over(wb).alias("_rb"),
         )
-    )
-    wbest = Window.partitionBy("id_a").orderBy(
-        F.desc_nulls_last("margin"), F.asc("id_b")
-    )
-    out = (
-        scored.withColumn("_rn", F.row_number().over(wbest))
-        .filter(F.col("_rn") == 1)
-        .select("id_a", "id_b", "cosine", "margin")
-    )
-    # materialize while the pair cache is alive, then release it (the
-    # q236/q237 persist-checkpoint-unpersist shape)
-    out = out.localCheckpoint(eager=True)
-    pairs.unpersist()
-    return out
+        # neighborhood statistic = ROUND(SUM(top-k cosines), 6), NOT the
+        # average: a sum of k 6dp decimals IS a 6dp decimal, so the round
+        # snaps both engines to the same exact value regardless of summation
+        # order — whereas AVG over k=4 lands on the .25e-6 grid where a 1-ulp
+        # order difference flips the 6th decimal (observed in the first gate
+        # run). The /k folds into the margin ratio below.
+        ka = (
+            ranked.filter(F.col("_ra") <= k)
+            .groupBy("id_a")
+            .agg(F.round(F.sum("cosine"), 6).alias("_ka"))
+        )
+        kb = (
+            ranked.filter(F.col("_rb") <= k)
+            .groupBy("id_b")
+            .agg(F.round(F.sum("cosine"), 6).alias("_kb"))
+        )
+        # margin = cos / ((sum_a/k + sum_b/k) / 2) = cos * 2k / (sum_a + sum_b)
+        ssum = F.col("_ka") + F.col("_kb")
+        scored = (
+            pairs.join(ka, "id_a")
+            .join(kb, "id_b")
+            .select(
+                "id_a",
+                "id_b",
+                "cosine",
+                F.when(
+                    ssum > 0, F.round(F.col("cosine") * F.lit(2.0 * k) / ssum, 6)
+                ).alias("margin"),
+            )
+        )
+        wbest = Window.partitionBy("id_a").orderBy(
+            F.desc_nulls_last("margin"), F.asc("id_b")
+        )
+        out = (
+            scored.withColumn("_rn", F.row_number().over(wbest))
+            .filter(F.col("_rn") == 1)
+            .select("id_a", "id_b", "cosine", "margin")
+        )
+        # materialize while the pair cache is alive; the scope releases it
+        return out.localCheckpoint(eager=True)
 
 
 _MM_CAP_A = 50
@@ -3627,61 +3633,61 @@ def cluster_purity_nmi(assign: DataFrame, labels: DataFrame) -> DataFrame:
         assign.join(labels, "vec_id")
         .groupBy("cell", "label")
         .agg(F.count(F.lit(1)).cast("long").alias("n_cs"))
-        .persist()
     )
-    tot = cont.agg(F.sum("n_cs").cast("double").alias("n"))
-    nc = cont.groupBy("cell").agg(F.sum("n_cs").alias("n_c"))
-    ns = cont.groupBy("label").agg(F.sum("n_cs").alias("n_s"))
+    with pin_scope():
+        cont = cache(cont)
+        tot = cont.agg(F.sum("n_cs").cast("double").alias("n"))
+        nc = cont.groupBy("cell").agg(F.sum("n_cs").alias("n_c"))
+        ns = cont.groupBy("label").agg(F.sum("n_cs").alias("n_s"))
 
-    def ent(df, cnt_col):
-        t = F.round(
-            (F.col(cnt_col) / F.col("n")) * F.log(F.col(cnt_col) / F.col("n")), 6
+        def ent(df, cnt_col):
+            t = F.round(
+                (F.col(cnt_col) / F.col("n")) * F.log(F.col(cnt_col) / F.col("n")), 6
+            )
+            return (
+                df.crossJoin(F.broadcast(tot))
+                .select(t.alias("t"))
+                .agg(F.round(-F.sum("t"), 6).alias("h"))
+            )
+        hc = ent(nc, "n_c").select(F.col("h").alias("h_cluster"))
+        hs = ent(ns, "n_s").select(F.col("h").alias("h_label"))
+        mi_t = F.round(
+            (F.col("n_cs") / F.col("n"))
+            * F.log(F.col("n") * F.col("n_cs") / (F.col("n_c") * F.col("n_s"))),
+            6,
         )
-        return (
-            df.crossJoin(F.broadcast(tot))
-            .select(t.alias("t"))
-            .agg(F.round(-F.sum("t"), 6).alias("h"))
+        mi = (
+            cont.join(nc, "cell")
+            .join(ns, "label")
+            .crossJoin(F.broadcast(tot))
+            .select(mi_t.alias("t"))
+            .agg(F.round(F.sum("t"), 6).alias("mi"))
         )
-    hc = ent(nc, "n_c").select(F.col("h").alias("h_cluster"))
-    hs = ent(ns, "n_s").select(F.col("h").alias("h_label"))
-    mi_t = F.round(
-        (F.col("n_cs") / F.col("n"))
-        * F.log(F.col("n") * F.col("n_cs") / (F.col("n_c") * F.col("n_s"))),
-        6,
-    )
-    mi = (
-        cont.join(nc, "cell")
-        .join(ns, "label")
-        .crossJoin(F.broadcast(tot))
-        .select(mi_t.alias("t"))
-        .agg(F.round(F.sum("t"), 6).alias("mi"))
-    )
-    pur = (
-        cont.groupBy("cell")
-        .agg(F.max("n_cs").alias("mx"))
-        .crossJoin(F.broadcast(tot))
-        .agg(F.round(F.sum("mx") / F.first("n"), 6).alias("purity"))
-    )
-    out = (
-        tot.select(F.col("n").cast("long").alias("n"))
-        .crossJoin(pur)
-        .crossJoin(hc)
-        .crossJoin(hs)
-        .crossJoin(mi)
-        .select(
-            "n",
-            "purity",
-            "h_cluster",
-            "h_label",
-            "mi",
-            F.round(
-                F.col("mi") / ((F.col("h_cluster") + F.col("h_label")) / 2), 6
-            ).alias("nmi"),
+        pur = (
+            cont.groupBy("cell")
+            .agg(F.max("n_cs").alias("mx"))
+            .crossJoin(F.broadcast(tot))
+            .agg(F.round(F.sum("mx") / F.first("n"), 6).alias("purity"))
         )
-        .localCheckpoint(eager=True)
-    )
-    cont.unpersist()
-    return out
+        out = (
+            tot.select(F.col("n").cast("long").alias("n"))
+            .crossJoin(pur)
+            .crossJoin(hc)
+            .crossJoin(hs)
+            .crossJoin(mi)
+            .select(
+                "n",
+                "purity",
+                "h_cluster",
+                "h_label",
+                "mi",
+                F.round(
+                    F.col("mi") / ((F.col("h_cluster") + F.col("h_label")) / 2), 6
+                ).alias("nmi"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        return out
 
 
 @register(

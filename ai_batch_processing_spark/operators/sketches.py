@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ai_batch_processing_spark.jobs import cache, pin_scope
 from ai_batch_processing_spark.registry import register
 from ai_batch_processing_spark.session import load_tables
 
@@ -676,42 +677,42 @@ def q310_hll_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_tables(spark, sf_dir, ["documents"])["documents"]
     terms = docs.select("source", F.explode(tokens_expr("text")).alias("term"))
-    coords = hll_bucket_rho(terms, "term", "source").persist()
-    per_source = coords.groupBy("source", "bucket").agg(F.max("rho").alias("r"))
-    merged = per_source.groupBy("bucket").agg(F.max("r").alias("r"))
-    direct = coords.groupBy("bucket").agg(F.max("rho").alias("r"))
-    cmp_ = (
-        merged.select("bucket", F.col("r").alias("rm"))
-        .join(direct.select("bucket", F.col("r").alias("rd")), "bucket", "full")
-        .where(~F.col("rm").eqNullSafe(F.col("rd")))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_mismatched_registers"))
-    )
-    est = merged.agg(
-        F.count(F.lit(1)).cast("long").alias("np"),
-        F.sum(F.lit(1.0) / F.expr("shiftleft(CAST(1 AS BIGINT), CAST(r AS INT))")).alias(
-            "inv"
-        ),
-    )
-    m = float(_HLL_M)
-    alpha = F.lit(0.7213) / (F.lit(1.0) + F.lit(1.079) / F.lit(m))
-    v = (F.lit(_HLL_M) - F.col("np")).cast("long")
-    raw = (alpha * F.lit(m * m)) / (F.col("inv") + v.cast("double"))
-    est_col = F.when(
-        (raw <= F.lit(2.5 * m)) & (v > 0),
-        F.round(F.lit(m) * F.log(F.lit(m) / v.cast("double")), 6),
-    ).otherwise(F.round(raw, 6))
-    out = (
-        cmp_.crossJoin(est)
-        .select(
-            "n_mismatched_registers",
-            (F.col("n_mismatched_registers") == 0).alias("merge_exact"),
-            v.alias("n_zero_registers"),
-            est_col.alias("est_merged"),
+    with pin_scope():
+        coords = cache(hll_bucket_rho(terms, "term", "source"))
+        per_source = coords.groupBy("source", "bucket").agg(F.max("rho").alias("r"))
+        merged = per_source.groupBy("bucket").agg(F.max("r").alias("r"))
+        direct = coords.groupBy("bucket").agg(F.max("rho").alias("r"))
+        cmp_ = (
+            merged.select("bucket", F.col("r").alias("rm"))
+            .join(direct.select("bucket", F.col("r").alias("rd")), "bucket", "full")
+            .where(~F.col("rm").eqNullSafe(F.col("rd")))
+            .agg(F.count(F.lit(1)).cast("long").alias("n_mismatched_registers"))
         )
-        .localCheckpoint(eager=True)
-    )
-    coords.unpersist()
-    return out
+        est = merged.agg(
+            F.count(F.lit(1)).cast("long").alias("np"),
+            F.sum(F.lit(1.0) / F.expr("shiftleft(CAST(1 AS BIGINT), CAST(r AS INT))")).alias(
+                "inv"
+            ),
+        )
+        m = float(_HLL_M)
+        alpha = F.lit(0.7213) / (F.lit(1.0) + F.lit(1.079) / F.lit(m))
+        v = (F.lit(_HLL_M) - F.col("np")).cast("long")
+        raw = (alpha * F.lit(m * m)) / (F.col("inv") + v.cast("double"))
+        est_col = F.when(
+            (raw <= F.lit(2.5 * m)) & (v > 0),
+            F.round(F.lit(m) * F.log(F.lit(m) / v.cast("double")), 6),
+        ).otherwise(F.round(raw, 6))
+        out = (
+            cmp_.crossJoin(est)
+            .select(
+                "n_mismatched_registers",
+                (F.col("n_mismatched_registers") == 0).alias("merge_exact"),
+                v.alias("n_zero_registers"),
+                est_col.alias("est_merged"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        return out
 
 
 # --------------------------------------------------------------------------

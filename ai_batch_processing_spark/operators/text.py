@@ -17,6 +17,7 @@ import pandas as pd  # noqa: F401 — pandas-UDF type hints resolve against it
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ai_batch_processing_spark.jobs import cache, pin_scope
 from ai_batch_processing_spark.registry import register
 from ai_batch_processing_spark.session import load_tables
 
@@ -1884,56 +1885,56 @@ def duplicate_spans(
                 )
             ).alias("pos", "g"),
         )
-        .persist()
     )
-    if min_docs == 2:
-        # "appears in ≥2 distinct docs" ⟺ min(doc_id) ≠ max(doc_id):
-        # two cheap map-combinable aggregates instead of the partial-
-        # distinct machinery count_distinct needs per gram key
-        dup = (
-            grams.groupBy("g")
-            .agg(F.min("doc_id").alias("_lo"), F.max("doc_id").alias("_hi"))
-            .filter(F.col("_lo") != F.col("_hi"))
-            .select("g")
-        )
-    else:
-        dup = (
-            grams.groupBy("g")
-            .agg(F.count_distinct("doc_id").alias("nd"))
-            .filter(F.col("nd") >= min_docs)
-            .select("g")
-        )
-    # duplicated grams are a small fraction of the stream on any corpus
-    # worth deduplicating incrementally — measure and broadcast when they
-    # fit, turning the join-back into a map-side probe of the cached
-    # stream (no second full-stream shuffle); above the cap it shuffles.
-    from ai_batch_processing_spark.plans.relational import broadcast_if_small
+    with pin_scope():
+        grams = cache(grams)
+        if min_docs == 2:
+            # "appears in ≥2 distinct docs" ⟺ min(doc_id) ≠ max(doc_id):
+            # two cheap map-combinable aggregates instead of the partial-
+            # distinct machinery count_distinct needs per gram key
+            dup = (
+                grams.groupBy("g")
+                .agg(F.min("doc_id").alias("_lo"), F.max("doc_id").alias("_hi"))
+                .filter(F.col("_lo") != F.col("_hi"))
+                .select("g")
+            )
+        else:
+            dup = (
+                grams.groupBy("g")
+                .agg(F.count_distinct("doc_id").alias("nd"))
+                .filter(F.col("nd") >= min_docs)
+                .select("g")
+            )
+        # duplicated grams are a small fraction of the stream on any corpus
+        # worth deduplicating incrementally — measure and broadcast when they
+        # fit, turning the join-back into a map-side probe of the cached
+        # stream (no second full-stream shuffle); above the cap it shuffles.
+        from ai_batch_processing_spark.plans.relational import broadcast_if_small
 
-    hits = grams.join(broadcast_if_small(dup), "g").select("doc_id", "pos")
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    prev_end = F.max(F.col("pos") + (n - 1)).over(
-        w.rowsBetween(Window.unboundedPreceding, -1)
-    )
-    islands = hits.withColumn(
-        "new_island",
-        F.when(prev_end.isNull() | (F.col("pos") > prev_end + 1), 1).otherwise(0),
-    ).withColumn("island", F.sum("new_island").over(w))
-    out = (
-        islands.groupBy("doc_id", "island")
-        .agg(
-            F.min("pos").cast("long").alias("span_start"),
-            (F.max("pos") + (n - 1)).cast("long").alias("span_end"),
+        hits = grams.join(broadcast_if_small(dup), "g").select("doc_id", "pos")
+        w = Window.partitionBy("doc_id").orderBy("pos")
+        prev_end = F.max(F.col("pos") + (n - 1)).over(
+            w.rowsBetween(Window.unboundedPreceding, -1)
         )
-        .select(
-            "doc_id",
-            "span_start",
-            "span_end",
-            (F.col("span_end") - F.col("span_start") + 1).alias("span_tokens"),
+        islands = hits.withColumn(
+            "new_island",
+            F.when(prev_end.isNull() | (F.col("pos") > prev_end + 1), 1).otherwise(0),
+        ).withColumn("island", F.sum("new_island").over(w))
+        out = (
+            islands.groupBy("doc_id", "island")
+            .agg(
+                F.min("pos").cast("long").alias("span_start"),
+                (F.max("pos") + (n - 1)).cast("long").alias("span_end"),
+            )
+            .select(
+                "doc_id",
+                "span_start",
+                "span_end",
+                (F.col("span_end") - F.col("span_start") + 1).alias("span_tokens"),
+            )
+            .localCheckpoint(eager=True)
         )
-        .localCheckpoint(eager=True)
-    )
-    grams.unpersist()
-    return out
+        return out
 
 
 @register(
@@ -2061,41 +2062,41 @@ def duplicate_char_spans(
                 )
             ).alias("pos", "w"),
         )
-        .persist()
     )
-    dup = (
-        grams.groupBy("w")
-        .agg(F.min("doc_id").alias("_lo"), F.max("doc_id").alias("_hi"))
-        .filter(F.col("_lo") != F.col("_hi"))
-        .select("w")
-    )
-    from ai_batch_processing_spark.plans.relational import broadcast_if_small
+    with pin_scope():
+        grams = cache(grams)
+        dup = (
+            grams.groupBy("w")
+            .agg(F.min("doc_id").alias("_lo"), F.max("doc_id").alias("_hi"))
+            .filter(F.col("_lo") != F.col("_hi"))
+            .select("w")
+        )
+        from ai_batch_processing_spark.plans.relational import broadcast_if_small
 
-    hits = grams.join(broadcast_if_small(dup), "w").select("doc_id", "pos")
-    win = Window.partitionBy("doc_id").orderBy("pos")
-    prev_end = F.max(F.col("pos") + (g - 1)).over(
-        win.rowsBetween(Window.unboundedPreceding, -1)
-    )
-    islands = hits.withColumn(
-        "new_island",
-        F.when(prev_end.isNull() | (F.col("pos") > prev_end + 1), 1).otherwise(0),
-    ).withColumn("island", F.sum("new_island").over(win))
-    out = (
-        islands.groupBy("doc_id", "island")
-        .agg(
-            F.min("pos").cast("long").alias("span_start"),
-            (F.max("pos") + (g - 1)).cast("long").alias("span_end"),
+        hits = grams.join(broadcast_if_small(dup), "w").select("doc_id", "pos")
+        win = Window.partitionBy("doc_id").orderBy("pos")
+        prev_end = F.max(F.col("pos") + (g - 1)).over(
+            win.rowsBetween(Window.unboundedPreceding, -1)
         )
-        .select(
-            "doc_id",
-            "span_start",
-            "span_end",
-            (F.col("span_end") - F.col("span_start") + 1).alias("span_chars"),
+        islands = hits.withColumn(
+            "new_island",
+            F.when(prev_end.isNull() | (F.col("pos") > prev_end + 1), 1).otherwise(0),
+        ).withColumn("island", F.sum("new_island").over(win))
+        out = (
+            islands.groupBy("doc_id", "island")
+            .agg(
+                F.min("pos").cast("long").alias("span_start"),
+                (F.max("pos") + (g - 1)).cast("long").alias("span_end"),
+            )
+            .select(
+                "doc_id",
+                "span_start",
+                "span_end",
+                (F.col("span_end") - F.col("span_start") + 1).alias("span_chars"),
+            )
+            .localCheckpoint(eager=True)
         )
-        .localCheckpoint(eager=True)
-    )
-    grams.unpersist()
-    return out
+        return out
 
 
 @register(
@@ -3071,42 +3072,41 @@ def bleu_corpus(
     ratios) plus the macro average of per-pair BLEU (the 6dp per-pair
     scores summed exactly, the memory-lesson ROUND(SUM) snap, then
     divided once)."""
-    counts = _bleu_pair_counts(pairs, id_col, ref_col, cand_col, max_n).persist()
-    totals = counts.agg(
-        F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        F.sum("ref_len").cast("long").alias("ref_len"),
-        F.sum("cand_len").cast("long").alias("cand_len"),
-        *[
-            c
-            for n in range(1, max_n + 1)
-            for c in (
-                F.sum(f"clip{n}").cast("long").alias(f"clip{n}"),
-                F.sum(f"tot{n}").cast("long").alias(f"tot{n}"),
-            )
-        ],
-    )
-    bp, bleu = _bleu_from_counts(max_n)
-    micro = totals.select(
-        "n_pairs",
-        "ref_len",
-        "cand_len",
-        *[
-            F.round(F.col(f"clip{n}") / F.col(f"tot{n}"), 6).alias(f"p{n}")
-            for n in range(1, max_n + 1)
-        ],
-        bp.alias("bp"),
-        bleu.alias("bleu_micro"),
-    )
-    _, pair_bleu = _bleu_from_counts(max_n)
-    macro = counts.select(pair_bleu.alias("b")).agg(
-        F.round(F.round(F.sum("b"), 6) / F.count(F.lit(1)), 6).alias("bleu_macro")
-    )
-    # materialize the 1-row result BEFORE dropping the cache — returning
-    # the lazy plan would recompute the whole counting pipeline twice
-    # (micro + macro) uncached on the caller's action
-    out = micro.crossJoin(macro).localCheckpoint(eager=True)
-    counts.unpersist()
-    return out
+    with pin_scope():
+        counts = cache(_bleu_pair_counts(pairs, id_col, ref_col, cand_col, max_n))
+        totals = counts.agg(
+            F.count(F.lit(1)).cast("long").alias("n_pairs"),
+            F.sum("ref_len").cast("long").alias("ref_len"),
+            F.sum("cand_len").cast("long").alias("cand_len"),
+            *[
+                c
+                for n in range(1, max_n + 1)
+                for c in (
+                    F.sum(f"clip{n}").cast("long").alias(f"clip{n}"),
+                    F.sum(f"tot{n}").cast("long").alias(f"tot{n}"),
+                )
+            ],
+        )
+        bp, bleu = _bleu_from_counts(max_n)
+        micro = totals.select(
+            "n_pairs",
+            "ref_len",
+            "cand_len",
+            *[
+                F.round(F.col(f"clip{n}") / F.col(f"tot{n}"), 6).alias(f"p{n}")
+                for n in range(1, max_n + 1)
+            ],
+            bp.alias("bp"),
+            bleu.alias("bleu_micro"),
+        )
+        _, pair_bleu = _bleu_from_counts(max_n)
+        macro = counts.select(pair_bleu.alias("b")).agg(
+            F.round(F.round(F.sum("b"), 6) / F.count(F.lit(1)), 6).alias("bleu_macro")
+        )
+        # materialize the 1-row result BEFORE the scope drops the cache —
+        # returning the lazy plan would recompute the whole counting pipeline
+        # twice (micro + macro) uncached on the caller's action
+        return micro.crossJoin(macro).localCheckpoint(eager=True)
 
 
 _BLEU_PAIRS_SQL = """
@@ -4095,45 +4095,45 @@ def char_bigram_entropy(docs: DataFrame, text_col: str = "text") -> DataFrame:
             ).alias("g")
         )
     )
-    h = grams.groupBy("g").agg(F.count(F.lit(1)).alias("c")).persist()
-    tot = h.agg(F.sum("c").cast("long").alias("n"))
-    joint = (
-        h.crossJoin(F.broadcast(tot))
-        .select(
-            F.round(
-                -(F.col("c").cast("double") / F.col("n"))
-                * F.log(F.col("c").cast("double") / F.col("n")),
-                6,
-            ).alias("term")
+    with pin_scope():
+        h = cache(grams.groupBy("g").agg(F.count(F.lit(1)).alias("c")))
+        tot = h.agg(F.sum("c").cast("long").alias("n"))
+        joint = (
+            h.crossJoin(F.broadcast(tot))
+            .select(
+                F.round(
+                    -(F.col("c").cast("double") / F.col("n"))
+                    * F.log(F.col("c").cast("double") / F.col("n")),
+                    6,
+                ).alias("term")
+            )
+            .agg(F.round(F.sum("term"), 6).alias("h_joint"))
         )
-        .agg(F.round(F.sum("term"), 6).alias("h_joint"))
-    )
-    first = (
-        h.groupBy(F.substring("g", 1, 1).alias("a"))
-        .agg(F.sum("c").alias("ca"))
-        .crossJoin(F.broadcast(tot))
-        .select(
-            F.round(
-                -(F.col("ca").cast("double") / F.col("n"))
-                * F.log(F.col("ca").cast("double") / F.col("n")),
-                6,
-            ).alias("term")
+        first = (
+            h.groupBy(F.substring("g", 1, 1).alias("a"))
+            .agg(F.sum("c").alias("ca"))
+            .crossJoin(F.broadcast(tot))
+            .select(
+                F.round(
+                    -(F.col("ca").cast("double") / F.col("n"))
+                    * F.log(F.col("ca").cast("double") / F.col("n")),
+                    6,
+                ).alias("term")
+            )
+            .agg(F.round(F.sum("term"), 6).alias("h_first"))
         )
-        .agg(F.round(F.sum("term"), 6).alias("h_first"))
-    )
-    out = (
-        tot.crossJoin(joint)
-        .crossJoin(first)
-        .select(
-            F.col("n").alias("n_bigrams"),
-            "h_joint",
-            "h_first",
-            F.round(F.col("h_joint") - F.col("h_first"), 6).alias("h_cond"),
+        out = (
+            tot.crossJoin(joint)
+            .crossJoin(first)
+            .select(
+                F.col("n").alias("n_bigrams"),
+                "h_joint",
+                "h_first",
+                F.round(F.col("h_joint") - F.col("h_first"), 6).alias("h_cond"),
+            )
+            .localCheckpoint(eager=True)
         )
-        .localCheckpoint(eager=True)
-    )
-    h.unpersist()
-    return out
+        return out
 
 
 @register(

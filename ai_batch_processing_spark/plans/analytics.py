@@ -20,6 +20,7 @@ import pandas as pd  # module-level: pandas_udf type hints resolve in module glo
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ai_batch_processing_spark.jobs import cache, pin_scope
 from ai_batch_processing_spark.registry import register
 from ai_batch_processing_spark.session import load_tables
 
@@ -3470,9 +3471,9 @@ def q302_session_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id", "event_type", F.sum("is_new").over(wsum).alias("session_id")
         )
         .distinct()
-        .persist()
     )
-    try:
+    with pin_scope():
+        items = cache(items)
         ns = items.select("user_id", "session_id").distinct().agg(
             F.count(F.lit(1)).cast("long").alias("n")
         )
@@ -3508,8 +3509,6 @@ def q302_session_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy(F.desc("lift"), "ta", "tb")
             .localCheckpoint(eager=True)
         )
-    finally:
-        items.unpersist()
     return out
 
 
@@ -3566,14 +3565,13 @@ def q302_session_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q306_ordered_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_tables(spark, sf_dir, ["events"])["events"]
-    s1 = (
-        ev.where(F.col("event_type") == "signup")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t1"))
-        .persist()
-    )
-    try:
-        s2 = (
+    with pin_scope():
+        s1 = cache(
+            ev.where(F.col("event_type") == "signup")
+            .groupBy("user_id")
+            .agg(F.min("ts").alias("t1"))
+        )
+        s2 = cache(
             ev.where(F.col("event_type") == "click")
             .join(s1, "user_id")
             .where(
@@ -3582,7 +3580,6 @@ def q306_ordered_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .groupBy("user_id")
             .agg(F.min("ts").alias("t2"))
-            .persist()
         )
         s3 = (
             ev.where(F.col("event_type") == "purchase")
@@ -3633,12 +3630,6 @@ def q306_ordered_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        s1.unpersist()
-        try:
-            s2.unpersist()
-        except Exception:
-            pass
     return out
 
 
@@ -3749,21 +3740,23 @@ def q307_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.length(c) - F.length(F.regexp_replace(c, "[aeiou]", ""))).cast("long").alias(
             "x2"
         ),
-    ).persist()
-    resid = None
-    try:
+    )
+    with pin_scope():
+        feats = cache(feats)
         model = (
             ols_two_feature(feats.where(F.col("doc_id") % 2 == 0), "y", "x1", "x2")
             .select(F.col("n").alias("n_train"), "b0", "b1", "b2")
         )
-        resid = feats.crossJoin(F.broadcast(model)).select(
-            "doc_id",
-            "n_train",
-            F.abs(
-                F.col("y")
-                - (F.col("b0") + F.col("b1") * F.col("x1") + F.col("b2") * F.col("x2"))
-            ).alias("r"),
-        ).persist()
+        resid = cache(
+            feats.crossJoin(F.broadcast(model)).select(
+                "doc_id",
+                "n_train",
+                F.abs(
+                    F.col("y")
+                    - (F.col("b0") + F.col("b1") * F.col("x1") + F.col("b2") * F.col("x2"))
+                ).alias("r"),
+            )
+        )
         calh = (
             resid.where(F.col("doc_id") % 4 == 1)
             .groupBy(F.floor(F.col("r") * 100).cast("long").alias("bkt"))
@@ -3812,10 +3805,6 @@ def q307_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        if resid is not None:
-            resid.unpersist()
-        feats.unpersist()
     return out
 
 

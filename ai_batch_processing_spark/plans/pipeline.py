@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ai_batch_processing_spark.io.writers import export_projection
+from ai_batch_processing_spark.jobs import pin_scope
 from ai_batch_processing_spark.operators.llm_map import LLMConfig, llm_map
 from ai_batch_processing_spark.registry import register
 from ai_batch_processing_spark.session import load_tables
@@ -296,7 +297,10 @@ def q169_curation_pipeline_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     gop = gopher_rules(cleaned, min_words=40).select(
         "doc_id", "n_words", "r_word_count", "r_mean_word_len", "r_alpha_words"
     )
-    bits = bigram_surprise(cleaned, materialize=True).select("doc_id", "bits_per_bigram")
+    with pin_scope():
+        bits = bigram_surprise(cleaned).select("doc_id", "bits_per_bigram").localCheckpoint(
+            eager=True
+        )
     feats = (
         cleaned.select("doc_id", "n_kept")
         .join(gop, "doc_id")

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ai_batch_processing_spark.jobs import cache, pin_scope
 from ai_batch_processing_spark.registry import register
 from ai_batch_processing_spark.session import load_tables
 
@@ -969,16 +970,18 @@ def q127_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "total_revenue"
             )
         )
-        .persist()  # consumed by the MAX aggregate AND the equality filter
     )
-    mx = revenue.agg(F.max("total_revenue").alias("_mx"))
-    return (
-        revenue.crossJoin(F.broadcast(mx))
-        .filter(F.col("total_revenue") == F.col("_mx"))
-        .join(F.broadcast(t["supplier"]), F.col("s_suppkey") == F.col("supplier_no"))
-        .select("s_suppkey", "s_name", "total_revenue")
-        .orderBy("s_suppkey")
-    )
+    with pin_scope():
+        revenue = cache(revenue)  # consumed by the MAX aggregate AND the equality filter
+        mx = revenue.agg(F.max("total_revenue").alias("_mx"))
+        out = (
+            revenue.crossJoin(F.broadcast(mx))
+            .filter(F.col("total_revenue") == F.col("_mx"))
+            .join(F.broadcast(t["supplier"]), F.col("s_suppkey") == F.col("supplier_no"))
+            .select("s_suppkey", "s_name", "total_revenue")
+            .localCheckpoint(eager=True)
+        )
+    return out.orderBy("s_suppkey")
 
 
 # --- q128: TPC-H Q17 shape — small-quantity-order revenue -------------------

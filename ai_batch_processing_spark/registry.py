@@ -108,19 +108,31 @@ def registered_oracle(name: str) -> str:
 # emitted right after the bench queries (which lead anyway — leave them
 # out). Replace the names with each change; at most 20.
 TOUCHED: tuple[str, ...] = (
-    # llm_map now pins its result (jobs.pin)
-    "q33_llm_map_grouped_conversation",
-    "q119_llm_map_prompt_cached",
-    # partition_offsets pins through the same helper
-    "q30_template_render",
-    "q148_token_budget_selection",
-    "q103_sequence_packing",
-    "q113_vocab_zipf_stats",
-    "q135_sequence_packing_fragments",
-    "q182_shard_manifest",
-    "q194_weighted_interleave",
-    "q251_sorted_neighborhood_dedup",
-    "q265_gini_concentration",
+    # left a cached relation in the session; now store their result
+    # inside a pin_scope of their own
+    "q46_embedding_near_dup",
+    "q61_media_phash_near_dup",
+    "q118_semantic_dedup",
+    "q121_curation_v2_splits",
+    "q127_top_supplier",
+    "q131_minhash_jaccard_verified",
+    "q146_media_phash_verified",
+    "q212_hybrid_rrf_search",
+    # reach the most jobs.cache sites
+    "q299_personalized_pagerank",
+    "q307_conformal_interval",
+    "q306_ordered_funnel",
+    "q298_labelprop_modularity",
+    "q240_embedding_qa_report",
+    "q162_pagerank_replicated_verified",
+    # a count() became an eager checkpoint, _finish became a scope, or a
+    # persist that was released before the result ran was deleted
+    "q247_hits_knn_graph",
+    "q252_degree_assortativity",
+    "q336_rank_blend_top_docs",
+    "q169_curation_pipeline_v3",
+    "q183_source_divergence",
+    "q170_dsir_importance_weights",
 )
 
 _ROOT = Path(__file__).resolve().parents[1]

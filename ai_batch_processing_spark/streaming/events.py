@@ -77,7 +77,7 @@ def session_counts(events: DataFrame, gap: str = "10 minutes") -> DataFrame:
         GROUP BY 1, 2
         ORDER BY win_start, event_type
     """,
-    doc="tumbling 1h window agg (batch mode of the streaming plan).",
+    doc="tumbling 1h window agg: per-(hour window, event_type) count and value sum.",
     bench=True,
     tags=("streaming", "window"),
 )

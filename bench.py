@@ -20,6 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from ai_batch_processing_spark.jobs import pin_scope
     from ai_batch_processing_spark.registry import load_all
     from ai_batch_processing_spark.session import get_spark
 
@@ -50,9 +51,11 @@ def main() -> None:
     for name, spec in bench_specs.items():
         best, n = float("inf"), 0
         for _ in range(2):
+            # one scope per run: the pins and caches the query makes are
+            # released when it ends (inside the timed span)
             t0 = time.time()
-            df = spec.fn(spark, sf_dir)
-            n = df.count()
+            with pin_scope():
+                n = spec.fn(spark, sf_dir).count()
             best = min(best, time.time() - t0)
             # isolate runs: no cross-run cache reuse in the timings — the
             # session cache AND the library's session-lifetime memo of

@@ -174,9 +174,9 @@ def test_bloom_incremental_dedup_matches_plain_and_prunes(spark, sf_dir):
 
 
 def test_query_wrappers_leave_no_cached_relations(spark, sf_dir):
-    """The q1xx gate wrappers use materialize=True: result eagerly
-    localCheckpoint-ed, every internal persist released — a gate sweep
-    must not accumulate cached relations across 148+ queries."""
+    """The q1xx gate wrappers store their result (eager localCheckpoint)
+    inside a scope of their own, which releases every internal cache — a
+    gate sweep must not accumulate cached relations across the queries."""
     from ai_batch_processing_spark.operators.corpus import (
         q112_tfidf_top_terms,
         q113_vocab_zipf_stats,
@@ -197,16 +197,22 @@ def test_query_wrappers_leave_no_cached_relations(spark, sf_dir):
 
 
 def test_library_forms_stay_lazy_and_composable(spark, sf_dir):
-    """materialize=False (default) keeps the documented lazy contract —
-    same rows, cache released only by the caller."""
-    from ai_batch_processing_spark.operators.corpus import tfidf_top_terms
+    """The library form is lazy: its cache belongs to the caller's scope
+    and lives until the scope closes. Collected inside a scope it yields
+    the stored q112 wrapper's rows."""
+    from ai_batch_processing_spark.jobs import pin_scope
+    from ai_batch_processing_spark.operators.corpus import q112_tfidf_top_terms, tfidf_top_terms
     from ai_batch_processing_spark.session import load_tables
 
-    docs = load_tables(spark, sf_dir, ["documents"])["documents"]
-    lazy = tfidf_top_terms(docs).orderBy("doc_id", "rnk").collect()
-    mat = tfidf_top_terms(docs, materialize=True).orderBy("doc_id", "rnk").collect()
-    assert [tuple(r) for r in lazy] == [tuple(r) for r in mat]
     spark.catalog.clearCache()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    docs = load_tables(spark, sf_dir, ["documents"])["documents"]
+    with pin_scope():
+        lazy = tfidf_top_terms(docs).orderBy("doc_id", "rnk").collect()
+        assert not cm.isEmpty()  # still cached: the caller's scope is open
+    assert cm.isEmpty()
+    stored = q112_tfidf_top_terms(spark, sf_dir).orderBy("doc_id", "rnk").collect()
+    assert [tuple(r) for r in lazy] == [tuple(r) for r in stored]
 
 
 def test_bigram_surprise_is_order_sensitive(spark):
@@ -909,6 +915,7 @@ def test_unigram_surprise_dispatch_both_branches(spark, sf_dir):
     estimate path) and fall back to an UNHINTED join when the vouched
     text-leg bound blows the probe ceiling (the 100 TB big-vocab shape) —
     results identical either way (r10 verdict item 1)."""
+    from ai_batch_processing_spark.jobs import pin_scope
     from ai_batch_processing_spark.operators.corpus import unigram_surprise
     from ai_batch_processing_spark.plans import relational as rel
 
@@ -916,9 +923,10 @@ def test_unigram_surprise_dispatch_both_branches(spark, sf_dir):
 
     # bench scale: the text-leg Catalyst estimate is far under the 64 MB
     # threshold -> explicit broadcast hint, before any AQE involvement
-    plan_b = unigram_surprise(docs)._jdf.queryExecution().sparkPlan().toString()
-    assert "BroadcastHashJoin" in plan_b
-    out_b = unigram_surprise(docs, materialize=True)
+    with pin_scope():
+        out_b = unigram_surprise(docs)
+        assert "BroadcastHashJoin" in out_b._jdf.queryExecution().sparkPlan().toString()
+        rows_b = sorted(map(tuple, out_b.collect()))
 
     # big-vocab branch: ceiling forced below the estimate -> no hint, no
     # probe. On a tiny corpus the static planner would still auto-broadcast
@@ -931,10 +939,12 @@ def test_unigram_surprise_dispatch_both_branches(spark, sf_dir):
     rel._BCAST_BYTE_CAP, rel._PROBE_EST_CEILING = 1, 1
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        plan_s = unigram_surprise(docs)._jdf.queryExecution().sparkPlan().toString()
-        assert "SortMergeJoin" in plan_s or "ShuffledHashJoin" in plan_s
-        out_s = unigram_surprise(docs, materialize=True)
+        with pin_scope():
+            out_s = unigram_surprise(docs)
+            plan_s = out_s._jdf.queryExecution().sparkPlan().toString()
+            assert "SortMergeJoin" in plan_s or "ShuffledHashJoin" in plan_s
+            rows_s = sorted(map(tuple, out_s.collect()))
     finally:
         rel._BCAST_BYTE_CAP, rel._PROBE_EST_CEILING = old_cap, old_ceil
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-    assert sorted(map(tuple, out_b.collect())) == sorted(map(tuple, out_s.collect()))
+    assert rows_b == rows_s

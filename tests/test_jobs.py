@@ -1,10 +1,17 @@
-"""Job control: stop-with-cancellation, status metrics, progress events."""
+"""Job control: stop-with-cancellation, status metrics, progress events,
+and the one release path for pinned and cached frames."""
 
 from __future__ import annotations
 
+import ast
+import pathlib
 import time
 
-from ai_batch_processing_spark.jobs import JobRegistry
+import pytest
+from pyspark import StorageLevel
+
+import ai_batch_processing_spark
+from ai_batch_processing_spark.jobs import JobRegistry, cache, pin_scope
 
 
 def _slow_df(spark, n_tasks: int = 16, sleep_s: float = 1.0):
@@ -100,6 +107,25 @@ def test_job_releases_its_pins(spark, tmp_path):
     assert _rdd_ids(spark) - before == set()
 
 
+def test_scope_unpersists_cached_frames_when_its_body_raises(spark):
+    """A frame kept with ``cache`` inside a scope is unpersisted when the
+    scope exits by an exception; outside a scope it stays cached."""
+    counts = spark.range(100).selectExpr("id % 7 AS k").groupBy("k").count()
+    with pytest.raises(RuntimeError, match="boom"):
+        with pin_scope():
+            cached = cache(counts)
+            assert cached.count() == 7
+            assert cached.storageLevel != StorageLevel.NONE
+            raise RuntimeError("boom after cache")
+    assert cached.storageLevel == StorageLevel.NONE
+
+    kept = cache(spark.range(10).selectExpr("id * 3 AS x"))
+    try:
+        assert kept.storageLevel != StorageLevel.NONE
+    finally:
+        kept.unpersist()
+
+
 def test_frame_pinned_outside_a_job_outlives_it(spark):
     """A frame built outside any job (the reference-journey shape) is not
     released by the job that reads it: it stays readable afterwards."""
@@ -111,3 +137,29 @@ def test_frame_pinned_outside_a_job_outlives_it(spark):
     assert st.status == "completed" and st.result == 20
     rows = out.collect()
     assert len(rows) == 20 and all(r.error is None for r in rows)
+
+
+def test_package_caches_only_through_jobs():
+    """One release path: ``.persist(``/``.unpersist(`` appear only in
+    ``jobs.py`` (everything else caches with ``jobs.cache`` and releases
+    through a ``pin_scope``), and no function takes a ``materialize``
+    switch between a lazy and a stored result."""
+    root = pathlib.Path(ai_batch_processing_spark.__file__).parent
+    raw, knobs = [], []
+    for path in sorted(root.rglob("*.py")):
+        src = path.read_text()
+        rel = path.relative_to(root).as_posix()
+        if rel != "jobs.py":
+            raw += [
+                f"{rel}:{i}"
+                for i, line in enumerate(src.splitlines(), 1)
+                if ".persist(" in line or ".unpersist(" in line
+            ]
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a = node.args
+                names = [x.arg for x in a.posonlyargs + a.args + a.kwonlyargs]
+                if "materialize" in names:
+                    knobs.append(f"{rel}:{node.lineno} {node.name}")
+    assert raw == [], raw
+    assert knobs == [], knobs

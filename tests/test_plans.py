@@ -196,9 +196,9 @@ def test_q112_tfidf_caches_tf_and_skips_totals_aggregate(spark, sf_dir):
     (InMemoryRelation) with the tokenize living in ONE MapInArrow node —
     and the r10 totals branch (a second scan-level size(filter(split)))
     must be GONE: the per-doc total rides on the kernel rows (r11).
-    Pinned on the LIBRARY form (materialize=False): the q112 wrapper
-    eagerly checkpoints (materialize=True), so its returned plan is an
-    opaque RDD scan and the internal shape is only visible here."""
+    Pinned on the lazy LIBRARY form: the q112 wrapper eagerly
+    checkpoints, so its returned plan is an opaque RDD scan and the
+    internal shape is only visible here."""
     from ai_batch_processing_spark.operators.corpus import tfidf_top_terms
     from ai_batch_processing_spark.session import load_tables
 

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import pytest
 
+from ai_batch_processing_spark.jobs import pin_scope
 from ai_batch_processing_spark.registry import load_all
 from ai_batch_processing_spark.testing import compare_frames
 
@@ -17,7 +18,14 @@ SPECS = load_all()
 @pytest.mark.parametrize("name", sorted(SPECS))
 def test_query_matches_oracle(name, spark, sf_dir, duck):
     spec = SPECS[name]
-    sdf = spec.fn(spark, sf_dir).toPandas()
+    spark.catalog.clearCache()
+    with pin_scope():
+        sdf = spec.fn(spark, sf_dir).toPandas()
+        # a query stores its result before it releases its own caches, so
+        # nothing it cached is left for the rest of the session
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
+            f"{name} left a cached relation in the session"
+        )
     if spec.oracle is None:
         assert len(sdf) >= 0  # rows-only smoke: plan executes
         return

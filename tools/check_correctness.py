@@ -21,6 +21,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
+    from ai_batch_processing_spark.jobs import pin_scope
     from ai_batch_processing_spark.registry import load_all
     from ai_batch_processing_spark.session import get_spark
 
@@ -33,7 +34,10 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            sdf = spec.fn(spark, sf_dir).toPandas()
+            # one scope per query: its pins and caches are released when
+            # it ends, not left for ContextCleaner
+            with pin_scope():
+                sdf = spec.fn(spark, sf_dir).toPandas()
         except Exception:
             print(f"FAIL {name}: spark query raised")
             traceback.print_exc()

@@ -3,8 +3,9 @@
 Run from ANY directory: ``python /root/repo/tools/driver_sim.py [sf_dir]``.
 Unlike tools/check_correctness.py (which uses the tuned get_spark), this
 builds the same kind of session the external driver does — default confs,
-arbitrary cwd — so session-conf and executor-import assumptions surface
-here before the real verify.
+arbitrary cwd, no ``pin_scope`` around a query — so session-conf and
+executor-import assumptions surface here before the real verify. Each
+query that leaves a cached relation in the session is printed and counted.
 """
 
 from __future__ import annotations
@@ -32,7 +33,9 @@ def main() -> int:
 
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     con = duck_con(sf)
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
     failed: list[str] = []
+    leaked: list[str] = []
     t0 = time.time()
     for name in sorted(qs):
         try:
@@ -41,6 +44,11 @@ def main() -> int:
             print(f"FAIL {name}: spark raised {type(ex).__name__}: {str(ex)[:150]}")
             failed.append(name)
             continue
+        finally:
+            if not cache_manager.isEmpty():
+                print(f"LEAK {name}: left a cached relation in the session")
+                leaked.append(name)
+                spark.catalog.clearCache()
         if name not in oracles:
             if len(sdf) == 0:
                 print(f"WARN {name}: rows-only check returned 0 rows")
@@ -49,7 +57,10 @@ def main() -> int:
         if problems:
             print(f"FAIL {name}: {problems}")
             failed.append(name)
-    print(f"done: {len(qs)} queries, {len(failed)} failures in {round(time.time() - t0)}s")
+    print(
+        f"done: {len(qs)} queries, {len(failed)} failures, "
+        f"{len(leaked)} leaving cached relations in {round(time.time() - t0)}s"
+    )
     spark.stop()
     return 1 if failed else 0
 
