@@ -22,14 +22,17 @@ Spark mapping:
   the socket.io emit.
 - rate/ETA (main.py:653-657) derive from completed-task counts and
   wall-clock, same arithmetic as the reference.
-- materialised intermediates, two kinds, one release path:
-  :func:`pin` stores rows that must be computed exactly once (an LLM
-  call's responses, a row numbering); :func:`cache` keeps a scratch frame
+- materialised frames, three kinds, one owner: :func:`pin` stores rows
+  that must be computed exactly once (an LLM call's responses, a row
+  numbering, a loop's lineage cut); :func:`cache` keeps a scratch frame
   that several branches read in Spark's columnar cache, which may be
-  recomputed if evicted. Both are released when the enclosing
-  :func:`pin_scope` closes (a job, a stream batch, a query, or an operator
-  that stores its result before it returns), so a long-lived registry
-  session accumulates no blocks.
+  recomputed if evicted; :meth:`Scope.store` stores an operator's result
+  eagerly before its scratch frames go. Pins and caches are released when
+  the :func:`pin_scope` they were made in closes, a stored result when the
+  scope around that one closes (a job, a stream batch, a query), so a
+  long-lived registry session accumulates no blocks. The two session
+  memos (the doc-stats frame, the broadcast-probe counts) outlive every
+  scope; :func:`release_memos` drops them.
 """
 
 from __future__ import annotations
@@ -92,34 +95,77 @@ def cache(df: DataFrame) -> DataFrame:
     return df
 
 
+class Scope:
+    """The handle :func:`pin_scope` yields."""
+
+    def __init__(self, outer_frames: list[DataFrame] | None):
+        self._outer_frames = outer_frames
+
+    def store(self, df: DataFrame) -> DataFrame:
+        """Store ``df``'s rows now (``localCheckpoint(eager=True)``), while
+        this scope's pins and caches are still alive, and return the stored
+        frame.
+
+        The stored frame outlives this scope: it is recorded in the
+        enclosing :func:`pin_scope` on this thread and released when that
+        one closes. With no enclosing scope its blocks wait for
+        ContextCleaner to reclaim them once the frame is unreachable.
+        """
+        stored = df.localCheckpoint(eager=True)
+        if self._outer_frames is not None:
+            self._outer_frames.append(stored)
+        return stored
+
+
 @contextlib.contextmanager
 def pin_scope():
     """Release every frame :func:`pin` and :func:`cache` record on this
     thread inside the block when the block exits, normally or by an
-    exception.
+    exception; yield a :class:`Scope` whose ``store`` keeps a result past
+    the block.
 
     One rule covers every caller: a function that stores its result before
-    it returns (an eager ``localCheckpoint``, or rows collected to the
-    driver) runs its body in a scope of its own; a function that returns a lazy frame over
-    its scratch frames opens none, and its caller's scope releases them.
+    it returns runs its body in a scope of its own and returns
+    ``scope.store(result)`` (or rows collected to the driver); a function
+    that returns a lazy frame over its pins and caches opens none, and its
+    caller's scope releases them.
 
     Keyed by thread, not by Spark job group: callers set job groups of
     their own, and a pin kept under a group nothing releases would hold a
     strong reference forever and block ContextCleaner. Read a frame made
     inside the scope only while it is open: afterwards a pinned one fails
     with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` and a cached one is
-    recomputed from its plan.
+    recomputed from its plan. A stored one stays readable until the
+    enclosing scope closes.
     """
     outer = getattr(_SCOPE, "frames", None), getattr(_SCOPE, "cached", None)
     _SCOPE.frames, _SCOPE.cached = frames, cached = [], []
     try:
-        yield
+        yield Scope(outer[0])
     finally:
         _SCOPE.frames, _SCOPE.cached = outer
         for pinned in frames:
-            pinned._jdf.queryExecution().logical().rdd().unpersist(False)
+            _unpersist_checkpoint(pinned)
         for df in cached:
             df.unpersist()
+
+
+def release_memos() -> None:
+    """Drop the session memos that outlive every scope: unpersist the
+    shared doc-stats frames (``text.doc_stats_cached``) and forget the
+    broadcast-dispatch probe counts (``relational.broadcast_if_small``).
+    The next query that needs one pays for it again."""
+    from ai_batch_processing_spark.operators import text
+    from ai_batch_processing_spark.plans import relational
+
+    for df in text._DOC_STATS_CACHE.values():
+        _unpersist_checkpoint(df)
+    text._DOC_STATS_CACHE.clear()
+    relational._probe_counts.clear()
+
+
+def _unpersist_checkpoint(df: DataFrame) -> None:
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 @dataclass

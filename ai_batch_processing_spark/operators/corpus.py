@@ -31,13 +31,15 @@ Scale shape, per operator:
 
 Storage note: the operators here that read one compacted intermediate from
 two or more branches keep it with ``jobs.cache`` (Catalyst does not reuse
-the exchange across the branches — measured, not assumed). One rule says
-who releases it: a function that returns a lazy frame (the LIBRARY form:
+the exchange across the branches — measured, not assumed), or with
+``jobs.pin`` when rows must be computed once. One rule says who releases
+it: a function that returns a lazy frame (the LIBRARY form:
 ``tfidf_top_terms``, ``unigram_surprise``, ``bm25_search``, ...) opens no
 scope, so its caches go to the caller's ``jobs.pin_scope``; a function that
 stores its result before it returns (every registered query over a library
-form, and the operators that end in an eager ``localCheckpoint``) runs in a
-scope of its own, so nothing stays cached after the call.
+form, and the operators that end in a stored result) runs in a scope of its
+own and returns ``scope.store(result)``, so nothing it cached stays after
+the call and the stored result is released by the caller's scope.
 """
 
 from __future__ import annotations
@@ -45,7 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ai_batch_processing_spark.jobs import cache, pin_scope
+from ai_batch_processing_spark.jobs import cache, pin, pin_scope
 from ai_batch_processing_spark.registry import register
 from ai_batch_processing_spark.session import load_tables
 from ai_batch_processing_spark.operators.template import with_row_index
@@ -169,8 +171,8 @@ def q112_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # No trailing orderBy (r10): the driver's value hash is order-
     # insensitive; the global range sort of a corpus-sized output is a
     # pure-waste exchange+sort at scale (the q103/q164 precedent).
-    with pin_scope():
-        return tfidf_top_terms(docs).localCheckpoint(eager=True)
+    with pin_scope() as scope:
+        return scope.store(tfidf_top_terms(docs))
 
 
 # ---------------------------------------------------------------------------
@@ -239,8 +241,8 @@ def vocab_zipf_stats(
 )
 def q113_vocab_zipf_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_tables(spark, sf_dir, ["documents"])["documents"]
-    with pin_scope():
-        return vocab_zipf_stats(docs).localCheckpoint(eager=True)
+    with pin_scope() as scope:
+        return scope.store(vocab_zipf_stats(docs))
 
 
 # ---------------------------------------------------------------------------
@@ -324,8 +326,8 @@ def q114_unigram_surprise(spark: SparkSession, sf_dir: str) -> DataFrame:
     # No trailing orderBy (r10): the driver's value hash is order-
     # insensitive; the global range sort of a corpus-sized output is a
     # pure-waste exchange+sort at scale (the q103/q164 precedent).
-    with pin_scope():
-        return unigram_surprise(docs).localCheckpoint(eager=True)
+    with pin_scope() as scope:
+        return scope.store(unigram_surprise(docs))
 
 
 # ---------------------------------------------------------------------------
@@ -424,8 +426,8 @@ def q168_bigram_surprise(spark: SparkSession, sf_dir: str) -> DataFrame:
     # No trailing orderBy (r10): the driver's value hash is order-
     # insensitive; the global range sort of a corpus-sized output is a
     # pure-waste exchange+sort at scale (the q103/q164 precedent).
-    with pin_scope():
-        return bigram_surprise(docs).localCheckpoint(eager=True)
+    with pin_scope() as scope:
+        return scope.store(bigram_surprise(docs))
 
 
 # ---------------------------------------------------------------------------
@@ -554,7 +556,7 @@ def incremental_dedup_bloom(
 
     The corpus fingerprints and the flagged batch are each consumed by TWO
     downstream branches (bitmap build + anti-join; definite/maybe split),
-    so both are lazily ``localCheckpoint``-ed: the regex-normalize+md5
+    so both are pinned (``jobs.pin``): the regex-normalize+md5
     pass — the dominant cost — runs once per side instead of once per
     branch, and only the 32-byte fingerprints are retained. The batch
     side needs no checkpoint since r11: the inline Bloom probe reads it
@@ -563,9 +565,9 @@ def incremental_dedup_bloom(
     bfp = batch.select(
         F.col(id_col).alias("doc_id"), fingerprint_expr(text_col).alias("fp")
     )
-    cfp = corpus.select(fingerprint_expr(text_col).alias("fp")).localCheckpoint(eager=False)
+    cfp = pin(corpus.select(fingerprint_expr(text_col).alias("fp")))
     words = bloom_bitmap_words(cfp, "fp", num_bits, k)
-    flagged = bloom_maybe_contains(bfp, words, "fp", num_bits, k).localCheckpoint(eager=False)
+    flagged = pin(bloom_maybe_contains(bfp, words, "fp", num_bits, k))
     definite_new = flagged.filter(~F.col("_maybe")).select("doc_id", "fp")
     maybe = flagged.filter(F.col("_maybe")).select("doc_id", "fp")
     # the equi-join moves fp to the front — re-project before the
@@ -771,8 +773,8 @@ _BM25_QUERY = ["data", "model", "training"]
 )
 def q117_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_tables(spark, sf_dir, ["documents"])["documents"]
-    with pin_scope():
-        out = bm25_search(docs, _BM25_QUERY, top_k=10).localCheckpoint(eager=True)
+    with pin_scope() as scope:
+        out = scope.store(bm25_search(docs, _BM25_QUERY, top_k=10))
     return out.orderBy("rnk")
 
 
@@ -1659,11 +1661,11 @@ def q212_hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", "rnk")
     )
-    with pin_scope():
+    with pin_scope() as scope:
         bm25 = bm25_search(t["documents"], _BM25_QUERY, top_k=_RRF_TOPN).select(
             "doc_id", "rnk"
         )
-        out = rrf_fuse({"bm25": bm25, "cosine": cos_top}).localCheckpoint(eager=True)
+        out = scope.store(rrf_fuse({"bm25": bm25, "cosine": cos_top}))
     return out.orderBy("rnk")
 
 
@@ -2259,8 +2261,8 @@ def fightin_words(
 )
 def q259_fightin_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_tables(spark, sf_dir, ["documents"])["documents"]
-    with pin_scope():
-        out = fightin_words(docs).localCheckpoint(eager=True)
+    with pin_scope() as scope:
+        out = scope.store(fightin_words(docs))
     return out.orderBy("source", "rnk")
 
 
@@ -2400,8 +2402,8 @@ def heldout_bigram_report(
 )
 def q260_heldout_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_tables(spark, sf_dir, ["documents"])["documents"]
-    with pin_scope():
-        out = heldout_bigram_report(docs).localCheckpoint(eager=True)
+    with pin_scope() as scope:
+        out = scope.store(heldout_bigram_report(docs))
     return out.orderBy("source")
 
 
@@ -2734,7 +2736,7 @@ def llr_collocations(docs: DataFrame, top_k: int = 20, min_count: int = 5) -> Da
         )
         .select(F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
     )
-    with pin_scope():
+    with pin_scope() as scope:
         bc = cache(bigr.groupBy("w1", "w2").agg(F.count(F.lit(1)).cast("long").alias("k11")))
         cw1 = bc.groupBy("w1").agg(F.sum("k11").alias("cw1"))
         cw2 = bc.groupBy("w2").agg(F.sum("k11").alias("cw2"))
@@ -2767,7 +2769,7 @@ def llr_collocations(docs: DataFrame, top_k: int = 20, min_count: int = 5) -> Da
         out = top.withColumn("rnk", F.row_number().over(w).cast("long")).select(
             "rnk", "w1", "w2", "k11", "cw1", "cw2", "g2"
         )
-        return out.localCheckpoint(eager=True)
+        return scope.store(out)
 
 
 @register(
@@ -3484,7 +3486,7 @@ def js_divergence_sources(
     reaches the hash), assembled and rounded to 6dp at the end.
     """
     toks = docs.select(F.col(source_col).alias("src"), F.explode(tokens_expr("text")).alias("term"))
-    with pin_scope():
+    with pin_scope() as scope:
         counts = cache(toks.groupBy("src", "term").agg(F.count(F.lit(1)).alias("n")))
         vocab = (
             counts.groupBy("term")
@@ -3525,14 +3527,12 @@ def js_divergence_sources(
         m = (F.col("pa") + F.col("pb")) / 2.0
         term_f = lambda x: F.when(x > 0, x * F.log(x / m)).otherwise(F.lit(0.0))  # noqa: E731
         contrib = F.round((term_f(F.col("pa")) + term_f(F.col("pb"))) / 2.0 * 1e9).cast("long")
-        out = (
+        return scope.store(
             pairs.select("source_a", "source_b", contrib.alias("c"))
             .groupBy("source_a", "source_b")
             .agg(F.round(F.sum("c") / 1e9, 6).alias("jsd_nats"))
             .orderBy("source_a", "source_b")
-            .localCheckpoint(eager=True)
         )
-        return out
 
 
 @register(
@@ -4218,7 +4218,7 @@ def vocab_source_mi(
     toks = docs.select(
         F.col(group_col).alias("grp"), F.explode(tokens_expr(text_col)).alias("term")
     )
-    with pin_scope():
+    with pin_scope() as scope:
         tg = cache(toks.groupBy("term", "grp").agg(F.count(F.lit(1)).alias("c")))
         t_m = tg.groupBy("term").agg(F.sum("c").alias("ct"))
         g_m = tg.groupBy("grp").agg(F.sum("c").alias("cg"))
@@ -4252,7 +4252,7 @@ def vocab_source_mi(
                 F.round(F.col("_mi_micro") / F.col("_h_micro").cast("double"), 6),
             ).otherwise(None).alias("mi_ratio"),
         )
-        return out.localCheckpoint(eager=True)
+        return scope.store(out)
 
 
 @register(
@@ -4327,7 +4327,7 @@ def vocab_churn(
     toks = docs.select(
         (F.col(id_col) % 2).alias("h"), F.explode(tokens_expr(text_col)).alias("term")
     )
-    with pin_scope():
+    with pin_scope() as scope:
         counts = cache(toks.groupBy("h", "term").agg(F.count(F.lit(1)).alias("c")))
         tops = [
             counts.filter(F.col("h") == i)
@@ -4363,7 +4363,7 @@ def vocab_churn(
                 ),
             )
         )
-        return out.localCheckpoint(eager=True)
+        return scope.store(out)
 
 
 @register(

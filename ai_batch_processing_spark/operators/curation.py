@@ -27,7 +27,7 @@ import re
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ai_batch_processing_spark.jobs import cache, pin_scope
+from ai_batch_processing_spark.jobs import cache, pin, pin_scope
 from ai_batch_processing_spark.registry import register
 from ai_batch_processing_spark.session import load_tables
 
@@ -166,7 +166,7 @@ def decontaminate_fuzzy(
     shuffled when it isn't (a forced broadcast measured an OOM at a
     51.5k-doc bench whose shingle sets are ~300 MB); the corpus pays
     exactly one shingle+signature pass (the fused ``sig_and_sets``
-    aggregate, lazily checkpointed — banding and verify both read it
+    aggregate, pinned — banding and verify both read it
     without recomputing) and the band join prunes it to candidate rows
     before any verify work. At ``bands == num_perm``
     (one-row bands, the default) a pair is a candidate iff any of the
@@ -196,12 +196,8 @@ def decontaminate_fuzzy(
         sig_and_sets,
     )
 
-    c = sig_and_sets(
-        shingle_hash_stream(corpus, id_col, text_col, k), num_perm, seed
-    ).localCheckpoint(eager=False)
-    b = sig_and_sets(
-        shingle_hash_stream(benchmark, id_col, text_col, k), num_perm, seed
-    ).localCheckpoint(eager=False)
+    c = pin(sig_and_sets(shingle_hash_stream(corpus, id_col, text_col, k), num_perm, seed))
+    b = pin(sig_and_sets(shingle_hash_stream(benchmark, id_col, text_col, k), num_perm, seed))
     # The banded join carries only (band, bh, id) rows — AQE sizes it
     # correctly and may broadcast the bench side when the eval set is
     # genuinely small.
@@ -1257,16 +1253,15 @@ def q121_curation_v2_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     surv = exact_dedup(kept.select("doc_id", "n_tokens", "fp"), ["fp"], keep_min="doc_id")
     # LM trained on the FULL corpus (q114 semantics), scored on survivors
-    with pin_scope():
+    with pin_scope() as scope:
         bits = unigram_surprise(docs).select("doc_id", "bits_per_token")
         banded = surv.join(bits, "doc_id").filter(
             (F.col("bits_per_token") >= 2.0) & (F.col("bits_per_token") <= 16.0)
         )
-        out = (
+        out = scope.store(
             assign_splits(banded, method="knuth")
             .groupBy("split")
             .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("n_tokens").alias("n_tokens"))
-            .localCheckpoint(eager=True)
         )
     return out.orderBy("split")
 
@@ -2996,16 +2991,16 @@ def facility_location_select(
                 )
             win = winners[0]
             chosen.append((rnd, int(win.cand), float(win.gain)))
+            if rnd == k:
+                break  # the last round's coverage is never read
             upd = pairs.filter(F.col("cand") == win.cand).select("x", "sim")
-            cur = (
-                cur.join(upd, "x", "left")
-                .select(
+            cur = pin(
+                cur.join(upd, "x", "left").select(
                     "x",
                     F.greatest(F.col("cur"), F.coalesce(F.col("sim"), F.lit(0.0))).alias(
                         "cur"
                     ),
                 )
-                .localCheckpoint(eager=False)
             )
         return emb.sparkSession.createDataFrame(
             chosen, "round bigint, vec_id bigint, gain double"
@@ -3405,9 +3400,9 @@ def perceptron_train_hashed(
     doc_id); each epoch joins the ≤ n_buckets+1-row weight table in as a
     broadcast (margins need no shuffle beyond the persisted layout), the
     misclassified-doc join is doc_id-co-partitioned, and the weight
-    update aggregates to n_buckets rows. Per-epoch lineage is cut with a
-    lazy localCheckpoint. Epochs are Spark jobs only at the end — the
-    whole loop stays lazy until the caller materializes.
+    update aggregates to n_buckets rows. Lineage is cut after every epoch
+    but the last with :func:`~ai_batch_processing_spark.jobs.pin`; the
+    last epoch's weights are stored before the feature bag is released.
     """
     if epochs < 1:
         raise ValueError(f"epochs must be >= 1, got {epochs}")
@@ -3418,7 +3413,7 @@ def perceptron_train_hashed(
     from ai_batch_processing_spark.session import shuffle_partitions
 
     n = min(shuffle_partitions(sess), max(2 * sess.sparkContext.defaultParallelism, 16))
-    with pin_scope():
+    with pin_scope() as scope:
         feats = cache(feats.repartition(n, "doc_id"))
         labels = docs.select(
             F.col(id_col).alias("doc_id"), F.col(label_col).cast("long").alias("y")
@@ -3442,17 +3437,13 @@ def perceptron_train_hashed(
                 .groupBy("b")
                 .agg(F.sum(F.col("y") * F.col("c")).alias("dw"))
             )
-            wt = (
-                wt.join(upd, "b", "left")
-                .select(
-                    "b",
-                    (F.col("w") + F.coalesce(F.col("dw"), F.lit(0)))
-                    .cast("long")
-                    .alias("w"),
-                )
-                .localCheckpoint(eager=(e == epochs - 1))
+            wt = wt.join(upd, "b", "left").select(
+                "b",
+                (F.col("w") + F.coalesce(F.col("dw"), F.lit(0))).cast("long").alias("w"),
             )
-        return wt
+            if e < epochs - 1:
+                wt = pin(wt)
+        return scope.store(wt)
 
 
 _PERC_BUCKETS = 256
@@ -3845,7 +3836,7 @@ def isotonic_calibration(bins: DataFrame) -> DataFrame:
         F.sum("cnt").over(w).alias("cc"),
         F.sum("pos").over(w).alias("cp"),
     )
-    with pin_scope():
+    with pin_scope() as scope:
         cums = cache(cums)
         lo = cums.select(
             F.col("b").alias("i"),
@@ -3864,18 +3855,15 @@ def isotonic_calibration(bins: DataFrame) -> DataFrame:
         )
         m_it = trip.groupBy("i", "t").agg(F.min("avg").alias("m"))
         iso = m_it.groupBy("t").agg(F.max("m").alias("iso"))
-        out = (
-            cums.join(iso, cums.b == iso.t)
-            .select(
+        return scope.store(
+            cums.join(iso, cums.b == iso.t).select(
                 "b",
                 "cnt",
                 "pos",
                 F.round(F.col("pos") * 1.0 / F.col("cnt"), 6).alias("raw_rate"),
                 F.round(F.col("iso"), 6).alias("iso_rate"),
             )
-            .localCheckpoint(eager=True)
         )
-        return out
 
 
 @register(
@@ -4583,7 +4571,7 @@ def q300_corpus_release_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ai_batch_processing_spark.operators.text import tokens_expr
 
-    with pin_scope():
+    with pin_scope() as scope:
         docs = cache(load_tables(spark, sf_dir, ["documents"])["documents"])
         base = docs.agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -4626,7 +4614,7 @@ def q300_corpus_release_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         dup_share = F.round(
             1.0 - F.col("n_uniq").cast("double") / F.col("n_docs"), 6
         ).alias("dup_share")
-        out = (
+        out = scope.store(
             base.crossJoin(ent)
             .crossJoin(ka)
             .crossJoin(psi)
@@ -4652,7 +4640,6 @@ def q300_corpus_release_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                     )
                 ).alias("release_ok"),
             )
-            .localCheckpoint(eager=True)
         )
     return out
 
@@ -4702,7 +4689,7 @@ def blocklist_census(
             .alias("hits"),
         )
     )
-    with pin_scope():
+    with pin_scope() as scope:
         hd = cache(hd)
         per = (
             hd.where(F.col("hits") > 0)
@@ -4721,8 +4708,7 @@ def blocklist_census(
                 F.sum("h").cast("long").alias("n_hits"),
             )
         )
-        out = per.unionByName(anyagg).orderBy("phrase").localCheckpoint(eager=True)
-        return out
+        return scope.store(per.unionByName(anyagg).orderBy("phrase"))
 
 
 @register(
@@ -5759,11 +5745,11 @@ def rank_blend_top_docs(
     orderBy+limit (TakeOrderedAndProject). ``scored`` is persisted for
     the loop (each score column reads it once for its histogram and once
     for the join-back; without the cache the expensive upstream lineage —
-    q336's flesch scan — recomputes per score) and released when the
-    eager checkpoint of the result has run, so nothing stays in session
+    q336's flesch scan — recomputes per score) and released once the
+    result is stored (``scope.store``), so nothing stays in session
     storage.
     """
-    with pin_scope():
+    with pin_scope() as scope:
         scored = cache(scored)
         out = scored
         for s in score_cols:
@@ -5783,13 +5769,12 @@ def rank_blend_top_docs(
         rank_sum = functools.reduce(lambda a, b: a + b, [F.col(f"r_{s}") for s in score_cols])
         ranked = out.select(id_col, *[f"r_{s}" for s in score_cols], rank_sum.alias("rank_sum"))
         w_rnk = Window.partitionBy(F.lit(0)).orderBy("rank_sum", id_col)
-        return (
+        return scope.store(
             ranked.orderBy("rank_sum", id_col)
             .limit(top_k)
             .withColumn("rnk", F.row_number().over(w_rnk).cast("long"))
             .select("rnk", id_col, *[f"r_{s}" for s in score_cols], "rank_sum")
-            .localCheckpoint(eager=True)
-    )
+        )
 
 
 def _rank_blend_oracle() -> str:

@@ -30,7 +30,7 @@ import random
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ai_batch_processing_spark.jobs import cache, pin_scope
+from ai_batch_processing_spark.jobs import cache, pin, pin_scope
 from ai_batch_processing_spark.registry import register
 from ai_batch_processing_spark.session import load_tables
 
@@ -832,10 +832,8 @@ def q42_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # low-similarity corpus (candidates ≫ survivors, the adversarial
     # 100 TB shape) the probe re-engages the screen (test-pinned on a
     # synthetic corpus).
-    with pin_scope():
-        return minhash_dedup_pairs(corpus, "id", "text", threshold=0.5, bands=8).localCheckpoint(
-            eager=True
-        )
+    with pin_scope() as scope:
+        return scope.store(minhash_dedup_pairs(corpus, "id", "text", threshold=0.5, bands=8))
 
 
 @register(
@@ -878,11 +876,13 @@ def q131_minhash_jaccard_verified(spark: SparkSession, sf_dir: str) -> DataFrame
     # on corpora with >500-doc position collisions (boilerplate). Fine
     # here: the corpus is bounded to 300 docs, so the r=1 pair fan-out is
     # bounded too.
-    with pin_scope():
-        out = minhash_dedup_pairs(
-            corpus, "id", "text", k=5, num_perm=64, bands=64, threshold=0.5,
-            max_bucket=1_000_000_000,
-        ).localCheckpoint(eager=True)
+    with pin_scope() as scope:
+        out = scope.store(
+            minhash_dedup_pairs(
+                corpus, "id", "text", k=5, num_perm=64, bands=64, threshold=0.5,
+                max_bucket=1_000_000_000,
+            )
+        )
     return out.orderBy("id_a", "id_b")
 
 
@@ -1016,10 +1016,10 @@ def connected_components(ids: DataFrame, pairs: DataFrame, max_iter: int = 20) -
     every edge is (node → component-min). ``ids`` must have column
     ``id``; ``pairs`` columns ``id_a``/``id_b``.
     """
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .localCheckpoint(eager=False)
+    edges = pin(
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")).filter(
+            F.col("src") != F.col("dst")
+        )
     )
 
     def fingerprint(e: DataFrame):
@@ -1033,9 +1033,10 @@ def connected_components(ids: DataFrame, pairs: DataFrame, max_iter: int = 20) -
     prev_edges = edges
     prev = fingerprint(edges)
     for _ in range(max_iter):
-        # localCheckpoint each round: the plan would otherwise double per
-        # iteration (and recompute every prior round per action)
-        edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)
+        # pin each round: the plan would otherwise double per iteration
+        # (and recompute every prior round per action); the fingerprint
+        # is the action that stores it
+        edges = pin(_small_star(_large_star(edges)))
         cur = fingerprint(edges)
         # Both frames are distinct sets, so equal counts + empty one-sided
         # difference ⇒ set equality. Only paid on fingerprint match (at
@@ -1983,7 +1984,7 @@ def prefix_filter_pairs(
         df.select(F.col(id_col).alias("id"), F.explode(tokens_expr(text_col)).alias("term"))
         .dropDuplicates(["id", "term"])
     )
-    with pin_scope():
+    with pin_scope() as scope:
         tok = cache(tok)
         sizes = tok.groupBy("id").agg(F.count(F.lit(1)).cast("long").alias("n"))
         dfreq = tok.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
@@ -2028,9 +2029,8 @@ def prefix_filter_pairs(
                 uni.cast("long").alias("uni"),
                 F.round(F.col("inter") * 1.0 / uni, 6).alias("jaccard"),
             )
-            .localCheckpoint(eager=True)
         )
-        return out
+        return scope.store(out)
 
 
 @register(

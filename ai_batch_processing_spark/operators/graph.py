@@ -8,7 +8,7 @@ computation beyond ``dedup.connected_components``:
 
 - each iteration is one keyed join + one aggregate (all partial-aggregated,
   no driver-side state beyond the loop counter);
-- lineage is truncated per iteration with ``localCheckpoint`` (the
+- lineage is cut per iteration with ``jobs.pin`` (the
   connected-components pattern — without it the plan doubles per round and
   every action recomputes all prior rounds);
 - the iteration count is FIXED, so the whole computation is deterministic
@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ai_batch_processing_spark.jobs import cache, pin_scope
+from ai_batch_processing_spark.jobs import cache, pin, pin_scope
 from ai_batch_processing_spark.registry import register
 from ai_batch_processing_spark.session import load_tables
 
@@ -62,10 +62,10 @@ def pagerank(
     ``single_task_edges=None``) the distributed join+agg loop below is
     the only shape that survives — it is the 100 TB path.
 
-    ``checkpoint_every`` picks how often the rank lineage is truncated
-    with a LAZY ``localCheckpoint``. The default (2) bounds plan depth at
-    two rounds. Fusing the whole loop into one plan lost its A/B at the
-    q122 bench shape (300 nodes, 1.5k edges, 10 rounds, warm session,
+    ``checkpoint_every`` picks how often the rank lineage is cut with
+    :func:`~ai_batch_processing_spark.jobs.pin`. The default (2) bounds
+    plan depth at two rounds. Fusing the whole loop into one plan lost its
+    A/B at the q122 bench shape (300 nodes, 1.5k edges, 10 rounds, warm session,
     fresh-call min-of-3): fused 4.76 s vs every-2 3.23 s vs every-1
     3.28 s — every new invocation re-analyzes the deep plan on the driver,
     and that analysis cost dominates the round trips it saves.
@@ -93,8 +93,8 @@ def pagerank(
     # layout must be an explicit REPARTITION_BY_NUM (below), which is
     # exactly the form AQE leaves alone.
     # The scope releases the caches even when an executor loss / OOM
-    # raises mid-loop; both branches store their result eagerly first.
-    with pin_scope():
+    # raises mid-loop; both branches' results are stored first.
+    with pin_scope() as scope:
         e_raw = cache(edges)
         integral = {"tinyint", "smallint", "int", "bigint"}
         if (
@@ -104,8 +104,10 @@ def pagerank(
             and dict(e_raw.dtypes).get("dst") in integral
             and e_raw.count() <= single_task_edges
         ):
-            return _pagerank_single_task(nodes, e_raw, iterations, damping)
-        return _pagerank_impl(nodes, e_raw, iterations, damping, checkpoint_every, conf_part)
+            return scope.store(_pagerank_single_task(nodes, e_raw, iterations, damping))
+        return scope.store(
+            _pagerank_impl(nodes, e_raw, iterations, damping, checkpoint_every, conf_part)
+        )
 
 
 def _pagerank_single_task(
@@ -129,8 +131,7 @@ def _pagerank_single_task(
     Shape: nodes and edges are tagged, unioned, funneled into ONE
     mapInPandas task (edges ship through Arrow once — no nulls, so the
     long columns stay int64 end to end); the per-round work is two numpy
-    kernels over the edge arrays. The result is eagerly localCheckpoint-ed
-    so the caller's cache cleanup can't strand its lineage.
+    kernels over the edge arrays. :func:`pagerank` stores the result.
     """
     id_t = dict(nodes.dtypes)["id"]
     merged = e_raw.select(
@@ -184,9 +185,7 @@ def _pagerank_single_task(
         yield pd.DataFrame({"id": ids, "rank": r})
 
     out = merged.coalesce(1).mapInPandas(solve, "id long, rank double")
-    return out.select(F.col("id").cast(id_t).alias("id"), "rank").localCheckpoint(
-        eager=True
-    )
+    return out.select(F.col("id").cast(id_t).alias("id"), "rank")
 
 
 def _pagerank_impl(
@@ -216,12 +215,7 @@ def _pagerank_impl(
     # re-running the node scan + count and re-exchanging both sides 10
     # times over. Net per-round data shuffled: the contribs aggregate
     # plus the node-sized rank table only.
-    base = (
-        nodes.crossJoin(F.broadcast(n_row))
-        .select("id", "n")
-        .repartition(n_part, "id")
-        .localCheckpoint(eager=True)
-    )
+    base = pin(nodes.crossJoin(F.broadcast(n_row)).select("id", "n").repartition(n_part, "id"))
     ranks = base.select("id", (F.lit(1.0) / F.col("n")).alias("rank"))
     for i in range(iterations):
         contribs = (
@@ -236,14 +230,10 @@ def _pagerank_impl(
                 + F.lit(damping) * F.coalesce(F.col("inflow"), F.lit(0.0))
             ).alias("rank"),
         )
-        last = i == iterations - 1
-        if last or (i + 1) % checkpoint_every == 0:
-            # eager only on the last round: downstream consumers (and the
-            # caller's cache cleanup) need the RESULT materialized;
-            # intermediate rounds only need their lineage cut (lazy)
-            ranks = ranks.localCheckpoint(eager=last)
-    # ranks is eagerly checkpointed before the caller's scope drops the
-    # caches — nothing downstream depends on e's storage
+        if i < iterations - 1 and (i + 1) % checkpoint_every == 0:
+            # intermediate rounds only need their lineage cut; pagerank
+            # stores the last round
+            ranks = pin(ranks)
     return ranks
 
 
@@ -678,14 +668,15 @@ def q162_pagerank_replicated_verified(spark: SparkSession, sf_dir: str) -> DataF
         .select("vec_id", "embedding")
     )
     # same persist rationale as q150 (kmeans 4× + assignment 2× + nodes)
-    with pin_scope():
+    with pin_scope() as scope:
         corpus = cache(replicate_perturbed(emb, replicas=_PR2_REPLICAS, perturb="rational"))
         nodes = corpus.select(F.col("vec_id").alias("id"))
         edges = knn_edges_approx(corpus, k=_PR_K, nlist=_PR3_NLIST, nprobe=_PR3_NLIST)
         ranks = pagerank(nodes, edges, iterations=_PR_ITERS)
-    return ranks.select(
-        F.col("id").alias("vec_id"), F.round("rank", 6).alias("rank")
-    ).orderBy("vec_id")
+        out = scope.store(
+            ranks.select(F.col("id").alias("vec_id"), F.round("rank", 6).alias("rank"))
+        )
+    return out.orderBy("vec_id")
 
 
 @register(
@@ -716,16 +707,17 @@ def q150_pagerank_approx_knn_graph(spark: SparkSession, sf_dir: str) -> DataFram
     # query side), the node table once — 7 scan+replicate recomputes
     # without the cache (measured r10: 0.5 s of the sf0.1 wall; at scale
     # the same passes re-read the parquet 7×). MEMORY_AND_DISK — spills,
-    # never OOMs. pagerank() returns its ranks eagerly checkpointed, so
-    # the scope frees the cache with nothing left to recompute.
-    with pin_scope():
+    # never OOMs. pagerank() stores its ranks in this scope, so the
+    # result is stored again before the scope releases them.
+    with pin_scope() as scope:
         corpus = cache(replicate_perturbed(emb, replicas=_PR2_REPLICAS))
         nodes = corpus.select(F.col("vec_id").alias("id"))
         edges = knn_edges_approx(corpus, k=_PR_K, nlist=_PR2_NLIST, nprobe=_PR2_NPROBE)
         ranks = pagerank(nodes, edges, iterations=_PR_ITERS)
-    return ranks.select(
-        F.col("id").alias("vec_id"), F.round("rank", 6).alias("rank")
-    ).orderBy("vec_id")
+        out = scope.store(
+            ranks.select(F.col("id").alias("vec_id"), F.round("rank", 6).alias("rank"))
+        )
+    return out.orderBy("vec_id")
 
 
 # ---------------------------------------------------------------------------
@@ -903,8 +895,9 @@ def label_propagation(
 
     Scale shape: each step is one edges⋈labels join (shuffle on src) +
     one (dst,label) aggregate + one dst argmax — edges shuffle once per
-    round, labels are node-sized, and lineage is truncated per round with
-    a lazy localCheckpoint so the plan doesn't double per iteration. The
+    round, labels are node-sized, and lineage is cut after every round but
+    the last with :func:`~ai_batch_processing_spark.jobs.pin` so the plan
+    doesn't double per iteration; the caller stores the result. The
     integer vote sum is a plain partial-aggregating F.sum: safe for hub
     dsts whose in-degree (unbounded in a directed k-NN graph — only
     OUT-degree is k-bounded) would make a collect_list fold corpus-sized.
@@ -940,8 +933,9 @@ def label_propagation(
                 "id",
                 F.coalesce("seed_label", "vote_label", "prev").cast("int").alias("label"),
             )
-            .localCheckpoint(eager=(i == iterations - 1))
         )
+        if i < iterations - 1:
+            labels = pin(labels)
     return labels
 
 
@@ -1029,7 +1023,7 @@ def q231_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id") < _PR_CAP)
         .select("vec_id", "embedding", "label")
     )
-    with pin_scope():
+    with pin_scope() as scope:
         emb = cache(emb)
         nodes = emb.select(
             F.col("vec_id").alias("id"),
@@ -1042,8 +1036,7 @@ def q231_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("neighbor_id").alias("dst"),
             F.col("score").alias("w"),
         )
-        # the last round's labels are eagerly checkpointed: stored already
-        out = label_propagation(nodes, edges, iterations=_LP_ITERS)
+        out = scope.store(label_propagation(nodes, edges, iterations=_LP_ITERS))
     return out.select(F.col("id").alias("vec_id"), "label").orderBy("vec_id")
 
 
@@ -1132,8 +1125,9 @@ def hits(
 
     Scale shape: per round, two edges⋈scores joins (shuffle on src then
     dst), two node-sized aggregates, and two scalar totals broadcast
-    back; lineage is cut once per round with a lazy localCheckpoint.
-    Nodes without in-edges (authority) or out-edges (hub) hold 0.
+    back; lineage is cut once per round but the last with
+    :func:`~ai_batch_processing_spark.jobs.pin`, and the caller stores the
+    result. Nodes without in-edges (authority) or out-edges (hub) hold 0.
     """
     h = nodes.select("id", F.lit(scale).cast("long").alias("h"))
     a = None
@@ -1175,8 +1169,9 @@ def hits(
                 .cast("long")
                 .alias("h"),
             )
-            .localCheckpoint(eager=(i == iterations - 1))
         )
+        if i < iterations - 1:
+            h = pin(h)
     return (
         nodes.join(a, "id", "left")
         .join(h, "id", "left")
@@ -1268,13 +1263,13 @@ def q247_hits_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id") < _PR_CAP)
         .select("vec_id", "embedding")
     )
-    with pin_scope():
+    with pin_scope() as scope:
         emb = cache(emb)
         nodes = emb.select(F.col("vec_id").alias("id"))
         edges = cosine_topk(emb, emb, k=_PR_K).select(
             F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst")
         )
-        out = hits(nodes, edges, iterations=_HITS_ITERS).localCheckpoint(eager=True)
+        out = scope.store(hits(nodes, edges, iterations=_HITS_ITERS))
     return out.select(F.col("id").alias("vec_id"), "authority", "hub").orderBy("vec_id")
 
 
@@ -1401,12 +1396,12 @@ def q252_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id") < _PR_CAP)
         .select("vec_id", "embedding")
     )
-    with pin_scope():
+    with pin_scope() as scope:
         emb = cache(emb)
         edges = cosine_topk(emb, emb, k=_PR_K).select(
             F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst")
         )
-        return degree_assortativity(edges).localCheckpoint(eager=True)
+        return scope.store(degree_assortativity(edges))
 
 
 # ---------------------------------------------------------------------------
@@ -1435,8 +1430,8 @@ def kcore_members(
 
     Scale shape: per round one induced-degree aggregate (two semi joins
     against the alive set + a map-combinable count) and one filter;
-    lineage truncated every ``checkpoint_every`` rounds exactly like
-    connected_components. The alive set only shrinks, so per-round work
+    lineage cut every ``checkpoint_every`` rounds (the last round is stored
+    with the result instead). The alive set only shrinks, so per-round work
     is monotonically decreasing.
     """
     sym = (
@@ -1446,7 +1441,7 @@ def kcore_members(
         .dropDuplicates(["src", "dst"])
     )
     alive = nodes.select("id")
-    with pin_scope():
+    with pin_scope() as scope:
         sym = cache(sym)
         for r in range(rounds):
             # two disambiguated projections of the SAME alive frame — a
@@ -1460,13 +1455,10 @@ def kcore_members(
                 .agg(F.count(F.lit(1)).cast("long").alias("degree"))
             )
             alive = deg.filter(F.col("degree") >= k).select(F.col("src").alias("id"))
-            last = r == rounds - 1
-            if last or (r + 1) % checkpoint_every == 0:
-                alive = alive.localCheckpoint(eager=last)
-        return (
-            deg.filter(F.col("degree") >= k)
-            .select(F.col("src").alias("id"), "degree")
-            .localCheckpoint(eager=True)
+            if r < rounds - 1 and (r + 1) % checkpoint_every == 0:
+                alive = pin(alive)
+        return scope.store(
+            deg.filter(F.col("degree") >= k).select(F.col("src").alias("id"), "degree")
         )
 
 
@@ -1658,7 +1650,7 @@ def adamic_adar_topk(edges: DataFrame, top_k: int = 20) -> DataFrame:
         .where(F.col("a") != F.col("b"))
         .distinct()
     )
-    with pin_scope():
+    with pin_scope() as scope:
         und = cache(und)
         sym = und.unionAll(und.select(F.col("b").alias("a"), F.col("a").alias("b"))).select(
             F.col("a").alias("w"), F.col("b").alias("x")
@@ -1686,7 +1678,7 @@ def adamic_adar_topk(edges: DataFrame, top_k: int = 20) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("common_neighbors"),
             F.sum("w_micro").cast("long").alias("aa_micro"),
         )
-        out = (
+        return scope.store(
             scored.orderBy(F.desc("aa_micro"), "a", "b")
             .limit(top_k)
             .select(
@@ -1696,9 +1688,7 @@ def adamic_adar_topk(edges: DataFrame, top_k: int = 20) -> DataFrame:
                 "aa_micro",
                 F.round(F.col("aa_micro") / 1e6, 6).alias("aa_score"),
             )
-            .localCheckpoint(eager=True)
         )
-        return out
 
 
 _AA_TOPK = 20
@@ -1785,55 +1775,53 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
     d_c — null labels bucket as community −1); each term is one
     fixed-order IEEE expression snapped to 6dp before the
     community-bounded sum. One degree aggregate + two label joins +
-    one within-community edge count; never quadratic.
+    one within-community edge count; never quadratic. The result is lazy:
+    its scratch cache belongs to the caller's scope, which stores it.
     """
-    und = (
+    und = cache(
         edges.select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
         .where(F.col("a") != F.col("b"))
         .distinct()
     )
-    with pin_scope():
-        und = cache(und)
-        lab = labels.select("id", F.coalesce(F.col("label"), F.lit(-1)).alias("label"))
-        deg = (
-            und.select(F.col("a").alias("id"))
-            .unionAll(und.select(F.col("b").alias("id")))
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).alias("degree"))
-        )
-        d_c = (
-            deg.join(lab, "id")
-            .groupBy("label")
-            .agg(F.sum("degree").cast("long").alias("dc"))
-        )
-        la = lab.select(F.col("id").alias("a"), F.col("label").alias("la"))
-        lb = lab.select(F.col("id").alias("b"), F.col("label").alias("lb"))
-        m_c = (
-            und.join(la, "a")
-            .join(lb, "b")
-            .where(F.col("la") == F.col("lb"))
-            .groupBy(F.col("la").alias("label"))
-            .agg(F.count(F.lit(1)).cast("long").alias("mc"))
-        )
-        m = und.agg(F.count(F.lit(1)).cast("long").alias("m"))
-        per = (
-            d_c.join(m_c, "label", "left")
-            .select("label", "dc", F.coalesce("mc", F.lit(0)).alias("mc"))
-            .crossJoin(F.broadcast(m))
-        )
-        term = F.round(
-            F.col("mc").cast("double") / F.col("m")
-            - (F.col("dc").cast("double") / (2 * F.col("m")))
-            * (F.col("dc").cast("double") / (2 * F.col("m"))),
-            6,
-        )
-        out = per.select("m", term.alias("t")).groupBy("m").agg(
-            F.count(F.lit(1)).cast("long").alias("n_communities"),
-            F.round(F.sum("t"), 6).alias("modularity"),
-        ).select(F.col("m").alias("m_edges"), "n_communities", "modularity")
-        return out.localCheckpoint(eager=True)
+    lab = labels.select("id", F.coalesce(F.col("label"), F.lit(-1)).alias("label"))
+    deg = (
+        und.select(F.col("a").alias("id"))
+        .unionAll(und.select(F.col("b").alias("id")))
+        .groupBy("id")
+        .agg(F.count(F.lit(1)).alias("degree"))
+    )
+    d_c = (
+        deg.join(lab, "id")
+        .groupBy("label")
+        .agg(F.sum("degree").cast("long").alias("dc"))
+    )
+    la = lab.select(F.col("id").alias("a"), F.col("label").alias("la"))
+    lb = lab.select(F.col("id").alias("b"), F.col("label").alias("lb"))
+    m_c = (
+        und.join(la, "a")
+        .join(lb, "b")
+        .where(F.col("la") == F.col("lb"))
+        .groupBy(F.col("la").alias("label"))
+        .agg(F.count(F.lit(1)).cast("long").alias("mc"))
+    )
+    m = und.agg(F.count(F.lit(1)).cast("long").alias("m"))
+    per = (
+        d_c.join(m_c, "label", "left")
+        .select("label", "dc", F.coalesce("mc", F.lit(0)).alias("mc"))
+        .crossJoin(F.broadcast(m))
+    )
+    term = F.round(
+        F.col("mc").cast("double") / F.col("m")
+        - (F.col("dc").cast("double") / (2 * F.col("m")))
+        * (F.col("dc").cast("double") / (2 * F.col("m"))),
+        6,
+    )
+    return per.select("m", term.alias("t")).groupBy("m").agg(
+        F.count(F.lit(1)).cast("long").alias("n_communities"),
+        F.round(F.sum("t"), 6).alias("modularity"),
+    ).select(F.col("m").alias("m_edges"), "n_communities", "modularity")
 
 
 def _modularity_oracle_sql() -> str:
@@ -1917,7 +1905,7 @@ def q298_labelprop_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id") < _PR_CAP)
         .select("vec_id", "embedding", "label")
     )
-    with pin_scope():
+    with pin_scope() as scope:
         emb = cache(emb)
         nodes = emb.select(
             F.col("vec_id").alias("id"),
@@ -1933,7 +1921,7 @@ def q298_labelprop_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         prop = label_propagation(nodes, wedges, iterations=_LP_ITERS).select(
             "id", "label"
         )
-        return modularity(wedges.select("src", "dst"), prop)
+        return scope.store(modularity(wedges.select("src", "dst"), prop))
 
 
 # ---------------------------------------------------------------------------
@@ -1960,7 +1948,7 @@ def personalized_pagerank(
     round, lineage cut every ``checkpoint_every`` rounds. Non-seed sinks
     simply decay (no dangling redistribution, the q122 convention).
     """
-    with pin_scope():
+    with pin_scope() as scope:
         e_raw = cache(edges)
         odeg = e_raw.groupBy("src").agg(F.count(F.lit(1)).alias("odeg"))
         e = cache(e_raw.join(odeg, "src"))
@@ -1993,11 +1981,9 @@ def personalized_pagerank(
                     ).alias("rank"),
                 )
             )
-            last = i == iterations - 1
-            if last or (i + 1) % checkpoint_every == 0:
-                ranks = ranks.localCheckpoint(eager=last)
-        # the eager final checkpoint materializes ranks BEFORE the caches drop
-        return ranks
+            if i < iterations - 1 and (i + 1) % checkpoint_every == 0:
+                ranks = pin(ranks)
+        return scope.store(ranks)
 
 
 _PPR_SEED_MOD = 50

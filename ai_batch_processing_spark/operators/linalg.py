@@ -459,10 +459,10 @@ def _pca2_outliers_oracle_sql(n_iter: int, dim: int, top_n: int) -> str:
 def q236_pca_top2_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
     _require_dim(emb, _PCA_DIM)
-    with pin_scope():
+    with pin_scope() as scope:
         emb = cache(emb)
         mu, comps = pca_components(emb, n_components=2, n_iter=_PCA_ITERS)
-        out = pca_project(emb, mu, comps).localCheckpoint(eager=True)
+        out = scope.store(pca_project(emb, mu, comps))
     return out.orderBy("vec_id")
 
 
@@ -486,15 +486,14 @@ _PCA_OUTLIER_TOPN = 20
 def q237_pca_reconstruction_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
     _require_dim(emb, _PCA_DIM)
-    with pin_scope():
+    with pin_scope() as scope:
         emb = cache(emb)
         mu, comps = pca_components(emb, n_components=2, n_iter=_PCA_ITERS)
-        return (
+        return scope.store(
             pca_project(emb, mu, comps, residual_norm=True)
             .select("vec_id", "resid_norm")
             .orderBy(F.desc("resid_norm"), F.asc("vec_id"))
             .limit(_PCA_OUTLIER_TOPN)
-            .localCheckpoint(eager=True)
         )
 
 

@@ -420,8 +420,8 @@ def q61_media_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select((F.col("doc_id") + 100000).alias("doc_id"), F.col("text"))
     )
     corpus = attach_payload(base.unionAll(dups))
-    with pin_scope():
-        out = media_near_dup_pairs(corpus, max_hamming=3).localCheckpoint(eager=True)
+    with pin_scope() as scope:
+        out = scope.store(media_near_dup_pairs(corpus, max_hamming=3))
     return out.orderBy("id_a", "id_b")
 
 
@@ -492,10 +492,8 @@ def q146_media_phash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = attach_payload(base.unionAll(dups))
     portable = lambda p: _simhash_bytes(p, bits=32, mix="portable")  # noqa: E731
-    with pin_scope():
-        out = media_near_dup_pairs(corpus, max_hamming=3, bits=32, hasher=portable).localCheckpoint(
-            eager=True
-        )
+    with pin_scope() as scope:
+        out = scope.store(media_near_dup_pairs(corpus, max_hamming=3, bits=32, hasher=portable))
     return out.orderBy("id_a", "id_b")
 
 

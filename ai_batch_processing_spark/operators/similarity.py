@@ -30,7 +30,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ai_batch_processing_spark.jobs import cache, pin_scope
+from ai_batch_processing_spark.jobs import cache, pin, pin_scope
 from ai_batch_processing_spark.registry import register
 from ai_batch_processing_spark.session import load_tables, shuffle_partitions
 
@@ -809,12 +809,11 @@ def embedding_near_dup_pairs_lsh(
         )
     )
     # vectorized bucketing (see _table_buckets_vec: bit-identical signs),
-    # lazily checkpointed — the signature pass feeds THREE consumers
-    # (bucket counts + both sides of the self-join) and must run once
-    sig = (
+    # pinned — the signature pass feeds THREE consumers (bucket counts +
+    # both sides of the self-join) and must run once
+    sig = pin(
         base.select("id", F.posexplode(_table_buckets_vec("_v", tables)).alias("t", "bucket"))
         .select("id", F.struct("t", "bucket").alias("tb"))
-        .localCheckpoint(eager=False)
     )
     counts = sig.groupBy("tb").agg(F.count(F.lit(1)).alias("m"))
     ok = sig.join(F.broadcast(counts.filter(F.col("m") > max_bucket)), ["tb"], "left_anti")
@@ -915,10 +914,10 @@ def q46_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("vec_id") < 300) & (F.col("vec_id") % 5 == 0))
         .select((F.col("vec_id") + 100000).alias("id"), "embedding")
     )
-    with pin_scope():
-        out = embedding_near_dup_pairs_lsh(
-            base.unionAll(dups), threshold=0.99, id_col="id"
-        ).localCheckpoint(eager=True)
+    with pin_scope() as scope:
+        out = scope.store(
+            embedding_near_dup_pairs_lsh(base.unionAll(dups), threshold=0.99, id_col="id")
+        )
     return out.orderBy("id_a", "id_b")
 
 
@@ -1279,8 +1278,8 @@ def q118_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("vec_id") < 300) & (F.col("vec_id") % 5 == 0))
         .select((F.col("vec_id") + 100000).alias("id"), "embedding")
     )
-    with pin_scope():
-        out = semantic_dedup_clusters(base.unionAll(dups)).localCheckpoint(eager=True)
+    with pin_scope() as scope:
+        out = scope.store(semantic_dedup_clusters(base.unionAll(dups)))
     return out.orderBy("keep_id")
 
 
@@ -3487,7 +3486,7 @@ def margin_best_pairs(
             ).alias("cosine"),
         )
     )
-    with pin_scope():
+    with pin_scope() as scope:
         pairs = cache(pairs)  # scored ONCE: ka, kb, and the final join all reuse it
         wa = Window.partitionBy("id_a").orderBy(F.desc("cosine"), F.asc("id_b"))
         wb = Window.partitionBy("id_b").orderBy(F.desc("cosine"), F.asc("id_a"))
@@ -3536,8 +3535,7 @@ def margin_best_pairs(
             .filter(F.col("_rn") == 1)
             .select("id_a", "id_b", "cosine", "margin")
         )
-        # materialize while the pair cache is alive; the scope releases it
-        return out.localCheckpoint(eager=True)
+        return scope.store(out)
 
 
 _MM_CAP_A = 50
@@ -3634,7 +3632,7 @@ def cluster_purity_nmi(assign: DataFrame, labels: DataFrame) -> DataFrame:
         .groupBy("cell", "label")
         .agg(F.count(F.lit(1)).cast("long").alias("n_cs"))
     )
-    with pin_scope():
+    with pin_scope() as scope:
         cont = cache(cont)
         tot = cont.agg(F.sum("n_cs").cast("double").alias("n"))
         nc = cont.groupBy("cell").agg(F.sum("n_cs").alias("n_c"))
@@ -3685,9 +3683,8 @@ def cluster_purity_nmi(assign: DataFrame, labels: DataFrame) -> DataFrame:
                     F.col("mi") / ((F.col("h_cluster") + F.col("h_label")) / 2), 6
                 ).alias("nmi"),
             )
-            .localCheckpoint(eager=True)
         )
-        return out
+        return scope.store(out)
 
 
 @register(

@@ -677,7 +677,7 @@ def q310_hll_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_tables(spark, sf_dir, ["documents"])["documents"]
     terms = docs.select("source", F.explode(tokens_expr("text")).alias("term"))
-    with pin_scope():
+    with pin_scope() as scope:
         coords = cache(hll_bucket_rho(terms, "term", "source"))
         per_source = coords.groupBy("source", "bucket").agg(F.max("rho").alias("r"))
         merged = per_source.groupBy("bucket").agg(F.max("r").alias("r"))
@@ -702,7 +702,7 @@ def q310_hll_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             (raw <= F.lit(2.5 * m)) & (v > 0),
             F.round(F.lit(m) * F.log(F.lit(m) / v.cast("double")), 6),
         ).otherwise(F.round(raw, 6))
-        out = (
+        return scope.store(
             cmp_.crossJoin(est)
             .select(
                 "n_mismatched_registers",
@@ -710,9 +710,7 @@ def q310_hll_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 v.alias("n_zero_registers"),
                 est_col.alias("est_merged"),
             )
-            .localCheckpoint(eager=True)
         )
-        return out
 
 
 # --------------------------------------------------------------------------

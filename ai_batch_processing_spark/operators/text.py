@@ -17,7 +17,7 @@ import pandas as pd  # noqa: F401 — pandas-UDF type hints resolve against it
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ai_batch_processing_spark.jobs import cache, pin_scope
+from ai_batch_processing_spark.jobs import cache, pin, pin_scope
 from ai_batch_processing_spark.registry import register
 from ai_batch_processing_spark.session import load_tables
 
@@ -1385,8 +1385,8 @@ def bpe_train(
 
     Each PASS: one vocab-sized pair aggregate, a top-``merge_batch+1``
     driver collect, then up to ``merge_batch`` merges applied as a single
-    chained ``replace`` projection over the type table with lazy
-    ``localCheckpoint`` lineage truncation. The corpus is touched ONCE
+    chained ``replace`` projection over the type table, its lineage cut
+    with ``jobs.pin``. The corpus is touched ONCE
     (word-type extraction); every pass is O(|vocab|), and a real
     30k-merge vocabulary needs ~vocab/merge_batch Spark jobs instead of
     one per merge (the round-4 driver-cadence defect). Stops early if no
@@ -1421,58 +1421,60 @@ def bpe_train(
     pinned in tests; the unrolled DuckDB CTE oracle (q151/q157) is
     sequential by construction, so the hash gates prove it per-round.
     """
-    # eager=False (r11): the first pass's pair-totals collect materializes
-    # the type table as a side effect — one less dedicated job (the q103
-    # doc-stats precedent); later passes read the checkpoint blocks.
-    words = _bpe_word_types(df, text_col).localCheckpoint(eager=False)
-    spark = df.sparkSession
-    merges: list[tuple] = []
-    # lineage-depth budget (r11): a checkpoint per PASS re-materialized the
-    # whole type table every iteration, but each pass only adds ≤ accepted
-    # replace expressions to the plan — re-deriving a few chained replaces
-    # from the last checkpoint is cheaper than writing the table (sf0.1
-    # interleaved: 1.34 → 1.22 s min, identical merges). Checkpoint only
-    # once ~128 replaces have accumulated, so a 30k-merge run still
-    # truncates its plan every couple of passes.
-    _ckpt_every = 128
-    _pending = 0
-    while len(merges) < n_merges:
-        want = min(merge_batch, n_merges - len(merges))
-        rows = (
-            _bpe_pair_totals(words)
-            .orderBy(F.desc("total"), F.asc("a"), F.asc("b"))
-            .limit(want + 1)
-            .collect()
+    # the pins are released when training ends: the merges are driver rows
+    with pin_scope():
+        # pinned, not stored (r11): the first pass's pair-totals collect
+        # materializes the type table as a side effect — one less dedicated job
+        # (the q103 doc-stats precedent); later passes read the pinned blocks.
+        words = pin(_bpe_word_types(df, text_col))
+        spark = df.sparkSession
+        merges: list[tuple] = []
+        # lineage-depth budget (r11): a checkpoint per PASS re-materialized the
+        # whole type table every iteration, but each pass only adds ≤ accepted
+        # replace expressions to the plan — re-deriving a few chained replaces
+        # from the last checkpoint is cheaper than writing the table (sf0.1
+        # interleaved: 1.34 → 1.22 s min, identical merges). Checkpoint only
+        # once ~128 replaces have accumulated, so a 30k-merge run still
+        # truncates its plan every couple of passes.
+        _ckpt_every = 128
+        _pending = 0
+        while len(merges) < n_merges:
+            want = min(merge_batch, n_merges - len(merges))
+            rows = (
+                _bpe_pair_totals(words)
+                .orderBy(F.desc("total"), F.asc("a"), F.asc("b"))
+                .limit(want + 1)
+                .collect()
+            )
+            if not rows:
+                break
+            accepted = []
+            used: set[str] = set()
+            for i, r in enumerate(rows[:want]):
+                if accepted:
+                    if {r.a, r.b} & used:
+                        break  # interacting: sequential must recount first
+                    nxt = rows[i + 1].total if i + 1 < len(rows) else None
+                    if nxt is not None and r.total <= nxt:
+                        break  # can't prove strict dominance over ranks below
+                accepted.append(r)
+                used |= {r.a, r.b}
+                if r.a == r.b:
+                    break  # self-pair: descendants bounded by its own count
+            step0 = len(merges)
+            col = F.col("w")
+            for j, r in enumerate(accepted):
+                merges.append((step0 + j + 1, r.a, r.b, r.a + r.b, r.total))
+                pat = f"{_BPE_O}{r.a}{_BPE_C}{_BPE_O}{r.b}{_BPE_C}"
+                col = F.replace(col, F.lit(pat), F.lit(f"{_BPE_O}{r.a + r.b}{_BPE_C}"))
+            words = words.select(col.alias("w"), "cnt")
+            _pending += len(accepted)
+            if _pending >= _ckpt_every:
+                words = pin(words)
+                _pending = 0
+        return spark.createDataFrame(
+            merges, "step long, left string, right string, merged string, pair_n long"
         )
-        if not rows:
-            break
-        accepted = []
-        used: set[str] = set()
-        for i, r in enumerate(rows[:want]):
-            if accepted:
-                if {r.a, r.b} & used:
-                    break  # interacting: sequential must recount first
-                nxt = rows[i + 1].total if i + 1 < len(rows) else None
-                if nxt is not None and r.total <= nxt:
-                    break  # can't prove strict dominance over ranks below
-            accepted.append(r)
-            used |= {r.a, r.b}
-            if r.a == r.b:
-                break  # self-pair: descendants bounded by its own count
-        step0 = len(merges)
-        col = F.col("w")
-        for j, r in enumerate(accepted):
-            merges.append((step0 + j + 1, r.a, r.b, r.a + r.b, r.total))
-            pat = f"{_BPE_O}{r.a}{_BPE_C}{_BPE_O}{r.b}{_BPE_C}"
-            col = F.replace(col, F.lit(pat), F.lit(f"{_BPE_O}{r.a + r.b}{_BPE_C}"))
-        words = words.select(col.alias("w"), "cnt")
-        _pending += len(accepted)
-        if _pending >= _ckpt_every:
-            words = words.localCheckpoint(eager=False)
-            _pending = 0
-    return spark.createDataFrame(
-        merges, "step long, left string, right string, merged string, pair_n long"
-    )
 
 
 def _bpe_train_ctes(n_merges: int) -> str:
@@ -1886,7 +1888,7 @@ def duplicate_spans(
             ).alias("pos", "g"),
         )
     )
-    with pin_scope():
+    with pin_scope() as scope:
         grams = cache(grams)
         if min_docs == 2:
             # "appears in ≥2 distinct docs" ⟺ min(doc_id) ≠ max(doc_id):
@@ -1920,7 +1922,7 @@ def duplicate_spans(
             "new_island",
             F.when(prev_end.isNull() | (F.col("pos") > prev_end + 1), 1).otherwise(0),
         ).withColumn("island", F.sum("new_island").over(w))
-        out = (
+        return scope.store(
             islands.groupBy("doc_id", "island")
             .agg(
                 F.min("pos").cast("long").alias("span_start"),
@@ -1932,9 +1934,7 @@ def duplicate_spans(
                 "span_end",
                 (F.col("span_end") - F.col("span_start") + 1).alias("span_tokens"),
             )
-            .localCheckpoint(eager=True)
         )
-        return out
 
 
 @register(
@@ -2063,7 +2063,7 @@ def duplicate_char_spans(
             ).alias("pos", "w"),
         )
     )
-    with pin_scope():
+    with pin_scope() as scope:
         grams = cache(grams)
         dup = (
             grams.groupBy("w")
@@ -2082,7 +2082,7 @@ def duplicate_char_spans(
             "new_island",
             F.when(prev_end.isNull() | (F.col("pos") > prev_end + 1), 1).otherwise(0),
         ).withColumn("island", F.sum("new_island").over(win))
-        out = (
+        return scope.store(
             islands.groupBy("doc_id", "island")
             .agg(
                 F.min("pos").cast("long").alias("span_start"),
@@ -2094,9 +2094,7 @@ def duplicate_char_spans(
                 "span_end",
                 (F.col("span_end") - F.col("span_start") + 1).alias("span_chars"),
             )
-            .localCheckpoint(eager=True)
         )
-        return out
 
 
 @register(
@@ -3072,7 +3070,7 @@ def bleu_corpus(
     ratios) plus the macro average of per-pair BLEU (the 6dp per-pair
     scores summed exactly, the memory-lesson ROUND(SUM) snap, then
     divided once)."""
-    with pin_scope():
+    with pin_scope() as scope:
         counts = cache(_bleu_pair_counts(pairs, id_col, ref_col, cand_col, max_n))
         totals = counts.agg(
             F.count(F.lit(1)).cast("long").alias("n_pairs"),
@@ -3106,7 +3104,7 @@ def bleu_corpus(
         # materialize the 1-row result BEFORE the scope drops the cache —
         # returning the lazy plan would recompute the whole counting pipeline
         # twice (micro + macro) uncached on the caller's action
-        return micro.crossJoin(macro).localCheckpoint(eager=True)
+        return scope.store(micro.crossJoin(macro))
 
 
 _BLEU_PAIRS_SQL = """
@@ -4095,7 +4093,7 @@ def char_bigram_entropy(docs: DataFrame, text_col: str = "text") -> DataFrame:
             ).alias("g")
         )
     )
-    with pin_scope():
+    with pin_scope() as scope:
         h = cache(grams.groupBy("g").agg(F.count(F.lit(1)).alias("c")))
         tot = h.agg(F.sum("c").cast("long").alias("n"))
         joint = (
@@ -4122,7 +4120,7 @@ def char_bigram_entropy(docs: DataFrame, text_col: str = "text") -> DataFrame:
             )
             .agg(F.round(F.sum("term"), 6).alias("h_first"))
         )
-        out = (
+        return scope.store(
             tot.crossJoin(joint)
             .crossJoin(first)
             .select(
@@ -4131,9 +4129,7 @@ def char_bigram_entropy(docs: DataFrame, text_col: str = "text") -> DataFrame:
                 "h_first",
                 F.round(F.col("h_joint") - F.col("h_first"), 6).alias("h_cond"),
             )
-            .localCheckpoint(eager=True)
         )
-        return out
 
 
 @register(

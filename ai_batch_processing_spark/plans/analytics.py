@@ -3472,7 +3472,7 @@ def q302_session_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    with pin_scope():
+    with pin_scope() as scope:
         items = cache(items)
         ns = items.select("user_id", "session_id").distinct().agg(
             F.count(F.lit(1)).cast("long").alias("n")
@@ -3489,7 +3489,7 @@ def q302_session_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sa = single.select(F.col("event_type").alias("ta"), F.col("c").alias("ca"))
         sb = single.select(F.col("event_type").alias("tb"), F.col("c").alias("cb"))
-        out = (
+        return scope.store(
             pair.join(F.broadcast(sa), "ta")
             .join(F.broadcast(sb), "tb")
             .crossJoin(F.broadcast(ns))
@@ -3507,9 +3507,7 @@ def q302_session_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("lift"),
             )
             .orderBy(F.desc("lift"), "ta", "tb")
-            .localCheckpoint(eager=True)
         )
-    return out
 
 
 # --- q306: strict-order three-step funnel -------------------------------------
@@ -3565,7 +3563,7 @@ def q302_session_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q306_ordered_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_tables(spark, sf_dir, ["events"])["events"]
-    with pin_scope():
+    with pin_scope() as scope:
         s1 = cache(
             ev.where(F.col("event_type") == "signup")
             .groupBy("user_id")
@@ -3595,7 +3593,7 @@ def q306_ordered_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         c1 = s1.agg(F.count(F.lit(1)).cast("long").alias("n_signup"))
         c2 = s2.agg(F.count(F.lit(1)).cast("long").alias("n_click_after"))
         c3 = s3.agg(F.count(F.lit(1)).cast("long").alias("n_purchase_after"))
-        out = (
+        return scope.store(
             u.crossJoin(c1)
             .crossJoin(c2)
             .crossJoin(c3)
@@ -3628,9 +3626,7 @@ def q306_ordered_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "conv_full"
                 ),
             )
-            .localCheckpoint(eager=True)
         )
-    return out
 
 
 # --- q307: split-conformal prediction interval for the q276 model ------------
@@ -3741,7 +3737,7 @@ def q307_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "x2"
         ),
     )
-    with pin_scope():
+    with pin_scope() as scope:
         feats = cache(feats)
         model = (
             ols_two_feature(feats.where(F.col("doc_id") % 2 == 0), "y", "x1", "x2")
@@ -3790,7 +3786,7 @@ def q307_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         n_train = resid.select("n_train").limit(1)
-        out = (
+        return scope.store(
             n_train.crossJoin(kk.select("n_cal"))
             .crossJoin(qh)
             .crossJoin(ev)
@@ -3803,9 +3799,7 @@ def q307_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "coverage"
                 ),
             )
-            .localCheckpoint(eager=True)
         )
-    return out
 
 
 # --- q311: input layout audit (files, rows, pruning potential) ----------------

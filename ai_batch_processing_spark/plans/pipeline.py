@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ai_batch_processing_spark.io.writers import export_projection
-from ai_batch_processing_spark.jobs import pin_scope
+from ai_batch_processing_spark.jobs import pin, pin_scope
 from ai_batch_processing_spark.operators.llm_map import LLMConfig, llm_map
 from ai_batch_processing_spark.registry import register
 from ai_batch_processing_spark.session import load_tables
@@ -286,21 +286,18 @@ def q169_curation_pipeline_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("text"),
     )
     # the cleaned corpus feeds THREE consumers (rule gate, LM bits, final
-    # stats) — materialize it once or the explode+window+join DAG re-runs
-    # per consumer (measured 6.7 s -> with checkpoint the shared stage
-    # runs once)
-    cleaned = (
-        line_dedup(corpus, max_doc_freq=100)
-        .select(F.col("id").alias("doc_id"), "n_kept", F.col("cleaned_text").alias("text"))
-        .localCheckpoint(eager=True)
+    # stats) — pin it or the explode+window+join DAG re-runs per consumer
+    # (measured 6.7 s -> with checkpoint the shared stage runs once)
+    cleaned = pin(
+        line_dedup(corpus, max_doc_freq=100).select(
+            F.col("id").alias("doc_id"), "n_kept", F.col("cleaned_text").alias("text")
+        )
     )
     gop = gopher_rules(cleaned, min_words=40).select(
         "doc_id", "n_words", "r_word_count", "r_mean_word_len", "r_alpha_words"
     )
-    with pin_scope():
-        bits = bigram_surprise(cleaned).select("doc_id", "bits_per_bigram").localCheckpoint(
-            eager=True
-        )
+    with pin_scope() as scope:
+        bits = scope.store(bigram_surprise(cleaned).select("doc_id", "bits_per_bigram"))
     feats = (
         cleaned.select("doc_id", "n_kept")
         .join(gop, "doc_id")

@@ -971,15 +971,14 @@ def q127_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    with pin_scope():
+    with pin_scope() as scope:
         revenue = cache(revenue)  # consumed by the MAX aggregate AND the equality filter
         mx = revenue.agg(F.max("total_revenue").alias("_mx"))
-        out = (
+        out = scope.store(
             revenue.crossJoin(F.broadcast(mx))
             .filter(F.col("total_revenue") == F.col("_mx"))
             .join(F.broadcast(t["supplier"]), F.col("s_suppkey") == F.col("supplier_no"))
             .select("s_suppkey", "s_name", "total_revenue")
-            .localCheckpoint(eager=True)
         )
     return out.orderBy("s_suppkey")
 

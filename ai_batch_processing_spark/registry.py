@@ -108,31 +108,30 @@ def registered_oracle(name: str) -> str:
 # emitted right after the bench queries (which lead anyway — leave them
 # out). Replace the names with each change; at most 20.
 TOUCHED: tuple[str, ...] = (
-    # left a cached relation in the session; now store their result
-    # inside a pin_scope of their own
-    "q46_embedding_near_dup",
-    "q61_media_phash_near_dup",
-    "q118_semantic_dedup",
-    "q121_curation_v2_splits",
-    "q127_top_supplier",
-    "q131_minhash_jaccard_verified",
-    "q146_media_phash_verified",
-    "q212_hybrid_rrf_search",
-    # reach the most jobs.cache sites
-    "q299_personalized_pagerank",
-    "q307_conformal_interval",
-    "q306_ordered_funnel",
-    "q298_labelprop_modularity",
-    "q240_embedding_qa_report",
-    "q162_pagerank_replicated_verified",
-    # a count() became an eager checkpoint, _finish became a scope, or a
-    # persist that was released before the result ran was deleted
+    # left the most checkpoint RDDs behind after their scope closed; now
+    # every pin and stored result is released by the scope around them
     "q247_hits_knn_graph",
-    "q252_degree_assortativity",
-    "q336_rank_blend_top_docs",
+    "q118_semantic_dedup",
+    "q233_facility_location_coreset",
+    "q243_perceptron_train",
+    "q244_perceptron_train_eval",
+    "q272_kcore_members",
+    "q62_dedup_clusters",
+    "q193_soft_dedup_weights",
+    "q227_dedup_keep_best",
+    "q231_label_propagation",
+    "q242_label_prop_accuracy",
+    "q298_labelprop_modularity",
+    "q299_personalized_pagerank",
+    # a loop or a shared scratch frame changed shape: lineage cuts and
+    # scratch frames became pins, or the result is stored one level up
+    "q162_pagerank_replicated_verified",
+    "q157_bpe_encode_counts",
     "q169_curation_pipeline_v3",
-    "q183_source_divergence",
-    "q170_dsir_importance_weights",
+    "q158_decontaminate_fuzzy",
+    "q136_incremental_dedup_bloom",
+    "q252_degree_assortativity",
+    "q291_textrank_keywords",
 )
 
 _ROOT = Path(__file__).resolve().parents[1]

@@ -20,7 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from ai_batch_processing_spark.jobs import pin_scope
+    from ai_batch_processing_spark.jobs import pin_scope, release_memos
     from ai_batch_processing_spark.registry import load_all
     from ai_batch_processing_spark.session import get_spark
 
@@ -38,7 +38,8 @@ def main() -> None:
     if not os.path.isdir(warm_dir):
         warm_dir = sf_dir
     for spec in bench_specs.values():
-        spec.fn(spark, warm_dir).count()
+        with pin_scope():
+            spec.fn(spark, warm_dir).count()
 
     # Warm-up persists are not part of any timed query's cost.
     spark.catalog.clearCache()
@@ -57,16 +58,12 @@ def main() -> None:
             with pin_scope():
                 n = spec.fn(spark, sf_dir).count()
             best = min(best, time.time() - t0)
-            # isolate runs: no cross-run cache reuse in the timings — the
-            # session cache AND the library's session-lifetime memo of
-            # broadcast-dispatch probe counts (if a future query ever hits
-            # the counted-probe fallback, run 2 must pay the count the
-            # cold engine pays; today the bench's star joins take the
-            # zero-action estimate path so this is pure insurance)
+            # isolate runs: no cross-run reuse in the timings — neither the
+            # session cache nor the library's session memos (the doc-stats
+            # frame, the broadcast-dispatch probe counts), so every run
+            # pays the work a cold engine pays
             spark.catalog.clearCache()
-            from ai_batch_processing_spark.plans import relational as _rel
-
-            _rel._probe_counts.clear()
+            release_memos()
         timings[name] = round(best, 3)
         print(f"# {name}: {timings[name]}s ({n} rows)", file=sys.stderr)
 

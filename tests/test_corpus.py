@@ -174,9 +174,9 @@ def test_bloom_incremental_dedup_matches_plain_and_prunes(spark, sf_dir):
 
 
 def test_query_wrappers_leave_no_cached_relations(spark, sf_dir):
-    """The q1xx gate wrappers store their result (eager localCheckpoint)
-    inside a scope of their own, which releases every internal cache — a
-    gate sweep must not accumulate cached relations across the queries."""
+    """The q1xx gate wrappers store their result (``scope.store``) inside
+    a scope of their own, which releases every internal cache — a gate
+    sweep must not accumulate cached relations across the queries."""
     from ai_batch_processing_spark.operators.corpus import (
         q112_tfidf_top_terms,
         q113_vocab_zipf_stats,
@@ -186,9 +186,10 @@ def test_query_wrappers_leave_no_cached_relations(spark, sf_dir):
 
     spark.catalog.clearCache()
     # CacheManager holds STRONG references: a persist() left behind lives
-    # until clearCache and accumulates across a gate sweep. (The result's
-    # own localCheckpoint RDD is NOT in the CacheManager — it becomes
-    # collectable garbage as soon as the caller drops the result.)
+    # until clearCache and accumulates across a gate sweep. (The stored
+    # result is not in the CacheManager: the scope around the call releases
+    # it, and with no scope around it, as here, ContextCleaner reclaims it
+    # once the result is unreachable.)
     cm = spark._jsparkSession.sharedState().cacheManager()
     for fn in (q112_tfidf_top_terms, q113_vocab_zipf_stats, q114_unigram_surprise, q117_bm25_search):
         out = fn(spark, sf_dir)

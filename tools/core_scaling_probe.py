@@ -53,26 +53,27 @@ def _run_child(cores: int, mult: int) -> dict[str, float]:
     code = f"""
 import json, sys, time
 sys.path.insert(0, {os.path.dirname(os.path.dirname(os.path.abspath(__file__)))!r})
+from ai_batch_processing_spark.jobs import pin_scope, release_memos
 from ai_batch_processing_spark.session import get_spark
 from ai_batch_processing_spark.registry import load_all
-from ai_batch_processing_spark.operators import text as _text
-from ai_batch_processing_spark.plans import relational as _rel
 
 specs = load_all()
 names = {QUERIES!r}
 spark = get_spark("core_scaling")
 spark.sparkContext.setLogLevel("ERROR")
 for n in names:
-    specs[n].fn(spark, "/root/testdata/sf0.001").count()
+    with pin_scope():
+        specs[n].fn(spark, {os.path.expanduser("~/testdata/sf0.001")!r}).count()
 spark.catalog.clearCache()
 d = "/tmp/spark_graft_xsf/x{mult}"
 out = {{}}
 for n in names:
     best = float("inf")
     for _ in range(2):
-        _text._DOC_STATS_CACHE.clear(); _rel._probe_counts.clear()
+        release_memos()
         t0 = time.time()
-        specs[n].fn(spark, d).toPandas()
+        with pin_scope():
+            specs[n].fn(spark, d).toPandas()
         best = min(best, time.time() - t0)
         spark.catalog.clearCache()
     out[n] = round(best, 2)

@@ -443,6 +443,7 @@ def main() -> None:
     mults = [int(a) for a in sys.argv[1:]] or [1, 10, 100]
     import duckdb
 
+    from ai_batch_processing_spark.jobs import pin_scope, release_memos
     from ai_batch_processing_spark.registry import load_all
     from ai_batch_processing_spark.session import get_spark
     from ai_batch_processing_spark.testing import TABLES
@@ -516,22 +517,6 @@ def main() -> None:
             if timer:
                 timer.cancel()
 
-    def reset_session_memos() -> None:
-        # Measurement honesty (r10): the library keeps two session-lifetime
-        # memos — the shared doc-stats frame (operators.text._DOC_STATS_CACHE,
-        # an eager localCheckpoint keyed on (app, scale dir)) and the
-        # broadcast-dispatch probe counts (plans.relational._probe_counts).
-        # Both are legitimate engine behavior for a long-lived session, but
-        # a TIMED run that reuses them reports a wall that excludes work the
-        # DuckDB twin pays on every run (the tokenize pass / the probe
-        # count). Clearing them before every timed Spark run makes each
-        # CROSSOVER row a full compute-from-parquet measurement.
-        from ai_batch_processing_spark.operators import text as _text
-        from ai_batch_processing_spark.plans import relational as _rel
-
-        _text._DOC_STATS_CACHE.clear()
-        _rel._probe_counts.clear()
-
     results: dict[str, dict[int, tuple[float, float]]] = {q: {} for q in plan}
     for mult in mults:
         # fresh session per multiplier: accumulated broadcasts / old-gen GC
@@ -541,7 +526,8 @@ def main() -> None:
         spark = get_spark("crossover_probe")
         spark.sparkContext.setLogLevel("ERROR")
         for q, (fn, _o, _b) in plan.items():  # warm each plan shape (JIT/codegen)
-            fn(spark, "/root/testdata/sf0.001").count()
+            with pin_scope():
+                fn(spark, os.path.join(os.path.dirname(SRC), "sf0.001")).count()
         spark.catalog.clearCache()
         d = synthesize(spark, mult)
         con = dir_con(d)
@@ -558,9 +544,13 @@ def main() -> None:
                 if duck_wall == float("inf"):
                     break  # DNF once = don't burn another full budget
             for _ in range(2):
-                reset_session_memos()
+                # a timed run recomputes the session memos (doc stats, probe
+                # counts), as the DuckDB twin pays the tokenize pass and the
+                # probe count on every run
+                release_memos()
                 t0 = time.time()
-                fn(spark, d).toPandas()
+                with pin_scope():
+                    fn(spark, d).toPandas()
                 spark_wall = min(spark_wall, time.time() - t0)
                 spark.catalog.clearCache()
             results[q][mult] = (duck_wall, spark_wall)

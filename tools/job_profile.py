@@ -19,6 +19,7 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     only = set(sys.argv[2:])
 
+    from ai_batch_processing_spark.jobs import pin_scope
     from ai_batch_processing_spark.registry import load_all
     from ai_batch_processing_spark.session import get_spark
 
@@ -34,7 +35,8 @@ def main() -> None:
     if not os.path.isdir(warm_dir):
         warm_dir = sf_dir
     for spec in bench.values():
-        spec.fn(spark, warm_dir).count()
+        with pin_scope():
+            spec.fn(spark, warm_dir).count()
     spark.catalog.clearCache()
 
     print(f"{'query':40s} {'wall_min':>8s} {'jobs':>5s} {'stages':>7s} {'tasks':>6s}")
@@ -45,7 +47,8 @@ def main() -> None:
             all_before = spark.sparkContext._jsc.sc().statusTracker().getJobIdsForGroup(None)
             before_ids = set(all_before)
             t0 = time.time()
-            spec.fn(spark, sf_dir).count()
+            with pin_scope():
+                spec.fn(spark, sf_dir).count()
             walls.append(time.time() - t0)
             after_ids = set(spark.sparkContext._jsc.sc().statusTracker().getJobIdsForGroup(None))
             new_jobs = sorted(after_ids - before_ids)

@@ -22,6 +22,7 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     repeat = int(sys.argv[2]) if len(sys.argv) > 2 else 2
 
+    from ai_batch_processing_spark.jobs import pin_scope
     from ai_batch_processing_spark.registry import load_all
     from ai_batch_processing_spark.session import get_spark
     from ai_batch_processing_spark.testing import duck_con
@@ -38,12 +39,14 @@ def main() -> None:
 
     # warm both engines: plan shapes at sf0.001, then one full pass at sf_dir
     for s in bench.values():
-        s.fn(spark, warm_dir).count()
+        with pin_scope():
+            s.fn(spark, warm_dir).count()
     spark.catalog.clearCache()
     for s in bench.values():
         if s.oracle is not None:
             con.execute(s.oracle).fetchdf()
-        s.fn(spark, sf_dir).toPandas()
+        with pin_scope():
+            s.fn(spark, sf_dir).toPandas()
     spark.catalog.clearCache()
 
     duck_tot = spark_tot = 0.0
@@ -56,8 +59,11 @@ def main() -> None:
                 t0 = time.time()
                 con.execute(s.oracle).fetchdf()
                 duck_w.append(time.time() - t0)
+            # the query's pins and stored result are released inside the
+            # timed span, as in bench.py
             t0 = time.time()
-            s.fn(spark, sf_dir).toPandas()
+            with pin_scope():
+                s.fn(spark, sf_dir).toPandas()
             spark_w.append(time.time() - t0)
             spark.catalog.clearCache()
         sw = min(spark_w)

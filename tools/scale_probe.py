@@ -16,10 +16,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+DATA = os.path.expanduser("~/testdata")
 SFS = ["sf0.001", "sf0.01", "sf0.1"]
 
 
 def main() -> None:
+    from ai_batch_processing_spark.jobs import pin_scope
     from ai_batch_processing_spark.registry import load_all
     from ai_batch_processing_spark.session import get_spark
 
@@ -29,7 +31,8 @@ def main() -> None:
 
     # warm every plan shape
     for spec in specs.values():
-        spec.fn(spark, "/root/testdata/sf0.001").count()
+        with pin_scope():
+            spec.fn(spark, f"{DATA}/sf0.001").count()
     spark.catalog.clearCache()
 
     rows = []
@@ -37,7 +40,8 @@ def main() -> None:
         walls = []
         for sf in SFS:
             t0 = time.time()
-            spec.fn(spark, f"/root/testdata/{sf}").count()
+            with pin_scope():
+                spec.fn(spark, f"{DATA}/{sf}").count()
             walls.append(time.time() - t0)
             spark.catalog.clearCache()
         ratio = walls[2] / walls[1] if walls[1] > 0 else float("nan")
